@@ -88,6 +88,14 @@ def job_group_counts(sc, group: str) -> dict:
     }
 
 
+def merge_counts(counts: list) -> dict:
+    """``job_group_counts`` of several job groups taken together."""
+    out = {k: sum(c[k] for c in counts) for k in ("jobs", "stages", "tasks", "failed_tasks")}
+    for k in ("max_job_id", "max_stage_id"):
+        out[k] = max(c[k] for c in counts)
+    return out
+
+
 @contextlib.contextmanager
 def job_group(sc, group: str, enabled: bool):
     """Tag the jobs the calling thread submits with ``group`` (traced runs
@@ -118,12 +126,19 @@ def retention_covers(sc, counts: list) -> bool:
 # ---------------------------------------------------------------------------
 # streaming progress
 # ---------------------------------------------------------------------------
-def progress_records(query) -> list:
+def progress_records(query, spark) -> list:
     """``recentProgress`` of the micro-batches that ran, as plain dicts with
     epoch ``start``/``end``.  Progress reported while an idle query polls
-    for data (no ``addBatch``) is left out."""
+    for data (no ``addBatch``) is left out.  Raises when the buffer is
+    full, as the oldest batches may then have been dropped from it."""
+    recent = query.recentProgress
+    cap = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates"))
+    if len(recent) >= cap:
+        raise RuntimeError(
+            f"recentProgress holds {len(recent)} updates, its limit: early micro-batches "
+            "may be missing; raise spark.sql.streaming.numRecentProgressUpdates")
     out = []
-    for p in query.recentProgress:
+    for p in recent:
         d = json.loads(p.json) if hasattr(p, "json") else dict(p)
         if "addBatch" not in d["durationMs"]:
             continue

@@ -6,12 +6,14 @@ Two roles:
   benchmark feeds the ingest pipeline from ``--seed`` alone, together
   with the expected end state (keys, fee sum, malformed lines) that the
   correctness check compares the table against;
-- a single separate process (``python3 hedera_gen.py live ...``) that
-  publishes one live segment open-loop: file ``i`` is due at
-  ``start + i * interval`` whatever the system under test is doing, each
-  file is written under a hidden name and renamed into the watched
-  directory (atomic publish), and every file's due time, publish time and
-  line count go to a JSON-lines log.
+- a single separate process (``python3 hedera_gen.py --seed N --files F
+  --out DIR --log LOG``) that publishes live files ``1 .. F-1`` open-loop
+  (file 0 is the warm-up file, which the benchmark writes itself before
+  the backfill): file ``i`` is due at ``start + (i - 1) * LIVE_INTERVAL_S``
+  whatever the system under test is doing, each file is written under a
+  hidden name and renamed into the watched directory (atomic publish), and
+  every file's due time, publish time and line count go to a JSON-lines
+  log.
 
 Line shape follows ``queries/txops.py:tx_json_corpus``: a numeric
 ``consensusTimestamp`` (nanoseconds), quoted int64 fee and amounts, a
@@ -24,9 +26,11 @@ Shares are exact per seed, not drawn per line:
   ``DAYS`` DAY partitions;
 - live: ``round(lines * 0.05)`` in-window replays of earlier live keys in
   every file, and ``round(total * 0.005)`` late redeliveries of distinct
-  backfill keys spread over the files.  Late keys are older than the
+  backfill keys spread over files ``1 ..``.  Late keys are older than the
   newest backfill second, so they sit below the incremental dedupe
-  window and only ``run_full`` heals them.
+  window and only ``run_full`` heals them.  File 0 carries none: it is
+  committed before the backfill, so a backfill key in it would reach the
+  table first and the catch-up dedupe would remove its backfill copy.
 """
 
 from __future__ import annotations
@@ -50,6 +54,10 @@ MALFORMED_SHARE = 0.01
 BACKFILL_REPLAY_SHARE = 0.05
 LIVE_REPLAY_SHARE = 0.05
 LATE_SHARE = 0.005
+BACKFILL_LINES = 20_000
+BACKFILL_FILES = 9
+LIVE_LINES_PER_FILE = 50
+LIVE_INTERVAL_S = 0.05  # 50 lines every 50 ms: 1,000 tx/s
 
 
 def tx_line(ts_ns: int, seq: int, fee: int) -> str:
@@ -161,7 +169,8 @@ def live_plan(
     old = [t for t in backfill.unique if t.ts_sec < backfill.max_ts_sec]
     late = rng.sample(old, n_late)
     late_per_file = [0] * n_files
-    for k in rng.sample(range(total), n_late):
+    # file 0 (the warm-up file) carries no late key
+    for k in rng.sample(range(lines_per_file, total), n_late):
         late_per_file[k // lines_per_file] += 1
     # live keys continue in the DAY partition after the backfill
     base_ns = (BASE_S + DAYS * DAY_S) * NS
@@ -239,28 +248,20 @@ def live_file_name(index: int) -> str:
 
 
 def main(argv=None) -> int:
-    p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    sub = p.add_subparsers(dest="mode", required=True)
-    live = sub.add_parser("live", help="publish one live segment open-loop")
-    live.add_argument("--seed", type=int, required=True)
-    live.add_argument("--backfill-lines", type=int, required=True)
-    live.add_argument("--backfill-files", type=int, required=True)
-    live.add_argument("--files", type=int, required=True, help="live files in all segments")
-    live.add_argument("--lines", type=int, required=True, help="lines per live file")
-    live.add_argument("--first", type=int, required=True, help="first file of this segment")
-    live.add_argument("--count", type=int, required=True, help="files in this segment")
-    live.add_argument("--interval", type=float, required=True)
-    live.add_argument("--out", required=True)
-    live.add_argument("--log", required=True)
+    p = argparse.ArgumentParser(description="publish the live files 1 .. FILES-1 open-loop")
+    p.add_argument("--seed", type=int, required=True)
+    p.add_argument("--files", type=int, required=True, help="live files, warm-up file 0 included")
+    p.add_argument("--out", required=True)
+    p.add_argument("--log", required=True)
     a = p.parse_args(argv)
-    bf = backfill_plan(a.seed, a.backfill_lines, a.backfill_files)
-    plan = live_plan(a.seed, bf, a.files, a.lines)
-    idx = range(a.first, a.first + a.count)
+    bf = backfill_plan(a.seed, BACKFILL_LINES, BACKFILL_FILES)
+    plan = live_plan(a.seed, bf, a.files, LIVE_LINES_PER_FILE)
+    idx = range(1, a.files)
     publish(
         [plan.files[i] for i in idx],
         [live_file_name(i) for i in idx],
         a.out,
-        a.interval,
+        LIVE_INTERVAL_S,
         a.log,
     )
     return 0

@@ -5,8 +5,9 @@ Run from the repository root::
     python3 perfbench/run.py --workload hedera_two_tier --seed 1 --seconds 12 --trace 0
 
 Every input is generated from ``--seed``.  A run sets up ``SETUP_ROUNDS``
-times (fresh SparkContext, staged inputs, pipeline objects) and reports the
-median as ``setup_s``; the last round's objects are then measured.  With
+times (fresh SparkContext, staged inputs, pipeline objects); the first
+round also launches the JVM, and the median of the other rounds is
+``setup_s``.  The last round's objects are then measured.  With
 ``--trace 0`` the result line carries every end-to-end metric named in
 ``BENCHMARK.json``; with ``--trace 1`` every per-layer metric (zero for a
 layer the workload does not run), and the spans go to
@@ -29,7 +30,9 @@ import time
 import traceback
 
 BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
-SETUP_ROUNDS = 3
+#: set-up rounds per run: the first also launches the JVM, ``setup_s``
+#: is the median of the others
+SETUP_ROUNDS = 8
 #: driver heap of the measured session, fixed in size (-Xms = -Xmx) so
 #: heap resizing does not move peak RSS from run to run; the machine is
 #: shared, so the program's 16g default is not used
@@ -37,6 +40,8 @@ DRIVER_MEMORY = "3g"
 #: task slots: one core of the machine is left to the Python driver, the
 #: JVM's compiler and collector threads and the load generator
 SPARK_CPUS = max(1, (os.cpu_count() or 2) - 1)
+#: progress updates a streaming query keeps (Spark's default is 100)
+PROGRESS_RETAINED = 10_000
 
 
 class Context:
@@ -50,13 +55,16 @@ class Context:
         self.bench_dir = BENCH_DIR
         self.spark = None
 
-    def new_session(self) -> float:
-        """Stop the current session and build a fresh one with the
-        program's ``get_spark``; returns the ``get_spark`` wall time."""
-        from hedera_etl_spark.session import get_spark
-
+    def stop_session(self) -> None:
         if self.spark is not None:
             self.spark.stop()
+            self.spark = None
+
+    def new_session(self) -> float:
+        """Build a fresh session with the program's ``get_spark``; returns
+        its wall time."""
+        from hedera_etl_spark.session import get_spark
+
         t0 = time.perf_counter()
         self.spark = get_spark(
             "perfbench",
@@ -65,6 +73,8 @@ class Context:
                 "spark.driver.memory": DRIVER_MEMORY,
                 "spark.local.dir": os.path.join(self.work, "spark-local"),
                 "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
+                # every micro-batch of a run stays in recentProgress
+                "spark.sql.streaming.numRecentProgressUpdates": str(PROGRESS_RETAINED),
                 "spark.driver.extraJavaOptions":
                     f"-Xms{DRIVER_MEMORY} -Djava.io.tmpdir={os.path.join(self.work, 'tmp')}"
                     " -XX:-UsePerfData",
@@ -99,6 +109,7 @@ def run_workload(ctx: Context, name: str, spec: dict) -> dict:
     setup, get_spark = [], []
     staged = None
     for r in range(SETUP_ROUNDS):
+        ctx.stop_session()  # tearing the last round down is not set-up
         with tr.span("setup.round", parent="run", round=r):
             t0 = time.perf_counter()
             get_spark.append(ctx.new_session())
@@ -108,7 +119,7 @@ def run_workload(ctx: Context, name: str, spec: dict) -> dict:
             shutil.rmtree(os.path.join(ctx.work, f"round{r - 1}"), ignore_errors=True)
     with tr.span("measure", parent="run"):
         e2e = wl.run(staged)
-    e2e["setup_s"] = H.median(setup)
+    e2e["setup_s"] = H.median(setup[1:])
     e2e["peak_rss_mb"] = H.peak_rss_mb()
     load_end = os.getloadavg()[0]
 
@@ -128,6 +139,7 @@ def run_workload(ctx: Context, name: str, spec: dict) -> dict:
         layer["session.get_spark_s"] = get_spark[0]
         layer["session.get_spark_warm_s"] = H.median(get_spark[1:])
         layer["setup.rounds"] = len(setup)
+        layer["setup.cold_s"] = setup[0]
         for k, v in e2e.items():
             layer[f"traced.{k}"] = v
         tr.write(os.path.join(ctx.root, ".perfbench", "spans", f"{name}-seed{ctx.seed}.jsonl"))
@@ -192,8 +204,8 @@ def main(argv=None) -> int:
         return 1
     finally:
         t_stop = time.perf_counter()
-        if ctx.spark is not None:
-            ctx.spark.stop()
+        ctx.stop_session()
+        if "pyspark" in sys.modules:
             from pyspark import SparkContext
 
             # stop the JVM too, so no process outlives the run

@@ -56,6 +56,8 @@ def test_live_shares_are_exact():
     assert all(len(f) == LIVE_LINES for f in live.files)
     assert len(live.late) == round(LIVE_FILES * LIVE_LINES * G.LATE_SHARE)
     assert sum(live.late_per_file) == len(live.late)
+    # the warm-up file is committed before the backfill: no late key in it
+    assert live.late_per_file[0] == 0
     backfill_keys = {t.ts_ns for t in bf.unique}
     late_keys = {t.ts_ns for t in live.late}
     # late redeliveries: distinct backfill keys below the incremental window
@@ -80,6 +82,28 @@ def test_plans_are_deterministic_per_seed():
     c = G.backfill_plan(4, N_LINES, N_FILES)
     assert a.files == b.files and a.files != c.files
     assert G.live_plan(3, a, 4, 50).files == G.live_plan(3, b, 4, 50).files
+
+
+def test_warm_up_file_never_carries_a_late_key():
+    bf = G.backfill_plan(11, N_LINES, N_FILES)
+    for seed in range(40):
+        # five late keys among 1,000 lines: a draw over every line would
+        # put one in file 0 for about two seeds in three
+        live = G.live_plan(seed, bf, 5, LIVE_LINES)
+        assert sum(live.late_per_file) == 5 and live.late_per_file[0] == 0
+
+
+def test_cli_publishes_files_after_the_warm_up_file(tmp_path):
+    out, log = tmp_path / "live", tmp_path / "live.jsonl"
+    out.mkdir()
+    assert G.main(["--seed", "5", "--files", "4", "--out", str(out), "--log", str(log)]) == 0
+    bf = G.backfill_plan(5, G.BACKFILL_LINES, G.BACKFILL_FILES)
+    plan = G.live_plan(5, bf, 4, G.LIVE_LINES_PER_FILE)
+    names = [G.live_file_name(i) for i in (1, 2, 3)]
+    assert sorted(os.listdir(out)) == names
+    assert [json.loads(x)["file"] for x in log.read_text().splitlines()] == names
+    for i, name in zip((1, 2, 3), names):
+        assert (out / name).read_text().splitlines() == plan.files[i]
 
 
 def test_publish_is_atomic_and_open_loop(tmp_path, monkeypatch):

@@ -4,8 +4,12 @@
    drained by ``CorpusIngestPipeline`` in one micro-batch.  Every file is
    due when the drain starts.
 2. Batch: bench.py's disjoint-shingle copies through
-   ``prepare_training_corpus`` with bench.py's pinned stage set, then
-   ``pack_sequences(max_tokens=2048)``, every column hashed.
+   ``prepare_training_corpus`` with bench.py's pinned stage set
+   (decontaminated against the copies' own ``doc_id % 97`` slice), then
+   ``pack_sequences(max_tokens=2048)``, every column hashed.  The packed
+   documents and their token counts must be those
+   ``corpus_gen.prepared_texts`` derives; a traced run also checks the
+   prepared texts.
 
 The two share the text operators (near-dup, paragraph dedup); only the
 stream runs the micro-batch spine and the batch-dir stores, so a spine
@@ -17,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import zlib
 
 import corpus_gen as C
 import harness as H
@@ -42,10 +47,6 @@ class Corpus:
 
     def __init__(self, ctx):
         self.ctx = ctx
-        self.stream_docs = C.documents(ctx.seed, STREAM_DOCS)
-        base = C.documents(ctx.seed + 1_000_003, BATCH_BASE_DOCS)
-        self.batch_docs = C.disjoint_copies(base, BATCH_COPIES)
-        self.batch_eval = C.eval_docs(base)
         self.layer: dict = {}
         self.checks: dict = {}
         self.attempted = 0
@@ -62,7 +63,13 @@ class Corpus:
 
         from hedera_etl_spark.streaming.corpus import CorpusIngestPipeline
 
-        spark = self.ctx.spark
+        spark, seed = self.ctx.spark, self.ctx.seed
+        self.stream_docs = C.documents(seed, STREAM_DOCS)
+        base = C.documents(seed + 1_000_003, BATCH_BASE_DOCS)
+        self.batch_docs = C.disjoint_copies(base, BATCH_COPIES)
+        self.batch_eval = C.eval_docs(self.batch_docs)
+        self.batch_expected = C.prepared_texts(
+            self.batch_docs, self.batch_eval, PREPARE_ARGS["sample_rate"], PREPARE_ARGS["salt"])
         d = {k: os.path.join(root, k) for k in ("in", "corpus", "store", "ckpt", "batch")}
         os.makedirs(d["in"])
         os.makedirs(d["batch"])
@@ -109,7 +116,7 @@ class Corpus:
             drain_s = time.time() - t_start
         if q.exception() is not None:
             raise RuntimeError(f"corpus query failed: {q.exception()}")
-        prog = H.progress_records(q)
+        prog = H.progress_records(q, ctx.spark)
         data = [p for p in prog if p["numInputRows"] > 0]
         self.attempted += 1 + len(prog)
         self._expect("stream_files_committed", len(H.file_batches(d["ckpt"], prog)), STREAM_FILES)
@@ -135,9 +142,11 @@ class Corpus:
             bins = packed.select(
                 "bin_id", "n_tokens", "oversize",
                 F.xxhash64(*[F.col(c) for c in packed.columns]).alias("__h"),
+                F.crc32(F.concat_ws(":", "doc_id", "n_tokens").cast("binary")).alias("__crc"),
             ).groupBy("bin_id").agg(
                 F.count(F.lit(1)).alias("n"),
                 F.expr("bit_xor(__h)").alias("h"),
+                F.sum("__crc").alias("crc"),
                 F.sum("n_tokens").alias("tokens"),
                 F.max(F.col("oversize").cast("int")).alias("oversize"),
             ).collect()
@@ -181,8 +190,12 @@ class Corpus:
         self.stream_digest = [row["n"], row["digest"]]
 
     def _check_packed(self, bins: list) -> tuple:
-        """Every bin fits the token budget (an oversize document sits alone
-        in its bin); returns the (rows, bit_xor) digest of the packing."""
+        """The packing holds exactly the documents the generator expects,
+        each with its expected token count (CRC32 sum over
+        ``doc_id:n_tokens``), and every bin fits the token budget (an
+        oversize document sits alone in its bin); returns the
+        (rows, bit_xor) digest of the packing."""
+        want = self.batch_expected
         over = [b["bin_id"] for b in bins
                 if b["tokens"] > MAX_TOKENS and not (b["oversize"] and b["n"] == 1)]
         self._expect("packed_bins_over_budget", len(over), 0)
@@ -190,7 +203,9 @@ class Corpus:
         for b in bins:
             n += b["n"]
             digest ^= b["h"]
-        self._expect("packed_rows_positive", n > 0, True)
+        self._expect("packed_docs", n, len(want))
+        self._expect("packed_doc_tokens_crc_sum", sum(b["crc"] for b in bins),
+                     sum(zlib.crc32(f"{i}:{len(t.split())}".encode()) for i, t in want.items()))
         return n, digest
 
     def _layers(self, d, pipe, prog, data, counts, build_s, pack_build_s, exec_s, prep_counts,
@@ -252,3 +267,8 @@ class Corpus:
             timings["pack"] = time.perf_counter() - t0
         for k, v in timings.items():
             L[f"{lp}stage.{k}_s"] = v
+        # the prepared texts themselves, which the measured run only hashes
+        crc = out.select(F.sum(F.crc32(F.concat_ws("\x1f", "doc_id", "text").cast("binary")))
+                         ).collect()[0][0]
+        self._expect("prepared_text_crc_sum", crc, sum(
+            zlib.crc32(f"{i}\x1f{t}".encode()) for i, t in self.batch_expected.items()))

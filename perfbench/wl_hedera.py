@@ -4,7 +4,8 @@
    commits one warm-up file (a query's first micro-batch carries one-off
    planning and code generation).  It then idles through steps 2-3, as an
    always-on stream does while the healer runs.
-2. Backfill: an at-least-once bulk replay drained by a second
+2. Backfill: an at-least-once bulk replay that arrives as three groups of
+   files, each drained by one availableNow run of a second
    ``IngestPipeline`` with ``dedupe_in_stream=False`` (tier 0 off).
 3. Catch-up: ``DedupeJob.run_incremental`` heals the backfill replays.
 4. Live files: ``hedera_gen.py``, a separate process, publishes the
@@ -27,11 +28,10 @@ import time
 import harness as H
 import hedera_gen as G
 
-BACKFILL_LINES = 10_000
-BACKFILL_FILES = 8
-LIVE_LINES_PER_FILE = 50
-LIVE_INTERVAL_S = 0.05  # 50 lines every 50 ms: 1,000 tx/s
 KEY = "consensusTimestamp"
+#: the backfill arrives as this many equal groups of files, each drained
+#: by its own availableNow run; ``drain_items_per_s`` is the median rate
+BACKFILL_DRAINS = 3
 
 
 def _timed_state_store(base_cls, timings: dict):
@@ -62,9 +62,7 @@ class HederaTwoTier:
     def __init__(self, ctx):
         self.ctx = ctx
         # live file 0 is the warm-up file; the rest are latency samples
-        self.n_live_files = 1 + max(1, round(ctx.seconds / LIVE_INTERVAL_S))
-        self.bf = G.backfill_plan(ctx.seed, BACKFILL_LINES, BACKFILL_FILES)
-        self.live = G.live_plan(ctx.seed, self.bf, self.n_live_files, LIVE_LINES_PER_FILE)
+        self.n_live_files = 1 + max(1, round(ctx.seconds / G.LIVE_INTERVAL_S))
         self.layer: dict = {}
         self.checks: dict = {}
         self.attempted = 0
@@ -73,17 +71,20 @@ class HederaTwoTier:
 
     # -- set-up ----------------------------------------------------------
     def stage(self, root: str) -> dict:
-        """Write the backfill and build the pipeline objects under ``root``."""
+        """Make the inputs from the seed, write the backfill and build the
+        pipeline objects under ``root``."""
         from hedera_etl_spark.operators.dedupe import DedupeJob, StateStore
         from hedera_etl_spark.streaming.ingest import IngestPipeline
 
         spark = self.ctx.spark
-        d = {k: os.path.join(root, k) for k in
-             ("backfill", "live", "table", "errors", "ckpt_bf", "ckpt_live", "state", "gen")}
-        for k in ("backfill", "live", "gen"):
+        self.bf = G.backfill_plan(self.ctx.seed, G.BACKFILL_LINES, G.BACKFILL_FILES)
+        self.live = G.live_plan(self.ctx.seed, self.bf, self.n_live_files, G.LIVE_LINES_PER_FILE)
+        d = {k: os.path.join(root, k) for k in ("staged", "backfill", "live", "table", "errors",
+                                                 "ckpt_bf", "ckpt_live", "state", "gen")}
+        for k in ("staged", "backfill", "live", "gen"):
             os.makedirs(d[k])
         for i, lines in enumerate(self.bf.files):
-            G.write_file(os.path.join(d["backfill"], f"bf-{i:03d}.json"), lines)
+            G.write_file(os.path.join(d["staged"], f"bf-{i:03d}.json"), lines)
         self.state_timings.clear()
         store_cls = _timed_state_store(StateStore, self.state_timings) if self.ctx.trace else StateStore
         d["bf_pipe"] = IngestPipeline(
@@ -107,18 +108,29 @@ class HederaTwoTier:
             self._wait_idle(q, d["ckpt_live"], {warm})
         warm_last = q.lastProgress["batchId"]
 
-        # 2. backfill drain
-        with tr.span("streaming.ingest.backfill", parent="measure"):
-            t0 = time.perf_counter()
-            bq = d["bf_pipe"].start(available_now=True)
-            if not bq.awaitTermination(150):
-                raise TimeoutError("backfill drain did not finish")
-            drain_s = time.perf_counter() - t0
-        if bq.exception() is not None:
-            raise RuntimeError(f"backfill query failed: {bq.exception()}")
-        bf_prog = H.progress_records(bq)
-        bf_counts = H.job_group_counts(sc, str(bq.runId)) if ctx.trace else None
-        self.attempted += 1 + len(bf_prog)
+        # 2. backfill drains: each group of files is moved into the input
+        # dir (rename: atomic) and drained by one availableNow run
+        rates, bf_prog, bf_runs = [], [], []
+        for k in range(BACKFILL_DRAINS):
+            group = range(k, len(self.bf.files), BACKFILL_DRAINS)
+            for i in group:
+                name = f"bf-{i:03d}.json"
+                os.rename(os.path.join(d["staged"], name), os.path.join(d["backfill"], name))
+            with tr.span("streaming.ingest.backfill", parent="measure", drain=k):
+                t0 = time.perf_counter()
+                bq = d["bf_pipe"].start(available_now=True)
+                if not bq.awaitTermination(150):
+                    raise TimeoutError("backfill drain did not finish")
+                drain_s = time.perf_counter() - t0
+            if bq.exception() is not None:
+                raise RuntimeError(f"backfill query failed: {bq.exception()}")
+            rates.append(sum(len(self.bf.files[i]) for i in group) / drain_s)
+            prog = H.progress_records(bq, ctx.spark)
+            bf_prog += prog
+            bf_runs.append(str(bq.runId))
+            self.attempted += 1 + len(prog)
+        bf_counts = H.merge_counts([H.job_group_counts(sc, r) for r in bf_runs]) \
+            if ctx.trace else None
         self._expect("backfill_rows", d["bf_pipe"].metrics.valid_rows,
                      len(self.bf.unique) + len(self.bf.replayed))
         self._expect("backfill_errors", d["bf_pipe"].metrics.error_rows, len(self.bf.malformed))
@@ -135,13 +147,10 @@ class HederaTwoTier:
         count = self.n_live_files - 1
         with tr.span("generator.live", parent="measure", files=count):
             subprocess.run(
-                [sys.executable, os.path.join(ctx.bench_dir, "hedera_gen.py"), "live",
-                 "--seed", str(ctx.seed),
-                 "--backfill-lines", str(BACKFILL_LINES), "--backfill-files", str(BACKFILL_FILES),
-                 "--files", str(self.n_live_files), "--lines", str(LIVE_LINES_PER_FILE),
-                 "--first", "1", "--count", str(count),
-                 "--interval", str(LIVE_INTERVAL_S), "--out", d["live"], "--log", log],
-                check=True, timeout=60 + count * LIVE_INTERVAL_S,
+                [sys.executable, os.path.join(ctx.bench_dir, "hedera_gen.py"),
+                 "--seed", str(ctx.seed), "--files", str(self.n_live_files),
+                 "--out", d["live"], "--log", log],
+                check=True, timeout=60 + count * G.LIVE_INTERVAL_S,
             )
         gen_log = H.read_jsonl(log)
         with tr.span("streaming.ingest.drain_wait", parent="measure"):
@@ -151,7 +160,7 @@ class HederaTwoTier:
         q.stop()
         if q.exception() is not None:
             raise RuntimeError(f"live query failed: {q.exception()}")
-        live_prog = H.progress_records(q)
+        live_prog = H.progress_records(q, ctx.spark)
         live_counts = H.job_group_counts(sc, str(q.runId)) if ctx.trace else None
         self.attempted += 1 + len(live_prog)
         after_live = H.dir_stats(d["table"], "part_date=")
@@ -173,7 +182,7 @@ class HederaTwoTier:
         lags = [file_batch[r["file"]]["end"] - r["due"] for r in gen_log]
         measured = [p for p in live_prog if p["numInputRows"] > 0 and p["batchId"] > warm_last]
         e2e = {
-            "drain_items_per_s": self.bf.n_lines / drain_s,
+            "drain_items_per_s": H.median(rates),
             "batch_job_s": catchup["wall"] + incremental["wall"] + full["wall"],
         }
         self.samples = {"live_lag": len(lags), "live_batches": len(measured)}
