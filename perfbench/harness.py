@@ -299,6 +299,10 @@ def median(values: list) -> float:
     return statistics.median(values)
 
 
+def mean(values: list) -> float:
+    return statistics.fmean(values)
+
+
 def wait_until(pred, timeout: float, what: str, poll: float = 0.05):
     deadline = time.time() + timeout
     while True:

@@ -55,7 +55,7 @@ BACKFILL_REPLAY_SHARE = 0.05
 LIVE_REPLAY_SHARE = 0.05
 LATE_SHARE = 0.005
 BACKFILL_LINES = 20_000
-BACKFILL_FILES = 9
+BACKFILL_FILES = 12
 LIVE_LINES_PER_FILE = 50
 LIVE_INTERVAL_S = 0.05  # 50 lines every 50 ms: 1,000 tx/s
 

@@ -2,7 +2,7 @@
 
 Run from the repository root::
 
-    python3 perfbench/run.py --workload hedera_two_tier --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload hedera_two_tier --seed 1 --seconds 5 --trace 0
 
 Every input is generated from ``--seed``.  A run sets up ``SETUP_ROUNDS``
 times (fresh SparkContext, staged inputs, pipeline objects); the first
@@ -32,14 +32,15 @@ import traceback
 BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
 #: set-up rounds per run: the first also launches the JVM, ``setup_s``
 #: is the median of the others
-SETUP_ROUNDS = 8
+SETUP_ROUNDS = 4
 #: driver heap of the measured session, fixed in size (-Xms = -Xmx) so
 #: heap resizing does not move peak RSS from run to run; the machine is
 #: shared, so the program's 16g default is not used
 DRIVER_MEMORY = "3g"
-#: task slots: one core of the machine is left to the Python driver, the
-#: JVM's compiler and collector threads and the load generator
-SPARK_CPUS = max(1, (os.cpu_count() or 2) - 1)
+#: task slots: half the machine's cores, so that the task threads, the
+#: Python workers they feed, the Python driver, the JVM's compiler and
+#: collector threads and the load generator do not queue for a core
+SPARK_CPUS = max(1, (os.cpu_count() or 2) // 2)
 #: progress updates a streaming query keeps (Spark's default is 100)
 PROGRESS_RETAINED = 10_000
 
@@ -164,6 +165,28 @@ def run_workload(ctx: Context, name: str, spec: dict) -> dict:
     }
 
 
+def stop_jvm() -> None:
+    """Stop the gateway JVM too, so no process outlives the run."""
+    if "pyspark" not in sys.modules:
+        return
+    from pyspark import SparkContext
+
+    gw = SparkContext._gateway
+    proc = getattr(gw, "proc", None)
+    try:
+        if gw is not None:
+            gw.shutdown()
+    finally:
+        if proc is not None:
+            # the gateway JVM exits when its stdin closes
+            proc.stdin.close()
+            try:
+                proc.wait(timeout=30)
+            except Exception:
+                proc.kill()
+                proc.wait(timeout=30)
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description="hedera-etl-spark benchmark")
     p.add_argument("--workload", required=True)
@@ -204,24 +227,11 @@ def main(argv=None) -> int:
         return 1
     finally:
         t_stop = time.perf_counter()
-        ctx.stop_session()
-        if "pyspark" in sys.modules:
-            from pyspark import SparkContext
-
-            # stop the JVM too, so no process outlives the run
-            gw = SparkContext._gateway
-            proc = getattr(gw, "proc", None)
-            if gw is not None:
-                gw.shutdown()
-            if proc is not None:
-                # the gateway JVM exits when its stdin closes
-                proc.stdin.close()
-                try:
-                    proc.wait(timeout=30)
-                except Exception:
-                    proc.kill()
-                    proc.wait(timeout=30)
-        shutil.rmtree(work, ignore_errors=True)
+        try:
+            ctx.stop_session()
+        finally:
+            stop_jvm()
+            shutil.rmtree(work, ignore_errors=True)
         print(f"perfbench: teardown {time.perf_counter() - t_stop:.2f}s", file=sys.stderr)
     print(json.dumps(result))
     return 0
