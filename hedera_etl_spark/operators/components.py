@@ -31,9 +31,12 @@ Scale properties:
 - per-node state in a round is its neighbor MIN (a window min over the
   grouping exchange), never a collected neighbor list — a celebrity node
   with 10^8 neighbors costs a wide window partition, not a buffer;
-- lineage is cut every round with an eager localCheckpoint (the same
-  iterate-then-pin pattern as ivf_train_kmeans's driver-side centroids);
-  without it round k replans the whole k-deep join tree.
+- each round references its input once (both edge orientations come
+  from one ``explode`` projection, never a self-union), so a round's
+  plan grows by a constant, not by doubling;
+- lineage is cut every two rounds with an eager localCheckpoint (the
+  same iterate-then-pin pattern as ivf_train_kmeans's driver-side
+  centroids); without it round k replans the whole k-deep plan.
 
 Reference parity note: the reference system has no graph stage — its
 dedup is exact-key only (RemoveDuplicatesTemplateQuery.java:29-43).
@@ -67,6 +70,28 @@ def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
+def _two_rows(
+    df: DataFrame, names: tuple, first: tuple, second: tuple
+) -> DataFrame:
+    """Two output rows per input row, columns ``names``: one holding the
+    expressions ``first``, one holding ``second`` — a fan-out that
+    references ``df`` once, where a union of two projections would
+    reference it twice and double the plan every star round.
+
+    ``explode`` of an array, not ``inline``: AQE's empty-relation
+    propagation passes through an Explode generator but stops at any
+    other, so an empty graph still collapses to an empty relation."""
+
+    def struct(exprs):
+        return "named_struct(" + ", ".join(
+            f"'{n}', {e}" for n, e in zip(names, exprs)
+        ) + ")"
+
+    return df.selectExpr(
+        f"explode(array({struct(first)}, {struct(second)})) AS e"
+    ).selectExpr("e.*")
+
+
 def _large_star(edges: DataFrame, dedup: bool = True) -> DataFrame:
     """(v, m) for every neighbor v > u, where m = min(N(u) + {u}).
 
@@ -79,9 +104,8 @@ def _large_star(edges: DataFrame, dedup: bool = True) -> DataFrame:
     ride through one window — the per-round edge SET (and so the
     fixpoint checksums and round count) is bit-identical.
     """
-    sym = edges.selectExpr("u AS a", "v AS b").unionByName(
-        edges.selectExpr("v AS a", "u AS b")
-    )
+    # both orientations of every edge
+    sym = _two_rows(edges, ("a", "b"), ("u", "v"), ("v", "u"))
     out = (
         sym.selectExpr(
             "least(a, min(b) OVER (PARTITION BY a)) AS m", "a", "b"
@@ -102,10 +126,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
     """
     # all u < v by canonical orientation, so min(u) over v is the minimum
     starred = edges.selectExpr("u", "v", "min(u) OVER (PARTITION BY v) AS m")
-    relink = starred.selectExpr("m AS u", "u AS v")
-    self_link = starred.selectExpr("m AS u", "v AS v")
+    # relink (m, u) and self-link (m, v)
     return (
-        relink.unionByName(self_link)
+        _two_rows(starred, ("u", "v"), ("m", "u"), ("m", "v"))
         .filter("u <> v")
         .distinct()
     )
@@ -140,57 +163,76 @@ def connected_components(
     bench pair graph, identical rounds and fixpoint values).
 
     r16 job fusion (guide §5 driver round-trips, §1.2 fewer passes):
-    each checkpoint job now computes the canonicalization (first job
-    only) plus TWO star rounds, with an Observation riding EVERY round
+    each checkpoint job computes the canonicalization (first job only)
+    plus TWO star rounds, with an Observation riding EVERY round
     boundary inside the job — three (count, checksum) states from one
     action.  Convergence still stops at the first round k with
     state(k) == state(k-1), read off the ride-along metrics, so the
     round sequence and the returned edge set are bit-identical to the
     one-round-per-job loop (stars are invariant at the fixpoint, so the
     at-most-one extra star pair a job computes past convergence is the
-    same computation the old confirm round paid as its own job).  The
-    already-star bench pair graph collapses from 3 jobs (canonical pin,
-    round, confirm round) to ONE.
+    same computation the old confirm round paid as its own job).
+
+    Cost as it stands: every star round emits both rows of its fan-out
+    from one ``explode`` projection (``_two_rows``), so a two-round
+    checkpoint's optimized plan holds its input relation ONCE (the
+    earlier union form held it 2^4 = 16 times, and the eager checkpoint
+    spent most of its wall in Catalyst planning).  Each checkpoint is
+    one action per two rounds (its AQE shuffle stages run as jobs of
+    their own); a graph that is already a set of stars, the common
+    near-dup output, needs one.  An EMPTY graph runs a single Spark job
+    in all: AQE eliminates its round boundaries, and an eliminated
+    boundary reads as the (0, 0) state with no fallback aggregate
+    (``robust_observe(trust_zeros=True)``).
+
+    Zero-state guard (ADVICE r16 b): a star round over a non-empty edge
+    set never returns an empty one (a component of two or more nodes
+    keeps an edge), so a (0, 0) state is accepted only as the first
+    state or after a (0, 0) state.  Anywhere else it can only be an
+    observation completed before its node ran, and it is recomputed
+    with the fallback aggregate instead of ending the loop early.
     """
 
     from hedera_etl_spark.operators.stats import robust_observe
 
     def _observed(e: DataFrame):
-        # robust_observe, not a bare Observation: on a degenerate (e.g.
-        # empty) graph, AQE empty-relation propagation eliminates the
-        # intermediate CollectMetrics nodes and a bare .get crashes; the
-        # robust read falls back to one tiny aggregate in that rare case
-        # (stats.RobustObservation).
+        # robust_observe, not a bare Observation: on an empty graph, AQE
+        # empty-relation propagation eliminates the CollectMetrics nodes
+        # and a bare .get crashes.  Round boundaries sit on the
+        # checkpoint job's MAIN lineage, so they can only be eliminated
+        # when the edge set is truly empty, where (0, 0) IS the state:
+        # trust_zeros reads them so with no extra job.
         return robust_observe(
             e,
             "cc.round",
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("sig"),
-            # round boundaries sit on the checkpoint job's MAIN lineage:
-            # they can only be eliminated when the edge set is truly
-            # empty, where (0, 0) IS the fixpoint state — so skip the
-            # sentinel fallback and keep the empty graph at one job
             trust_zeros=True,
         )
 
-    def _state(obs):
+    def _state(obs, prev):
         # .get blocks until the job carrying the CollectMetrics node —
         # the eager localCheckpoint below, always — reports.  Coupled to
         # eager=True: a lazy checkpoint would never run the job and
         # .get has no timeout (ADVICE r15).
-        return (int(obs.get["n"]), int(obs.get["sig"]))
+        vals = obs.get
+        if (vals["n"], vals["sig"]) == (0, 0) and prev not in (None, (0, 0)):
+            vals = obs.recompute()  # the zero-state guard above
+        return (int(vals["n"]), int(vals["sig"]))
 
-    base, obs0 = _observed(_canonical(edges, src, dst))
+    cur, obs0 = _observed(_canonical(edges, src, dst))
     prev = None  # state before the first observed round; None = not yet known
-    cur = base
     for _ in range((max_iterations + 1) // 2):
         r1, obs1 = _observed(_small_star(_large_star(cur, dedup=False)))
         r2, obs2 = _observed(_small_star(_large_star(r1, dedup=False)))
         cur = r2.localCheckpoint(eager=True)  # ONE job: both rounds (+canonical)
         if prev is None:
-            prev = _state(obs0)
-        s1, s2 = _state(obs1), _state(obs2)
-        if s1 == prev or s2 == s1:
+            prev = _state(obs0, None)
+        s1 = _state(obs1, prev)
+        if s1 == prev:
+            break
+        s2 = _state(obs2, s1)
+        if s2 == s1:
             break
         prev = s2
     else:
@@ -201,9 +243,10 @@ def connected_components(
         )
 
     # fixpoint edges are (root, member) stars; roots point to themselves
-    members = cur.selectExpr("v AS node", "u AS component")
-    roots = cur.selectExpr("u AS node", "u AS component").distinct()
-    return members.unionByName(roots).distinct()
+    members_and_roots = _two_rows(
+        cur, ("node", "component"), ("v", "u"), ("u", "u")
+    )
+    return members_and_roots.distinct()
 
 
 def collapse_components(

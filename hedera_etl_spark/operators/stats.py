@@ -119,11 +119,13 @@ class RobustObservation:
     metrics rode the caller's action); an eliminated one falls back to
     ONE aggregate job over the fallback frame (the rare, degenerate
     path; the fallback re-executes the observed subtree, and the result
-    is cached so repeat reads never re-pay it).  When SEVERAL eliminated
-    observations stack along one pipeline (a fully-emptied corpus with
-    per-stage gauges), each read re-runs its own stage subtree once —
-    accepted trade: pinning every stage frame with a checkpoint would
-    tax the COMMON path to subsidize the degenerate one.  A property, so
+    is cached so repeat reads never re-pay it) — or, for a
+    ``trust_zeros`` observation, reads as all zeros with no job.  When
+    SEVERAL eliminated observations stack along one pipeline (a
+    fully-emptied corpus with per-stage gauges), each read re-runs its
+    own stage subtree once — accepted trade: pinning every stage frame
+    with a checkpoint would tax the COMMON path to subsidize the
+    degenerate one.  A property, so
     the ergonomics match ``Observation.get``: consumers read
     ``obs.get["rows"]`` either way.  Like ``Observation.get``, it
     blocks until the observed plan's first action has completed.
@@ -137,27 +139,38 @@ class RobustObservation:
     """
 
     def __init__(
-        self, obs: Observation, fallback: DataFrame, sentinel: bool = False
+        self, obs: Observation, fallback: DataFrame, trust_zeros: bool = False
     ):
         self._obs = obs
         self._fallback = fallback
-        self._sentinel = sentinel
+        self._trust_zeros = trust_zeros
         self._cached: dict | None = None
 
     @property
     def get(self) -> dict:
         if self._cached is None:
-            # The elimination probe reads PRIVATE PySpark internals
-            # (py4j handle + getRow), correct on the pinned Spark 4.1.2
-            # (Observation.get itself calls getRow).  If an upstream
-            # refactor moves either, degrade to the fallback aggregate
-            # instead of turning every metric read into an
-            # AttributeError (ADVICE r8 #3).
-            try:
-                populated = self._obs._jo.getRow().length() > 0
-            except Exception:
-                populated = False
-            vals = dict(self._obs.get) if populated else None
+            self._cached = self._read()
+        return dict(self._cached)
+
+    def _read(self) -> dict:
+        # The elimination probe reads PRIVATE PySpark internals (py4j
+        # handle + getRow), correct on the pinned Spark 4.1.2
+        # (Observation.get itself calls getRow): 0 fields = the observed
+        # node was eliminated.  If an upstream refactor moves either,
+        # degrade to the fallback aggregate instead of turning every
+        # metric read into an AttributeError (ADVICE r8 #3).
+        try:
+            fields = self._obs._jo.getRow().length()
+        except Exception:
+            fields = None
+        if fields == 0 and self._trust_zeros:
+            # main-lineage node: eliminated only over an empty frame,
+            # where every trusted metric is zero (see robust_observe)
+            return dict.fromkeys(self._fallback.columns, 0)
+        if not fields:  # eliminated, or the probe failed
+            return self._run_fallback()
+        vals = dict(self._obs.get)
+        if not self._trust_zeros:
             # Second elimination flavor (r16, found via a fresh-store
             # streaming epoch): a subtree discarded as UNREFERENCED
             # (e.g. the build side of a join whose other side is
@@ -168,14 +181,23 @@ class RobustObservation:
             # means either "executed over an empty frame" (fallback
             # recomputes the same zeros) or "never executed" (fallback
             # recomputes the truth) — both correct, one rare extra job.
-            if vals is not None and self._sentinel:
-                if vals.pop(_OBS_SENTINEL) == 0:
-                    vals = None
-            if vals is None:
-                vals = self._fallback.collect()[0].asDict()
-                vals.pop(_OBS_SENTINEL, None)
-            self._cached = vals
+            seen = vals.pop(_OBS_SENTINEL, None)
+            if seen is None or seen == 0:
+                return self._run_fallback()
+        return vals
+
+    def recompute(self) -> dict:
+        """Re-derive the metrics with the fallback aggregate (one job),
+        whatever the plan-riding row said; the result replaces the cached
+        read.  For callers whose own invariant rules out the reading
+        ``get`` returned (connected_components' zero-state guard)."""
+        self._cached = self._run_fallback()
         return dict(self._cached)
+
+    def _run_fallback(self) -> dict:
+        vals = self._fallback.collect()[0].asDict()
+        vals.pop(_OBS_SENTINEL, None)
+        return vals
 
 
 def robust_observe(
@@ -185,23 +207,34 @@ def robust_observe(
     returns the observed frame and the ``RobustObservation`` to read
     after the caller's action.  ``name`` gets a monotone suffix so
     repeated sites inside ONE plan stay unique (Spark requires observed
-    names unique per query execution).
+    names unique per query execution).  A metric aliased like the
+    hidden sentinel (``__observed_rows``) is rejected.
 
     A hidden row-count sentinel rides along so a populated-but-all-
     default row (the unreferenced-subtree elimination flavor — see
     ``RobustObservation.get``) is detected and sent to the fallback.
-    ``trust_zeros=True`` skips the sentinel for call sites where an
-    all-zeros row is provably correct under BOTH readings — i.e. the
-    observed node sits on the action's MAIN lineage, so it can only be
-    eliminated when its true output is empty (connected_components'
-    fixpoint states): those keep the zero-extra-jobs empty path."""
+
+    ``trust_zeros=True`` is for observed nodes on the action's MAIN
+    lineage, which Spark eliminates only when their output is empty.
+    It drops the sentinel and reads an eliminated node as all-zero
+    metrics, so an empty frame costs no extra job; every metric must be
+    zero over an empty frame.  An all-zero reading is then taken as
+    is, whether measured or the default row of an action that completed
+    the observation before its node ran (a lazy checkpoint, say).  A
+    caller whose own invariant rules out a zero reading calls
+    ``RobustObservation.recompute`` (connected_components accepts a
+    (0, 0) state only as its first state or after a (0, 0) state)."""
     obs = Observation(f"{name}.{next(_CAP_OBS_SEQ)}")
-    if trust_zeros:
-        return df.observe(obs, *metrics), RobustObservation(obs, df.agg(*metrics))
-    sent = F.count(F.lit(1)).alias(_OBS_SENTINEL)
+    sentinel = [] if trust_zeros else [F.count(F.lit(1)).alias(_OBS_SENTINEL)]
+    fallback = df.agg(*metrics, *sentinel)
+    # a caller metric under the sentinel's name would collide with it
+    if fallback.columns.count(_OBS_SENTINEL) != len(sentinel):
+        raise ValueError(
+            f"robust_observe: metric alias {_OBS_SENTINEL!r} is reserved"
+        )
     return (
-        df.observe(obs, *metrics, sent),
-        RobustObservation(obs, df.agg(*metrics, sent), sentinel=True),
+        df.observe(obs, *metrics, *sentinel),
+        RobustObservation(obs, fallback, trust_zeros=trust_zeros),
     )
 
 

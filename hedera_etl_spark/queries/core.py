@@ -84,13 +84,15 @@ def q02(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates to (custkey, priority, count) first — a codegen
     HashAggregate with narrow longs whose map-side combine ships one row
     per (custkey, priority) — then derives every output from the counts:
-    num = SUM(c), n_urgent = the URGENT count, n_prios = COUNT(*), and
-    the ordered listagg rebuilds the sorted occurrence list as
-    array_repeat per priority (sorting the distinct priorities groups
-    equal values exactly as sorting the full multiset would, so the
-    joined string is byte-identical).  The only object buffer left is a
-    <=#distinct-priorities collect_list at the second level, and the
-    distinct-rewrite's Expand disappears (n_prios is free)."""
+    num = SUM(c), n_urgent = the URGENT count, n_prios =
+    COUNT(o_orderpriority) (the non-NULL priority groups, as the
+    oracle's COUNT(DISTINCT) counts), and the ordered listagg rebuilds
+    the sorted occurrence list as array_repeat per priority (sorting
+    the distinct priorities groups equal values exactly as sorting the
+    full multiset would, so the joined string is byte-identical).  The
+    only object buffer left is a <=#distinct-priorities collect_list at
+    the second level, and the distinct-rewrite's Expand disappears
+    (n_prios is free)."""
     orders = load_table(spark, sf_dir, "orders")
     per_prio = orders.groupBy("o_custkey", "o_orderpriority").agg(
         F.count("*").alias("__c")
@@ -338,6 +340,10 @@ def q06(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("join", "topk", "aggregate"),
     bench=True,
+    # parked r17 (window-green r14): join + grouped aggregate stay
+    # window-checked via q05_dim_join_agg (IN) and the TakeOrderedAndProject
+    # top-k via llm_dsir_resample (IN).
+    driver_visible=False,
 )
 def q07(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-to-fact join + top-k.  The ORDER BY ... LIMIT plans as
@@ -804,7 +810,8 @@ def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parked in r14 (driver-green r13; slot ceded to the r9/r10-stale
     # rotation cohort): explode stays driver-checked via the incoming
     # hed_tx_explode_transfers (the reference's own REPEATED-record
-    # shape) plus llm_chunking / llm_pair_stats' explode fan-outs.
+    # shape) plus llm_chunking / llm_vocab_stats' explode fan-outs (r17:
+    # llm_pair_stats parked, llm_vocab_stats back IN).
     driver_visible=False,
 )
 def q14(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -244,6 +244,11 @@ _BM25_ORACLE = f"""
     _BM25_ORACLE,
     tags=("llm", "retrieval", "bm25", "topk"),
     bench=True,
+    # parked r17 (window-green r14): the explode + per-doc aggregate with
+    # dimension-sized broadcast joins stays window-checked via
+    # llm_lm_perplexity (IN) and the TakeOrderedAndProject top-k via
+    # llm_dsir_resample (IN); scores stay pinned in tests/test_retrieval.py.
+    driver_visible=False,
 )
 def llm_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 keyword retrieval (operators/retrieval.py): top-25 documents
@@ -334,12 +339,8 @@ _VOCAB_ORACLE = """
     "llm_vocab_stats",
     _VOCAB_ORACLE,
     tags=("llm", "vocab", "tokenizer", "window"),
-    # parked r13 (driver-green r12): the tokenize-explode-aggregate
-    # kernel stays driver-checked via llm_pair_stats (IN, the same
-    # explode + hash-aggregate over bigrams) and the dimension-sized
-    # ranking window via llm_profile; coverage-curve values keep their
-    # local oracle.
-    driver_visible=False,
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
 )
 def llm_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-prep vocabulary table (operators/vocab.vocab_stats):
@@ -373,6 +374,10 @@ _PAIR_ORACLE = """
     tags=("llm", "vocab", "tokenizer", "bpe"),
     # Rotated back INTO the driver window r12 (VERDICT r11 #1 — the
     # r8-stale cohort refresh).
+    # parked r17 (window-green r14): the tokenize-explode-aggregate kernel
+    # stays window-checked via llm_vocab_stats (IN), and the round-one pair
+    # counts seed the BPE merge chain llm_bpe_encode (IN) hash-matches.
+    driver_visible=False,
 )
 def llm_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adjacent-token pair frequencies (operators/vocab.pair_stats) —
@@ -527,12 +532,8 @@ def llm_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_bpe_encode",
     _bpe_encode_oracle(_BPE_K),
     tags=("llm", "vocab", "tokenizer", "bpe", "encode"),
-    # parked r13 (driver-green r12): the tokenize+aggregate and
-    # round-one argmax kernels stay driver-checked via llm_pair_stats
-    # (IN); the merge loop keeps its local oracle via llm_bpe_merges and
-    # the encode join-back is pinned vs an independent Python encoder in
-    # tests/test_bpe.py.
-    driver_visible=False,
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
     # bpe_merges collects the merge list per call (localCheckpoints)
     cache_plan=False,
 )
@@ -771,6 +772,11 @@ def _dsir_scored(
     # checked debt); q02_groupby_having parks in exchange — the GROUP
     # BY/HAVING family stays driver-checked via hed_dedupe_job (A1's
     # other named entry, IN).
+    # parked r17 (window-green r14): the fit + score kernel stays
+    # window-checked via llm_dsir_resample (IN), which ranks on the same
+    # _dsir_scored log-weights; weight values stay pinned in
+    # tests/test_dsir.py.
+    driver_visible=False,
 )
 def llm_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance log-weights (operators/dsir.py): fit the hashed
@@ -793,7 +799,8 @@ def llm_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # occurrence instead of the interpreted conv(md5hex, 16, 10) parse,
     # the exact residual llm_minhash_neardup_fast eliminated for
     # minhash signatures.  Never takes a window slot; correctness rides
-    # (a) the md5 entry's driver hash-match (every stage downstream of
+    # (a) the md5 pipeline's window hash-match, via llm_dsir_resample
+    # since r17 (every stage downstream of
     # the bucket digest is shared — same fit, same smoothing, same
     # score aggregate) and (b) the mode-pair pin in tests/test_dsir.py
     # (identical doc set + n_features — the feature bag is
@@ -814,12 +821,9 @@ def llm_dsir_weights_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_dsir_resample",
     _DSIR_RESAMPLE_ORACLE,
     tags=("llm", "selection", "importance", "dsir", "gumbel", "topk"),
-    # parked r13 (driver-green r12): the weight computation stays
-    # driver-checked via llm_dsir_weights (IN) and the
-    # TakeOrderedAndProject top-k shape via q07_bigjoin_topk (IN); the
-    # hash-derived Gumbel key is value-pinned in tests/test_dsir.py.
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
     cache_plan=False,  # fused form embeds a localCheckpoint (r15 opt)
-    driver_visible=False,
 )
 def llm_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gumbel-top-k importance resampling (operators/dsir.py): sample

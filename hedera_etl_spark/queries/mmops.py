@@ -42,12 +42,8 @@ from hedera_etl_spark.tables import load_table
     FROM documents ORDER BY doc_id
     """,
     tags=("mm", "binary", "decode", "image", "pandas-udf"),
-    # parked r13 (driver-green r12): the Arrow mapInPandas decode
-    # plumbing stays driver-checked via mm_audio_features (IN) and the
-    # payload fingerprint path via mm_phash_neardup (IN this round);
-    # the fake-decode contract stays pinned in tests/test_stateful.py
-    # and the entry keeps its local oracle.
-    driver_visible=False,
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
 )
 def mm_payload_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The three multimodal image paths in one entry, joined on the doc
@@ -131,6 +127,11 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-green r5, three rounds stale); mm_payload_decode parks in
     # exchange and this entry now carries the multimodal family's
     # driver row (chunked mapInPandas feature extraction).
+    # parked r17 (window-green r14): the decode-free binary-payload built-
+    # ins stay window-checked via mm_payload_decode (IN) and the explode
+    # fan-out via hed_tx_explode_transfers (IN); chunk byte math stays
+    # pinned in tests/test_stateful.py.
+    driver_visible=False,
 )
 def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio-style chunk features over the binary payload: per-400-byte
@@ -236,7 +237,7 @@ _PHASH_ORACLE = f"""
     tags=("mm", "dedup", "phash", "image"),
     # parked in r14 (driver-green r13; slot ceded to the r9/r10-stale
     # rotation cohort): the Arrow mapInPandas decode path stays
-    # driver-checked via mm_audio_features; banded-hash near-dup via
+    # window-checked via mm_payload_decode (r17); banded-hash near-dup via
     # llm_simhash_neardup (same band→equi-join→hamming-verify shape).
     # the fingerprint pass feeds bucket collection twice under AQE
     # re-use; keep plans fresh like the other pair detectors

@@ -99,6 +99,11 @@ def hed_dedupe_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("streaming", "stateful", "pandas-udf"),
     cache_plan=False,
+    # parked r17 (window-green r14): Pandas grouped-map plumbing stays
+    # window-checked via llm_groupwise_norm (IN) and the streaming source
+    # and sink via hed_stream_ingest (IN); state across restarts stays
+    # pinned in tests/test_stateful.py.
+    driver_visible=False,
 )
 def hed_stateful_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary-state streaming operator (applyInPandasWithState): a

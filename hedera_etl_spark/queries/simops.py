@@ -74,10 +74,11 @@ MAX_BUCKET = 500
     tags=("sim", "ann", "baseline"),
     # rotated back IN r14 (VERDICT r13 #1 — r10-stale cohort).
     bench=True,
-    # Driver-green r14; parked r15: the ANN family keeps sim_lsh_ann_topk /
-    # sim_ivf_topk / sim_ivfpq_topk + sim_cosine_neardup (IN r15) driver
-    # rows; every bucketed variant stays property-pinned against this
-    # brute-force baseline in test_similarity.py; keeps its bench slot.
+    # Window-green r14; parked r15: the ANN family keeps sim_ivf_topk /
+    # sim_ivfpq_topk + sim_cosine_neardup (IN; sim_lsh_ann_topk parked
+    # r17) window rows; every bucketed variant stays property-pinned
+    # against this brute-force baseline in test_similarity.py; keeps its
+    # bench slot.
     driver_visible=False,
 )
 def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -128,6 +129,11 @@ _LSH_ORACLE = f"""
     "sim_lsh_ann_topk",
     _LSH_ORACLE,
     tags=("sim", "ann", "lsh"),
+    # parked r17 (window-green r14): skew-capped bucket equi-join blocking
+    # stays window-checked via llm_minhash_neardup (IN) and cosine top-k via
+    # sim_ivf_topk + sim_cosine_neardup (IN); buckets and cap stay pinned in
+    # tests/test_similarity.py.
+    driver_visible=False,
 )
 def sim_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k: random-hyperplane LSH buckets turn the cross join
@@ -335,6 +341,12 @@ _SEM_ORACLE = f"""
     # Still a side-effecting function (index read + possible build), so
     # its plan must never be served from the prepared-plan cache.
     cache_plan=False,
+    # parked r17 (window-green r14): the IVF-bucket probe stays
+    # window-checked via sim_ivf_topk (IN), cosine threshold pairs via
+    # sim_cosine_neardup (IN) and the transitive min-id keeper via
+    # llm_dup_clusters (IN, the same collapse_components); lifecycle stays
+    # pinned in tests/test_semantic_dedup.py.
+    driver_visible=False,
 )
 def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-backed semantic dedup decisions (first-batch form) over the
@@ -458,11 +470,8 @@ def _cov_oracle(dims: int) -> str:
     "sim_pca_covariance",
     _cov_oracle(_PCA_DIMS),
     tags=("sim", "pca", "covariance", "aggregate"),
-    # parked r13 (driver-green r12): the in-row vector fold/aggregate
-    # kernels stay driver-checked via sim_pq_adc_topk + sim_lsh_ann_topk
-    # (IN); exact covariance values stay pinned vs numpy in
-    # tests/test_embedpca.py and the entry keeps its local oracle.
-    driver_visible=False,
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
 )
 def sim_pca_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise covariance of the first 16 embedding dimensions in ONE

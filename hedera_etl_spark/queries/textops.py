@@ -106,6 +106,11 @@ def neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("llm", "dedup"),
     bench=True,
+    # parked r17 (window-green r14): the md5(text) min-id keeper groups stay
+    # window-checked via llm_removal_ledger (IN), whose oracle rebuilds
+    # every exact-dup keeper attribution; exact_duplicates stays pinned in
+    # tests/test_textdedup.py.
+    driver_visible=False,
 )
 def llm_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicate collapse by content hash: one hash-aggregate on
@@ -142,12 +147,8 @@ def llm_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id
     """,
     tags=("llm", "provenance", "ledger"),
-    # parked r13 (driver-green r12; slot ceded to the NEW-r12 + r9-stale
-    # rotation cohort): keeper groups stay driver-checked via
-    # llm_exact_dedup and the token floor via llm_text_stats (both IN);
-    # crash-heal re-derivation is soak-pinned (tools/soak_corpus_r12.py)
-    # and the full ledger relation keeps its local oracle.
-    driver_visible=False,
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
     # the ledger checkpoints every recorded boundary — plans with
     # checkpoints must opt out of the prepared-plan cache
     cache_plan=False,
@@ -254,7 +255,8 @@ _URL_DEDUP_ORACLE = f"""
     # rotated back IN r14 (VERDICT r13 #1 — r10-stale cohort).
     bench=True,
     # Driver-green r14; parked r15: the keyed min-id keeper collapse is
-    # llm_exact_dedup's (IN) exact shape; URL canonicalization rules are
+    # llm_exact_dedup's exact shape, window-checked via
+    # llm_removal_ledger's keeper attribution (IN r17); URL rules are
     # value-pinned in test_urlnorm.py; keeps its bench slot.
     driver_visible=False,
 )
@@ -363,6 +365,11 @@ _NGRAM_ORACLE = f"""
     _NGRAM_ORACLE,
     tags=("llm", "dedup", "jaccard"),
     cache_plan=False,
+    # parked r17 (window-green r14): the prefix-filtered exact-Jaccard pairs
+    # stay window-checked via llm_dup_clusters (IN), which closes
+    # ngram_jaccard_neardups pairs, and shingle-set Jaccard via
+    # llm_fuzzy_decontam (IN).
+    driver_visible=False,
 )
 def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dups blocked on rare shingles
@@ -516,7 +523,8 @@ _SIM_HIST_ORACLE = f"""
     tags=("llm", "dedup", "jaccard", "report"),
     # parked in r14 (driver-green r13; slot ceded to the r9/r10-stale
     # rotation cohort): the exact-Jaccard pair pipeline it reports over
-    # stays driver-checked via llm_ngram_jaccard + llm_containment_pairs.
+    # stays window-checked via llm_dup_clusters (its ngram_jaccard pairs,
+    # r17) + llm_containment_pairs.
     cache_plan=False,
     driver_visible=False,
 )
@@ -802,11 +810,8 @@ def llm_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id
     """,
     tags=("llm", "pandas-udf", "grouped-map"),
-    # parked r13 (driver-green r12): the keyed min/max window form stays
-    # driver-checked via q10_window_frame (IN); the grouped-map
-    # applyInPandas twin is pinned bit-identical to the window form in
-    # tests/test_textnorm.py and the entry keeps its local oracle.
-    driver_visible=False,
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
 )
 def llm_groupwise_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-map applyInPandas: per-language min-max normalization in
@@ -954,6 +959,10 @@ _DECONTAM_ORACLE = f"""
     "llm_decontaminate",
     _DECONTAM_ORACLE,
     tags=("llm", "decontamination"),
+    # parked r17 (window-green r14): word-5-gram shingling + the broadcast
+    # eval-dimension probe stay window-checked via llm_fuzzy_decontam (IN);
+    # exact-overlap drops stay pinned in tests/test_decontam.py.
+    driver_visible=False,
 )
 def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination probe (operators/decontam.py): flag
@@ -996,9 +1005,10 @@ _BLOOM_DECON_ORACLE = f"""
     _BLOOM_DECON_ORACLE,
     tags=("llm", "decontamination", "bloom", "scale-path"),
     # parked in r14 (driver-green r13; slot ceded to the r9/r10-stale
-    # rotation cohort): exact-overlap decontamination semantics stay
-    # driver-checked via llm_decontaminate; the Bloom prefilter's
-    # zero-false-negative property is pinned in test_decontam.py.
+    # rotation cohort): the word-5-gram eval-dimension probe stays
+    # window-checked via llm_fuzzy_decontam (r17); decisions equal to the
+    # exact operator and the Bloom prefilter's zero-false-negative
+    # property are pinned in test_decontam.py.
     # the reference shingle dimension carries a localCheckpoint (two
     # consumers: bloom build + exact verify) — cache opt-out as usual
     cache_plan=False,
@@ -1040,6 +1050,11 @@ def llm_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id
     """,
     tags=("llm", "sampling"),
+    # parked r17 (window-green r14): the md5-bucket Bernoulli keep rule
+    # stays window-checked via llm_temperature_mixture (IN, per-group rates)
+    # and llm_train_val_test_split (IN); determinism stays pinned in
+    # tests/test_sampling.py.
+    driver_visible=False,
 )
 def llm_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified downsampling (operators/sampling.py): the
@@ -1086,11 +1101,8 @@ def llm_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY d.doc_id
     """,
     tags=("llm", "sampling", "mixture", "temperature"),
-    # parked r13 (driver-green r12): the md5-bucket Bernoulli acceptance
-    # kernel stays driver-checked via llm_stratified_sample +
-    # llm_weighted_sample (both IN); the sqrt water-filling solver is
-    # value-pinned in tests/test_sampling.py and keeps its local oracle.
-    driver_visible=False,
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
 )
 def llm_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-smoothed mixture resampling (operators/sampling.py
@@ -1126,6 +1138,10 @@ def llm_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("llm", "sampling"),
     # rotated back IN r13 (VERDICT r12 #1 — r9-stale cohort).
+    # parked r17 (window-green r14): the md5-bucket keep rule stays
+    # window-checked via llm_temperature_mixture + llm_train_val_test_split
+    # (IN); weight monotonicity stays pinned in tests/test_sampling.py.
+    driver_visible=False,
 )
 def llm_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row importance sampling (operators/sampling.py
@@ -1228,11 +1244,8 @@ _LM_ORACLE = """
     "llm_lm_perplexity",
     _LM_ORACLE,
     tags=("llm", "quality", "lm", "perplexity"),
-    # parked r13 (driver-green r12): the broadcast-model join + per-doc
-    # score aggregate shape stays driver-checked via llm_bm25_topk (IN,
-    # same kernel) and the per-row quality family via llm_text_stats;
-    # exact log-prob values stay pinned in tests/test_lmscore.py.
-    driver_visible=False,
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
 )
 def llm_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM document scoring (operators/lmscore.py): train on the
@@ -1294,11 +1307,8 @@ _FUZZY_DECON_ORACLE = f"""
     "llm_fuzzy_decontam",
     _FUZZY_DECON_ORACLE,
     tags=("llm", "decontamination", "jaccard"),
-    # parked r13 (driver-green r12): the exact-membership kernel stays
-    # driver-checked via llm_decontaminate and the giant-reference scale
-    # path via llm_bloom_decontam (both IN); shingle-Jaccard pair
-    # machinery via llm_ngram_jaccard (IN).
-    driver_visible=False,
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
 )
 def llm_fuzzy_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy decontamination pairs (operators/decontam.py): corpus
@@ -1364,10 +1374,8 @@ _WINNOW_ORACLE = f"""
     "llm_winnow_fp",
     _WINNOW_ORACLE,
     tags=("llm", "fingerprint", "winnowing"),
-    # parked r13 (driver-green r12): the per-doc fingerprint family
-    # stays driver-checked via llm_simhash_fp (IN this round); the
-    # winnowing guarantee stays property-pinned in test_winnowing.py.
-    driver_visible=False,
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
 )
 def llm_winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint sets over the documents table: word
@@ -1410,10 +1418,8 @@ _NORM_ORACLE = r"""
     "llm_text_normalize",
     _NORM_ORACLE,
     tags=("llm", "normalize", "unicode", "pandas-udf"),
-    # parked r13 (driver-green r12): the zero-shuffle per-row projection
-    # family stays driver-checked via llm_text_stats (IN); the NFC
-    # pandas_udf is pinned vs Python unicodedata in test_textnorm.py.
-    driver_visible=False,
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
 )
 def llm_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NFC + lowercase + whitespace-collapse over a corpus salted with
@@ -1458,11 +1464,8 @@ _SPLIT_ORACLE = """
     "llm_train_val_test_split",
     _SPLIT_ORACLE,
     tags=("llm", "sampling", "split"),
-    # parked r13 (driver-green r12): the md5 hash_bucket assignment
-    # kernel stays driver-checked via llm_stratified_sample +
-    # llm_weighted_sample (both IN); disjointness/totality/determinism
-    # stay pinned in tests/test_sampling.py.
-    driver_visible=False,
+    # rotated back IN r17 (parked r13-r16, window-green r12: the
+    # parked-age limit of tools/ledger.py).
 )
 def llm_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-way deterministic split labels over the documents table —
@@ -1660,7 +1663,7 @@ _DIFF_ORACLE = f"""
     _DIFF_ORACLE,
     tags=("llm", "snapshot", "diff"),
     # Driver-green r14; parked r15: the anti-join/EXCEPT diff kernels stay
-    # driver-checked via llm_decontaminate + q11_set_ops (IN r15); the
+    # window-checked via q11_set_ops + q06_semi_anti_join (IN); the
     # ledger-completeness partition invariant stays pytest-pinned.
     driver_visible=False,
 )
@@ -1814,8 +1817,9 @@ _PARA_ORACLE = f"""
     cache_plan=False,
     # Driver-green r14 (incl. the skew_safe hatch); parked r15: the
     # count-over-window dup kernel stays driver-checked via llm_span_flags
-    # (IN r15, same window form) and the keeper collapse via llm_exact_dedup
-    # (IN); window==skew_safe equality pinned in test_paradedup.py; keeps
+    # (IN r15, same window form) and the keeper collapse via
+    # llm_removal_ledger's keeper attribution (IN r17); window==skew_safe
+    # equality pinned in test_paradedup.py; keeps
     # its bench slot.
     driver_visible=False,
 )

@@ -709,10 +709,10 @@ class CorpusIngestPipeline:
                 ledger = RemovalLedger()
                 batch = batch.localCheckpoint(eager=False)  # ledger anti-joins
 
-        def _ledger_drops(stage, reason, pre, post):
+        def _ledger_drops(stage, reason, pre, post, eager=False):
             if ledger is None:
                 return post
-            post = post.localCheckpoint(eager=False)
+            post = post.localCheckpoint(eager=eager)
             ledger.record(
                 stage, reason,
                 pre.select("doc_id").join(post.select("doc_id"), "doc_id", "left_anti"),
@@ -819,7 +819,14 @@ class CorpusIngestPipeline:
             batch = decontaminate_against_shingles(
                 batch, eval_sh, n=self.decontam_n
             )
-            batch = _ledger_drops("decontam", "contaminated", pre, batch)
+            # eager on the ledgered path (ADVICE r16 a): a lazy checkpoint
+            # completes pre_obs when it is called, with the true count
+            # only if AQE happened to run the observed node in a shuffle
+            # stage during that call, else with a default row that sends
+            # the read to the fallback job.  The eager one runs the node.
+            batch = _ledger_drops(
+                "decontam", "contaminated", pre, batch, eager=True
+            )
             if not self.store.has_batch(bid):  # replays don't double-count
                 # remembered for the paragraph stage (r16): its `before`
                 # count re-executed this exact decontam plan every batch

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from hedera_etl_spark.operators.stats import cap_counts
 from hedera_etl_spark.operators.textdedup import minhash_lsh_neardups
 
@@ -456,3 +458,48 @@ def test_robust_observation_probe_failure_degrades_to_fallback(spark):
 
     robust._obs._jo = _Broken()
     assert robust.get["total"] == 45  # served by the fallback aggregate
+
+
+# ---------------------------------------------------------------------------
+# Sentinel hygiene (ADVICE r16 c)
+# ---------------------------------------------------------------------------
+def test_robust_observe_rejects_sentinel_alias(spark):
+    """A caller metric named like the hidden row-count sentinel would
+    collide with it in the observed row; robust_observe refuses it."""
+    from pyspark.sql import functions as F
+
+    from hedera_etl_spark.operators.stats import robust_observe
+
+    df = spark.range(3)
+    with pytest.raises(ValueError, match="reserved"):
+        robust_observe(df, "clash", F.count(F.lit(1)).alias("__observed_rows"))
+
+
+def test_robust_observation_missing_sentinel_falls_back(spark):
+    """A populated row without the sentinel field cannot vouch for its
+    zeros: the read goes to the fallback aggregate instead of raising
+    KeyError or trusting the row."""
+    from pyspark.sql import functions as F
+
+    from hedera_etl_spark.operators.stats import robust_observe
+
+    df = spark.range(10).select(F.col("id").cast("long").alias("n"))
+    observed, robust = robust_observe(
+        df, "no_sentinel", F.coalesce(F.sum("n"), F.lit(0)).alias("total")
+    )
+    observed.count()
+
+    class _Row:
+        def length(self):
+            return 1
+
+    class _Jo:
+        def getRow(self):
+            return _Row()
+
+    class _SentinelLess:
+        _jo = _Jo()
+        get = {"total": 999}  # populated, but the sentinel is gone
+
+    robust._obs = _SentinelLess()
+    assert robust.get == {"total": 45}  # served by the fallback aggregate

@@ -121,6 +121,139 @@ def test_nonconvergence_rail_raises(spark):
         connected_components(df, max_iterations=1)
 
 
+def _job_ids(spark, group, fn):
+    """Ids of the Spark jobs ``fn`` submits, tagged with job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the async listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fused_rounds_reference_their_input_once(spark):
+    """Two fused star rounds over a checkpointed edge frame hold that
+    frame ONCE in the optimized plan; a self-union per round held it
+    2^4 = 16 times, so the eager checkpoint job spent its wall planning."""
+    from hedera_etl_spark.operators.components import _large_star, _small_star
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(23)], "u LONG, v LONG"
+    ).localCheckpoint(eager=True)
+    r1 = _small_star(_large_star(edges, dedup=False))
+    r2 = _small_star(_large_star(r1, dedup=False))
+    plan = r2._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LogicalRDD") == 1, plan
+
+
+def test_empty_graph_runs_no_fallback_job(spark):
+    """An empty pair set: AQE eliminates every round boundary, and each
+    one reads as the (0, 0) state — collapse_components runs exactly the
+    jobs of its one eager checkpoint, no fallback aggregate."""
+    from hedera_etl_spark.operators.components import (
+        _canonical,
+        _large_star,
+        _small_star,
+        collapse_components,
+    )
+
+    ids = spark.createDataFrame([(i,) for i in range(5)], ["doc_id"])
+    pairs = spark.createDataFrame([], "doc_a LONG, doc_b LONG")
+
+    def checkpoint_only():
+        e = _canonical(pairs, "doc_a", "doc_b")
+        for _ in range(2):
+            e = _small_star(_large_star(e, dedup=False))
+        e.localCheckpoint(eager=True)
+
+    want = _job_ids(spark, "cc-empty-checkpoint", checkpoint_only)
+    decision = None
+
+    def collapse():
+        nonlocal decision
+        decision = collapse_components(ids, pairs)
+
+    got = _job_ids(spark, "cc-empty-collapse", collapse)
+    assert len(want) >= 1 and len(got) == len(want)
+    assert sorted(
+        (r["doc_id"], r["component"], r["keep"]) for r in decision.collect()
+    ) == [(i, i, True) for i in range(5)]
+
+
+def test_chain_rows_and_round_count_pinned(spark, monkeypatch):
+    """A 24-node chain (diameter 23): the returned rows and the fixpoint
+    (count, checksum) state of every round boundary are pinned at their
+    values from the union-form star rounds — converged at round 6, the
+    seventh state confirming the sixth."""
+    from hedera_etl_spark.operators import stats
+    from hedera_etl_spark.operators.components import connected_components
+
+    rounds = []  # every round-boundary observation, canonical state first
+    real = stats.robust_observe
+
+    def spy(df, name, *metrics, **kw):
+        out, obs = real(df, name, *metrics, **kw)
+        rounds.append(obs)
+        return out, obs
+
+    monkeypatch.setattr(stats, "robust_observe", spy)
+    df = spark.createDataFrame([(i, i + 1) for i in range(23)], "src LONG, dst LONG")
+    rows = sorted(
+        (r["node"], r["component"]) for r in connected_components(df).collect()
+    )
+    assert rows == [(i, 0) for i in range(24)]
+    states = [(o.get["n"], o.get["sig"]) for o in rounds]
+    assert states == [
+        (23, -2821313303946420543),
+        (23, 1402102356763626431),
+        (23, 4468339414575627997),
+        (23, 6209141781325605640),
+        (23, -3409897764592509506),
+        (23, -8606869991897652865),
+        (23, -8606869991897652865),
+    ]
+
+
+def test_zero_state_after_nonempty_round_does_not_end_loop(
+    spark, monkeypatch
+):
+    """ADVICE r16 (b): a (0, 0) reading after a non-empty round is an
+    observation completed before its job ran, never a fixpoint — it must
+    be recomputed, not allowed to end the loop on a half-merged graph."""
+    from hedera_etl_spark.operators import stats
+    from hedera_etl_spark.operators.components import connected_components
+
+    real = stats.robust_observe
+    made = []
+
+    class _ReadsZero:
+        """Every reading after the canonical state comes back (0, 0)."""
+
+        def __init__(self, obs):
+            self._obs = obs
+
+        @property
+        def get(self):
+            return {"n": 0, "sig": 0}
+
+        def recompute(self):
+            return self._obs.recompute()
+
+    def stub(df, name, *metrics, **kw):
+        out, obs = real(df, name, *metrics, **kw)
+        made.append(obs)
+        return out, (obs if len(made) == 1 else _ReadsZero(obs))
+
+    monkeypatch.setattr(stats, "robust_observe", stub)
+    edges = [(i, i + 1) for i in range(23)]
+    got = _run(spark, edges)
+    assert got == _truth(24, edges)
+
+
 class TestScoreKeeper:
     """collapse_components_by_score: best-in-cluster retention."""
 

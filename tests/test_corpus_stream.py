@@ -589,6 +589,59 @@ def test_streaming_removal_ledger_partitions_each_epoch(spark, dirs, tmp_path):
     assert p2.read_ledger().count() == n_before
 
 
+def test_ledgered_decontam_count_rides_without_fallback(
+    spark, dirs, tmp_path, monkeypatch
+):
+    """ADVICE r16 (a): with a removal ledger attached, the pre-decontam
+    count rides the batch's own action, with no fallback aggregate job.
+    A lazy ledger checkpoint completes the observation when it is
+    called; the decontam checkpoint is eager so the observed node has
+    run by then, whatever stage AQE puts it in."""
+    from hedera_etl_spark.operators import stats
+
+    fallbacks = []
+    real = stats.robust_observe
+
+    class _CountingFallback:
+        def __init__(self, df, name):
+            self._df, self._name = df, name
+
+        @property
+        def columns(self):
+            return self._df.columns
+
+        def collect(self):
+            fallbacks.append(self._name)
+            return self._df.collect()
+
+    def spy(df, name, *metrics, **kw):
+        out, obs = real(df, name, *metrics, **kw)
+        obs._fallback = _CountingFallback(obs._fallback, name)
+        return out, obs
+
+    monkeypatch.setattr(stats, "robust_observe", spy)
+    _write_jsonl(
+        os.path.join(dirs["in"], "b1.jsonl"),
+        [(1, OTHER), (3, BASE + " extra tail words"), (4, "tiny")],
+    )
+    p = CorpusIngestPipeline(
+        spark,
+        input_dir=dirs["in"],
+        corpus_table=dirs["corpus"],
+        store_path=dirs["store"],
+        checkpoint=dirs["ckpt"],
+        min_tokens=2,
+        eval_docs=spark.createDataFrame([(100, BASE)], ["doc_id", "text"]),
+        ledger_dir=str(tmp_path / "ledger"),
+    )
+    m = p.run_until_drained()
+    assert m.dropped_contaminated == 1
+    assert not [f for f in fallbacks if f.startswith("stream.decontam_in")]
+    assert {
+        r["doc_id"]: r["stage"] for r in p.read_ledger().collect()
+    } == {3: "decontam", 4: "quality_floor"}
+
+
 def _write_jsonl_url(path, rows):
     with open(path, "w") as fh:
         for doc_id, text, url in rows:
