@@ -118,8 +118,16 @@ def atomic_replace(
 
 
 # ---------------------------------------------------------------------------
-# Append-only batch-directory stores (the ``root/batch=X`` commit
-# primitive shared by the incremental dedup stores).
+# Append-only batch-directory stores: one directory per committed batch,
+# made live by a single rename of its staged sibling.  Two compaction
+# protocols sit on top of that commit:
+#   - BatchDirStore (``root/batch=X`` + ``_folded.json``): the incremental
+#     dedup stores.  Folded rows keep an ``origin_batch`` column, so a
+#     replayed batch is still recognized and excluded after compaction.
+#   - RetiringBatchTable (``root/batch-X`` + ``_compaction/<target>.json``):
+#     the streaming corpus table and its removal ledger.  A manifest whose
+#     target exists retires its sources, so no crash window reads a row
+#     twice.
 # ---------------------------------------------------------------------------
 
 
@@ -134,8 +142,6 @@ def batch_dirs(root: str) -> set[str]:
 def sweep_staging(root: str) -> None:
     """Remove stale ``.batch=X.__new`` staging dirs (a crash between the
     parquet write and the rename leaves one; it is never live)."""
-    import shutil
-
     for e in os.listdir(root):
         if e.startswith(".") and e.endswith(".__new"):
             shutil.rmtree(os.path.join(root, e), ignore_errors=True)
@@ -144,8 +150,6 @@ def sweep_staging(root: str) -> None:
 def stage_batch_dir(root: str, entry: str, df) -> str:
     """Write ``df`` to the staging sibling of ``root/entry``; returns
     the staged path (publish with :func:`publish_batch_dir`)."""
-    import shutil
-
     tmp = os.path.join(root, f".{entry}.__new")
     shutil.rmtree(tmp, ignore_errors=True)
     df.write.mode("overwrite").parquet(tmp)
@@ -155,13 +159,25 @@ def stage_batch_dir(root: str, entry: str, df) -> str:
 def publish_batch_dir(root: str, entry: str, staged: str) -> None:
     """Make a staged batch dir live by one rename; idempotent — an
     already-live entry wins every race (concurrent retry discipline)."""
-    import shutil
-
     live = os.path.join(root, entry)
     if os.path.exists(live):
         shutil.rmtree(staged, ignore_errors=True)
     else:
         os.rename(staged, live)
+
+
+def commit_batch_dir(root: str, entry: str, df) -> None:
+    """Stage ``df`` and publish it as ``root/entry``."""
+    publish_batch_dir(root, entry, stage_batch_dir(root, entry, df))
+
+
+def compacted_name(prefix: str, entries) -> str:
+    """Compaction target name: md5 of the folded SET, so a retry of the
+    same fold derives the same target and a retry over a different live
+    set derives a new one."""
+    import hashlib
+
+    return prefix + hashlib.md5("|".join(entries).encode()).hexdigest()[:12]
 
 
 #: sits beside the ``batch=X`` dirs; accumulates every entry ever folded
@@ -171,9 +187,9 @@ def publish_batch_dir(root: str, entry: str, staged: str) -> None:
 #: rows and silently change its output.
 FOLDED_MANIFEST = "_folded.json"
 
-#: per-row attribution column written into compacted dirs when
-#: ``track_origin`` — lets per-batch lookups (replay exclusion, replay
-#: accepted-set reads) resolve after the source dirs are gone.
+#: per-row attribution column written into compacted dirs — lets
+#: per-batch lookups (replay exclusion, replay accepted-set reads,
+#: as-of corpus reads) resolve after the source dirs are gone.
 ORIGIN_COL = "origin_batch"
 
 
@@ -211,74 +227,261 @@ def with_origin_schema(schema):
     )
 
 
-def compact_batch_dirs(
-    spark, root: str, schema, dedup_cols=None, track_origin: bool = False
-) -> int:
-    """Fold every live ``batch=X`` dir under ``root`` into one
-    ``batch=compacted-<md5>`` dir (single-root batch-store maintenance).
-    Returns the number of dirs folded (0 when <= 1 live dir).
-
-    Crash-safe without coordination: the target name derives from the
-    md5 of the folded SET, the merged rows are materialized
-    (localCheckpoint) and published through the normal staged rename
-    BEFORE any source is removed.  A crash between publish and the
-    source deletes leaves rows duplicated across target and leftovers;
-    callers must therefore only use batch stores in duplicate-insensitive
-    reads (semi/anti joins — the contract both incremental stores
-    already hold), and a retry derives a NEW target folding everything,
-    with ``dropDuplicates`` keeping row counts from creeping.
-
-    ``track_origin`` (the replay heal, VERDICT r10 #4): each folded row
-    carries its source entry name in ``origin_batch`` (preserved through
-    nested compactions) and the folded entry set lands in the
-    ``_folded.json`` manifest — so a replayed pre-compaction batch can
-    still be recognized (``folded_batches``) and its rows excluded or
-    looked up by origin, instead of the batch silently re-deciding
-    against its own history."""
-    import hashlib
-    import shutil
+def origin_fold(spark, root: str, entries, schema):
+    """Union of the ``root/<entry>`` dirs with every row attributed to
+    the entry it came from.  Rows already carrying an origin keep it
+    (nested compaction): a missing parquet column reads as NULL under an
+    explicit schema, so plain dirs coalesce to their own entry name."""
+    from functools import reduce
 
     from pyspark.sql import functions as F
 
-    old = sorted(batch_dirs(root))
-    if len(old) <= 1:
-        return 0
-    entry = "batch=compacted-" + hashlib.md5("|".join(old).encode()).hexdigest()[:12]
-    if track_origin:
-        ext = with_origin_schema(schema)
-        frames = []
-        for b in old:
-            # nested compaction: rows already carrying an origin keep it
-            # (missing parquet columns read as NULL under an explicit
-            # schema, so plain dirs coalesce to their own entry name)
-            frames.append(
-                spark.read.schema(ext)
-                .parquet(os.path.join(root, b))
-                .withColumn(ORIGIN_COL, F.coalesce(F.col(ORIGIN_COL), F.lit(b)))
+    ext = with_origin_schema(schema)
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            spark.read.schema(ext)
+            .parquet(os.path.join(root, e))
+            .withColumn(ORIGIN_COL, F.coalesce(F.col(ORIGIN_COL), F.lit(e)))
+            for e in entries
+        ],
+    )
+
+
+class BatchDirStore:
+    """Append-only parquet store of ``root/batch=X`` dirs, one per
+    committed batch (single writer per root).
+
+    - ``commit_batch`` is write-then-rename and idempotent: a batch that
+      is already committed (live or folded) is left untouched.
+    - ``compact`` folds every live dir into one ``batch=compacted-<md5>``
+      target, origin-attributed, and records the folded names in
+      ``_folded.json``.  ``has_batch`` and ``read(exclude_batch=...)``
+      keep resolving a folded batch through the manifest and the
+      ``origin_batch`` column, so a replayed pre-compaction batch judges
+      itself against the store as it stood before that batch.
+    - Opening sweeps stale staging dirs left by a crash mid-write.
+    """
+
+    def __init__(self, spark, root: str, schema):
+        self.spark = spark
+        self.root = root
+        self.schema = schema
+        os.makedirs(root, exist_ok=True)
+        sweep_staging(root)
+
+    def committed_batches(self) -> set[str]:
+        return batch_dirs(self.root)
+
+    def has_batch(self, batch_id: str) -> bool:
+        # a batch folded by compaction is STILL committed (replay heal)
+        entry = f"batch={batch_id}"
+        return entry in self.committed_batches() or entry in folded_batches(self.root)
+
+    def _scan(self, entries, schema):
+        if not entries:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.root, e) for e in entries]
+        )
+
+    def read(self, exclude_batch: str | None = None):
+        """Committed rows, optionally excluding one batch — a RETRY of a
+        committed batch must judge itself against the store as it stood
+        BEFORE that batch, or it would cut its own rows.  A folded batch
+        is excluded by its ``origin_batch`` attribution."""
+        from pyspark.sql import functions as F
+
+        entry = None if exclude_batch is None else f"batch={exclude_batch}"
+        live = sorted(self.committed_batches() - {entry})
+        if entry is None or entry not in folded_batches(self.root):
+            return self._scan(live, self.schema)
+        origin = F.col(ORIGIN_COL)
+        return (
+            self._scan(live, with_origin_schema(self.schema))
+            .filter(origin.isNull() | (origin != entry))
+            .drop(ORIGIN_COL)
+        )
+
+    def batch_rows(self, batch_id: str):
+        """The rows ``batch_id`` committed: its live dir, or after a fold
+        the rows attributed to it."""
+        from pyspark.sql import functions as F
+
+        entry = f"batch={batch_id}"
+        if entry in self.committed_batches():
+            return self._scan([entry], self.schema)
+        return (
+            self._scan(
+                sorted(self.committed_batches()), with_origin_schema(self.schema)
             )
-        merged = frames[0]
-        for f in frames[1:]:
-            merged = merged.unionByName(f)
-        merged = merged.dropDuplicates(
-            (dedup_cols + [ORIGIN_COL]) if dedup_cols else None
+            .filter(F.col(ORIGIN_COL) == entry)
+            .drop(ORIGIN_COL)
         )
-    else:
-        merged = spark.read.schema(schema).parquet(
-            *[os.path.join(root, b) for b in old]
+
+    def commit_batch(self, batch_id: str, df) -> None:
+        if not self.has_batch(batch_id):
+            commit_batch_dir(self.root, f"batch={batch_id}", df)
+
+    def fold(self, entries):
+        """The origin-attributed merge of ``entries``, deduplicated and
+        materialized (sources may vanish once it is published)."""
+        merged = origin_fold(self.spark, self.root, entries, self.schema)
+        return merged.dropDuplicates().localCheckpoint()
+
+    def retire(self, entries, target: str) -> None:
+        """Record ``entries`` (minus ``target``) as folded, then delete
+        them.  Call only after ``target`` is live."""
+        gone = [e for e in entries if e != target]
+        append_folded_manifest(self.root, gone)
+        for e in gone:
+            shutil.rmtree(os.path.join(self.root, e), ignore_errors=True)
+
+    def compact(self) -> int:
+        """Fold every live batch dir into one.  Returns the number of
+        dirs folded (0 when <= 1 live dir).
+
+        Crash-safe without coordination: the target is published through
+        the staged rename BEFORE any source is removed.  A crash in
+        between leaves rows duplicated across target and leftovers, which
+        every store read tolerates (they feed semi/anti joins); a retry
+        derives a NEW target folding everything, and the fold's
+        ``dropDuplicates`` keeps row counts from creeping."""
+        old = sorted(self.committed_batches())
+        if len(old) <= 1:
+            return 0
+        target = compacted_name("batch=compacted-", old)
+        merged = self.fold(old)
+        if target not in old:
+            commit_batch_dir(self.root, target, merged)
+        self.retire(old, target)
+        return len(old)
+
+
+class RetiringBatchTable:
+    """Append-only parquet table of ``root/batch-<id>`` dirs (no
+    ``key=value`` names, so partition inference never misreads them),
+    compacted through manifest commit points.
+
+    ``compact`` (1) stages the merged rows; (2) writes
+    ``_compaction/<target>.json`` naming the sources (atomic rename);
+    (3) renames the staged dir to the live target; (4) deletes the
+    sources.  A manifest retires its sources only while its target
+    exists, so a crash after (2) is inert and a crash after (3) never
+    reads a row twice; a retry re-derives a NEW target from the
+    then-live set.  Every manifest subsumes all names earlier manifests
+    retired, so deleting a superseded target never revives its sources.
+    Single writer per root."""
+
+    def __init__(self, spark, root: str):
+        self.spark = spark
+        self.root = root
+        self._retired_cache = None
+
+    def _manifests(self) -> list:
+        """Every compaction manifest as a (filename, dict) list."""
+        import json
+
+        mdir = os.path.join(self.root, "_compaction")
+        if not os.path.isdir(mdir):
+            return []
+        out = []
+        for f in sorted(os.listdir(mdir)):
+            if f.endswith(".json"):
+                with open(os.path.join(mdir, f)) as fh:
+                    out.append((f, json.load(fh)))
+        return out
+
+    def retired(self) -> set:
+        """Batch dirs folded into a compacted target WHOSE TARGET EXISTS.
+        Cached per process, keyed on the manifest listing and the
+        compacted-target listing: one cheap listdir per call, and a JSON
+        re-parse only when either set changed (an unconditional re-parse
+        per batch would grow with compaction history; an unkeyed cache
+        would miss manifests another process wrote)."""
+        mdir = os.path.join(self.root, "_compaction")
+        key = (
+            tuple(sorted(os.listdir(mdir))) if os.path.isdir(mdir) else (),
+            tuple(
+                sorted(
+                    d for d in os.listdir(self.root)
+                    if d.startswith("batch-compacted-")
+                )
+            )
+            if os.path.isdir(self.root)
+            else (),
         )
-        merged = (
-            merged.dropDuplicates(dedup_cols) if dedup_cols else merged.dropDuplicates()
+        if self._retired_cache is not None and self._retired_cache[0] == key:
+            return self._retired_cache[1]
+        retired: set = set()
+        for _, m in self._manifests():
+            if os.path.exists(os.path.join(self.root, m["target"])):
+                retired.update(m["sources"])
+        self._retired_cache = (key, retired)
+        return retired
+
+    def live_dirs(self) -> list:
+        """Batch dir names to read: every live ``batch-*`` dir minus the
+        retired ones (explicit paths, never a recursive read, so the
+        crash window between a target rename and its sources' removal
+        never double-counts)."""
+        if not os.path.isdir(self.root):
+            return []
+        retired = self.retired()
+        return sorted(
+            d for d in os.listdir(self.root)
+            if d.startswith("batch-") and d not in retired
         )
-    merged = merged.localCheckpoint()  # materialize BEFORE sources vanish
-    if not os.path.exists(os.path.join(root, entry)):
-        staged = stage_batch_dir(root, entry, merged)
-        publish_batch_dir(root, entry, staged)
-    if track_origin:
-        append_folded_manifest(root, [b for b in old if b != entry])
-    for b in old:
-        if b != entry:
-            shutil.rmtree(os.path.join(root, b), ignore_errors=True)
-    return len(old)
+
+    def paths(self, dirs) -> list:
+        return [os.path.join(self.root, d) for d in dirs]
+
+    def has(self, batch_id: str) -> bool:
+        """Live or retired: a folded batch stays present, so a very late
+        replay cannot resurrect it as a duplicate dir."""
+        entry = f"batch-{batch_id}"
+        live = os.path.exists(os.path.join(self.root, entry))
+        return live or entry in self.retired()
+
+    def commit(self, batch_id: str, df) -> None:
+        """Idempotent per-batch append (write-if-absent)."""
+        if not self.has(batch_id):
+            commit_batch_dir(self.root, f"batch-{batch_id}", df)
+
+    def compact(self, fold) -> int:
+        """Fold all live dirs into one target; ``fold(dirs)`` returns the
+        merged rows of the named dirs.  Returns the number of dirs
+        folded (0 when <= 1 live dir)."""
+        import json
+
+        # a prior crash between target rename and source delete leaves
+        # retired sources on disk (reads already exclude them): remove
+        # them so the file count actually shrinks
+        self._retired_cache = None
+        for b in self.retired():
+            shutil.rmtree(os.path.join(self.root, b), ignore_errors=True)
+        dirs = self.live_dirs()
+        if len(dirs) <= 1:
+            return 0
+        target = compacted_name("batch-compacted-", dirs)
+        staged = stage_batch_dir(self.root, target, fold(dirs))
+        mdir = os.path.join(self.root, "_compaction")
+        os.makedirs(mdir, exist_ok=True)
+        prior = self._manifests()
+        retired = set(dirs).union(*(m["sources"] for _, m in prior)) - {target}
+        mtmp = os.path.join(mdir, f".{target}.json.tmp")
+        with open(mtmp, "w") as fh:
+            json.dump({"target": target, "sources": sorted(retired)}, fh)
+        os.rename(mtmp, os.path.join(mdir, f"{target}.json"))
+        publish_batch_dir(self.root, target, staged)
+        for d in dirs:
+            shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
+        # superseded manifests are redundant now: per-batch commits then
+        # parse ONE file, not one per compaction ever run
+        for f, _ in prior:
+            os.remove(os.path.join(mdir, f))
+        self._retired_cache = None
+        return len(dirs)
 
 
 # ---------------------------------------------------------------------------

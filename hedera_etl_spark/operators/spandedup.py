@@ -428,7 +428,7 @@ def _span_hash_schema():
     # ``n`` (r15, VERDICT r14 #6) = SHIPPED occurrences of the hash in
     # that committed batch, so the history probe can honor min_count>2.
     # Nullable: stores written before r15 carry presence-only rows, and
-    # hashes() coalesces a missing n to 1 (each old row was committed
+    # read() coalesces a missing n to 1 (each old row was committed
     # DISTINCT, i.e. "at least one shipped occurrence" — the exact
     # information the old min_count=2 path consumed, so old stores stay
     # correct at min_count=2 and conservatively UNDER-count — never
@@ -448,14 +448,14 @@ def _span_hash_schema():
     )
 
 
-class SpanHashStore:
+class SpanHashStore(fsutil.BatchDirStore):
     """Append-only parquet store of ACCEPTED span hashes (one xxhash64
     per surviving w-token window) — the persisted history that lets the
     continuous-ingest pipeline cut repeated substrings ACROSS epochs,
     completing the dedup-granularity matrix (content / URL / paragraph
-    / semantic stores already exist; ParagraphHashStore defines the
-    protocol this mirrors: fsutil batch-dir commits, single rename,
-    single-writer per path, replay-heal across compaction).
+    / semantic stores already exist).  Commit, replay and compaction:
+    ``fsutil.BatchDirStore``; this class adds only the ``(span_hash, n,
+    b)`` commit projection and the read-side count coalesce.
 
     Storage honesty (the reason published ExactSubstr is a BATCH job):
     the history carries ~one 8-byte hash per accepted TOKEN, i.e. the
@@ -469,76 +469,27 @@ class SpanHashStore:
     def __init__(self, spark, path: str):
         import os
 
-        self.spark = spark
-        self.path = path
-        self.hashes_dir = os.path.join(path, "hashes")
-        os.makedirs(self.hashes_dir, exist_ok=True)
-        fsutil.sweep_staging(self.hashes_dir)
-
-    def committed_batches(self) -> set:
-        return fsutil.batch_dirs(self.hashes_dir)
-
-    def has_batch(self, batch_id: str) -> bool:
-        return f"batch={batch_id}" in self.committed_batches() or (
-            f"batch={batch_id}" in fsutil.folded_batches(self.hashes_dir)
+        super().__init__(
+            spark, os.path.join(path, "hashes"), _span_hash_schema()
         )
+        self.hashes_dir = self.root
 
-    def hashes(self, exclude_batch: str | None = None) -> DataFrame:
-        """Committed hashes, optionally excluding one batch (a RETRY of
-        a committed batch must judge against the store as it stood
-        before that batch).  Exclusion survives compaction via the
-        ``origin_batch`` attribution — same replay-heal semantics as
-        ParagraphHashStore.hashes."""
-        import os
-
-        entry = f"batch={exclude_batch}" if exclude_batch is not None else None
-        batches = sorted(self.committed_batches())
-        if entry is not None:
-            batches = [b for b in batches if b != entry]
-        if not batches:
-            return self.spark.createDataFrame([], _span_hash_schema())
-        if entry is not None and entry in fsutil.folded_batches(self.hashes_dir):
-            ext = fsutil.with_origin_schema(_span_hash_schema())
-            out = (
-                self.spark.read.schema(ext)
-                .parquet(*[os.path.join(self.hashes_dir, b) for b in batches])
-                .filter(
-                    F.col(fsutil.ORIGIN_COL).isNull()
-                    | (F.col(fsutil.ORIGIN_COL) != entry)
-                )
-                .drop(fsutil.ORIGIN_COL)
-            )
-        else:
-            out = self.spark.read.schema(_span_hash_schema()).parquet(
-                *[os.path.join(self.hashes_dir, b) for b in batches]
-            )
+    def read(self, exclude_batch: str | None = None) -> DataFrame:
         # presence-only rows from pre-r15 stores read n as NULL -> 1
-        return out.withColumn("n", F.coalesce(F.col("n"), F.lit(1)))
+        return super().read(exclude_batch).withColumn(
+            "n", F.coalesce(F.col("n"), F.lit(1))
+        )
 
     def commit_batch(self, batch_id: str, hashes: DataFrame) -> None:
-        """``hashes`` is either (span_hash, n) — one row per hash with
-        its shipped-occurrence count, the r15 form — or a bare
-        span_hash column from a pre-r15 caller, stored as n=1 per row
-        (presence)."""
-        entry = f"batch={batch_id}"
-        if self.has_batch(batch_id):
-            return
-        if "n" not in hashes.columns:
-            hashes = hashes.withColumn("n", F.lit(1).cast("long"))
-        hashes = hashes.select(
-            "span_hash",
-            F.col("n").cast("long").alias("n"),
-            F.lit(batch_id).alias("b"),
-        )
-        staged = fsutil.stage_batch_dir(self.hashes_dir, entry, hashes)
-        fsutil.publish_batch_dir(self.hashes_dir, entry, staged)
-
-    def compact(self) -> int:
-        """Fold all batch dirs into one (file-count maintenance after
-        thousands of epochs), replay-heal preserved via origin
-        attribution — the shared fsutil primitive."""
-        return fsutil.compact_batch_dirs(
-            self.spark, self.hashes_dir, _span_hash_schema(), track_origin=True
+        """``hashes`` is (span_hash, n): one row per hash with its
+        shipped-occurrence count."""
+        super().commit_batch(
+            batch_id,
+            hashes.select(
+                "span_hash",
+                F.col("n").cast("long").alias("n"),
+                F.lit(batch_id).alias("b"),
+            ),
         )
 
 
@@ -625,7 +576,7 @@ def incremental_exact_substr_plan(
     counted = rows.withColumn(
         "__cnt", F.count(F.lit(1)).over(win)
     ).localCheckpoint(eager=False)
-    history = store.hashes(exclude_batch=batch_id).withColumnRenamed(
+    history = store.read(exclude_batch=batch_id).withColumnRenamed(
         "span_hash", "h"
     )
     batch_hashes = counted.select("h").distinct()

@@ -9,11 +9,10 @@ hashing runs.  What the store keeps per epoch is one
 (canonical_url, doc_id) row per first-seen URL — fixed-width, tiny
 next to text.
 
-Store protocol: identical to ``ParagraphHashStore`` (append-only
-``urls/batch=X`` dirs, single-rename commits via the shared
-``fsutil`` batch-dir primitives, ``compact()`` with the r11 replay
-heal — folded rows keep ``origin_batch`` and the ``_folded.json``
-manifest keeps ``has_batch``/exclusion resolving after the dirs fold).
+Store protocol: ``fsutil.BatchDirStore`` (append-only ``urls/batch=X``
+dirs, single-rename commits, ``compact()`` with the replay heal —
+folded rows keep ``origin_batch`` and the ``_folded.json`` manifest
+keeps ``has_batch``/exclusion resolving after the dirs fold).
 
 Scale shape per epoch (the inverted-probe discipline, VERDICT r9 #1):
 canonicalization is a pure JVM projection; the batch's OWN canonical
@@ -71,67 +70,13 @@ def _url_schema() -> T.StructType:
     )
 
 
-class CanonicalUrlStore:
+class CanonicalUrlStore(fsutil.BatchDirStore):
     """Append-only parquet store of first-seen canonical URLs: one
     ``urls/batch=X`` directory per committed epoch (single-writer per
-    store path — the CorpusSignatureStore contract)."""
+    store path).  Commit, replay and compaction: ``fsutil.BatchDirStore``."""
 
     def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self.urls_dir = os.path.join(path, "urls")
-        os.makedirs(self.urls_dir, exist_ok=True)
-        fsutil.sweep_staging(self.urls_dir)
-
-    def committed_batches(self) -> set[str]:
-        return fsutil.batch_dirs(self.urls_dir)
-
-    def has_batch(self, batch_id: str) -> bool:
-        # a batch folded by compaction is STILL committed (replay heal)
-        return f"batch={batch_id}" in self.committed_batches() or (
-            f"batch={batch_id}" in fsutil.folded_batches(self.urls_dir)
-        )
-
-    def urls(self, exclude_batch: str | None = None) -> DataFrame:
-        """Committed (canonical_url, doc_id) rows, optionally excluding
-        one batch — a RETRY must judge against the store as it stood
-        before that batch or it would drop its own rows.  Exclusion
-        survives compaction via the ``origin_batch`` attribution."""
-        entry = f"batch={exclude_batch}" if exclude_batch is not None else None
-        batches = sorted(self.committed_batches())
-        if entry is not None:
-            batches = [b for b in batches if b != entry]
-        if not batches:
-            return self.spark.createDataFrame([], _url_schema())
-        paths = [os.path.join(self.urls_dir, b) for b in batches]
-        if entry is not None and entry in fsutil.folded_batches(self.urls_dir):
-            ext = fsutil.with_origin_schema(_url_schema())
-            return (
-                self.spark.read.schema(ext)
-                .parquet(*paths)
-                .filter(
-                    F.col(fsutil.ORIGIN_COL).isNull()
-                    | (F.col(fsutil.ORIGIN_COL) != entry)
-                )
-                .drop(fsutil.ORIGIN_COL)
-            )
-        return self.spark.read.schema(_url_schema()).parquet(*paths)
-
-    def commit_batch(self, batch_id: str, urls: DataFrame) -> None:
-        """Write-then-rename commit; idempotent under retries."""
-        entry = f"batch={batch_id}"
-        if self.has_batch(batch_id):
-            return
-        staged = fsutil.stage_batch_dir(self.urls_dir, entry, urls)
-        fsutil.publish_batch_dir(self.urls_dir, entry, staged)
-
-    def compact(self) -> int:
-        """Fold all committed epoch dirs into one (the small-file
-        maintenance of the sibling stores); replays heal across it
-        (``track_origin`` + manifest — see fsutil.compact_batch_dirs)."""
-        return fsutil.compact_batch_dirs(
-            self.spark, self.urls_dir, _url_schema(), track_origin=True
-        )
+        super().__init__(spark, os.path.join(path, "urls"), _url_schema())
 
 
 def incremental_url_dedup(
@@ -168,7 +113,7 @@ def incremental_url_dedup(
         F.min(id_col).alias("__keeper")
     )
     # history probe, inverted: the batch's canonical set broadcasts
-    history = store.urls(exclude_batch=batch_id)
+    history = store.read(exclude_batch=batch_id)
     hits = inverted_store_probe(
         history, keep_map.select(F.col("canonical_url")), "canonical_url"
     ).localCheckpoint(eager=True)

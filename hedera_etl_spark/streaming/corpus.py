@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from hedera_etl_spark import fsutil
 from hedera_etl_spark.operators.incremental_dedup import (
     CorpusSignatureStore,
     incremental_dedup_batch,
@@ -94,6 +95,7 @@ class CorpusIngestPipeline:
         self.spark = spark
         self.input_dir = input_dir
         self.corpus_table = corpus_table
+        self._corpus_batches = fsutil.RetiringBatchTable(spark, corpus_table)
         # r15: default the signature hash to the production xxhash64 mode
         # prepare_training_corpus already uses (zero digest calls vs the
         # interpreted md5-hex lambdas — measured -41% on the signature
@@ -168,6 +170,10 @@ class CorpusIngestPipeline:
         # rows; a replay whose ledger already landed skips all ledger
         # work, so nothing is ever recorded twice.
         self.ledger_dir = ledger_dir
+        self._ledger_batches = (
+            None if ledger_dir is None
+            else fsutil.RetiringBatchTable(spark, ledger_dir)
+        )
         # canonical-URL dedup (the CCNet/RefinedWeb FIRST stage): when
         # the input JSON carries a URL field, each epoch drops recrawls
         # of any canonical URL committed by an earlier epoch (plus
@@ -256,7 +262,6 @@ class CorpusIngestPipeline:
         the decision input — never from the caller's frame."""
         import json
         import os
-        import shutil
 
         if version == "none":
             raise ValueError("eval_version 'none' is reserved")
@@ -267,13 +272,7 @@ class CorpusIngestPipeline:
         dim = _ref_shingle_dim(eval_docs, self.decontam_n, "text")
         if not os.path.isdir(vdir):
             os.makedirs(self._eval_dir, exist_ok=True)
-            tmp = os.path.join(self._eval_dir, f".version={version}.__new")
-            shutil.rmtree(tmp, ignore_errors=True)
-            dim.write.mode("overwrite").parquet(tmp)
-            if not os.path.isdir(vdir):
-                os.rename(tmp, vdir)
-            else:
-                shutil.rmtree(tmp, ignore_errors=True)
+            fsutil.commit_batch_dir(self._eval_dir, f"version={version}", dim)
         recorded = None
         if os.path.exists(fpath):
             with open(fpath) as fh:
@@ -368,102 +367,6 @@ class CorpusIngestPipeline:
             F.col("doc_id").isNotNull() & F.col("text").isNotNull()
         )
 
-    def _commit_corpus_batch(self, accepted: DataFrame, bid: str) -> None:
-        """Idempotent per-batch corpus append: stage to a hidden sibling,
-        rename in only if the live batch directory is absent.  Covers the
-        crash window where the store committed but the append had not
-        (the replayed decision regenerates the identical rows), and the
-        window where the append landed but the checkpoint had not (the
-        directory exists — nothing is written twice).  Directory names
-        avoid ``key=value`` so partition inference never misreads them.
-        A batch RETIRED by compaction counts as present (its rows live in
-        the compacted target), so a very late replay cannot resurrect
-        it as a duplicate directory."""
-        import os
-        import shutil
-
-        live = os.path.join(self.corpus_table, f"batch-{bid}")
-        if os.path.exists(live) or f"batch-{bid}" in self._retired_batches():
-            return
-        tmp = os.path.join(self.corpus_table, f".batch-{bid}.__new")
-        shutil.rmtree(tmp, ignore_errors=True)
-        accepted.write.mode("overwrite").parquet(tmp)
-        if not os.path.exists(live):
-            os.rename(tmp, live)
-        else:  # lost race with a concurrent attempt
-            shutil.rmtree(tmp, ignore_errors=True)
-
-    def _manifests(self) -> list:
-        """Every compaction manifest as a (filename, dict) list."""
-        import json
-        import os
-
-        mdir = os.path.join(self.corpus_table, "_compaction")
-        if not os.path.isdir(mdir):
-            return []
-        out = []
-        for f in sorted(os.listdir(mdir)):
-            if not f.endswith(".json"):
-                continue
-            with open(os.path.join(mdir, f)) as fh:
-                out.append((f, json.load(fh)))
-        return out
-
-    def _retired_batches(self) -> set:
-        """Batch dirs folded into a compacted target WHOSE TARGET EXISTS
-        — the existence check is what makes the compaction manifest a
-        commit point rather than a promise (a manifest written before
-        the target rename is inert until the rename lands).  Retirement
-        is TRANSITIVE by construction: every new manifest subsumes all
-        previously-retired names (see ``compact_corpus``), so deleting a
-        superseded target never revives its sources.  Cached per
-        process (``compact_corpus`` is the only in-process writer and
-        invalidates it); cross-process compactions fall under the same
-        drained-stream caveat as the store's compact().  The cache keys
-        on the manifest-dir listing, so one cheap listdir per call and a
-        JSON re-parse only when the manifest set actually changed (an
-        unconditional per-batch re-parse would grow with compaction
-        history; an unkeyed cache would miss externally-written
-        manifests)."""
-        import os
-
-        mdir = os.path.join(self.corpus_table, "_compaction")
-        key = (
-            tuple(sorted(os.listdir(mdir))) if os.path.isdir(mdir) else (),
-            # target EXISTENCE is part of retirement (a manifest without
-            # its target is inert), so target dirs join the cache key
-            tuple(
-                sorted(
-                    d
-                    for d in os.listdir(self.corpus_table)
-                    if d.startswith("batch-compacted-")
-                )
-            )
-            if os.path.isdir(self.corpus_table)
-            else (),
-        )
-        cached = getattr(self, "_retired_cache", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        retired: set = set()
-        for _, m in self._manifests():
-            if os.path.exists(os.path.join(self.corpus_table, m["target"])):
-                retired.update(m["sources"])
-        self._retired_cache = (key, retired)
-        return retired
-
-    def _live_batch_dirs(self) -> list:
-        import os
-
-        if not os.path.isdir(self.corpus_table):
-            return []
-        retired = self._retired_batches()
-        return sorted(
-            d
-            for d in os.listdir(self.corpus_table)
-            if d.startswith("batch-") and d not in retired
-        )
-
     def read_corpus(self, as_of: str | None = None) -> DataFrame:
         """The corpus as one DataFrame: explicit per-batch paths (live
         batches minus compaction-retired ones) rather than a blind
@@ -478,16 +381,14 @@ class CorpusIngestPipeline:
         filter by it.  A corpus compacted BEFORE origin tracking has
         NULL origins — as-of reads over it raise rather than silently
         dropping those rows."""
-        dirs = self._live_batch_dirs()
+        table = self._corpus_batches
+        dirs = table.live_dirs()
         if not dirs:
             return self.spark.createDataFrame([], DOC_SCHEMA)
-        import os
         import re
 
         if as_of is None:
-            return self.spark.read.schema(DOC_SCHEMA).parquet(
-                *[os.path.join(self.corpus_table, d) for d in dirs]
-            )
+            return self.spark.read.schema(DOC_SCHEMA).parquet(*table.paths(dirs))
 
         def _n(name: str):
             m = re.fullmatch(r"batch-stream-(\d+)", name)
@@ -499,22 +400,16 @@ class CorpusIngestPipeline:
                 f"as_of must be a stream epoch id like 'stream-7', got "
                 f"{as_of!r}"
             )
-        from hedera_etl_spark import fsutil
-
         plain = [d for d in dirs if _n(d) is not None and _n(d) <= bound]
         compacted = [d for d in dirs if _n(d) is None]
         frames = []
         if plain:
             frames.append(
-                self.spark.read.schema(DOC_SCHEMA).parquet(
-                    *[os.path.join(self.corpus_table, d) for d in plain]
-                )
+                self.spark.read.schema(DOC_SCHEMA).parquet(*table.paths(plain))
             )
         if compacted:
             ext = fsutil.with_origin_schema(DOC_SCHEMA)
-            folded = self.spark.read.schema(ext).parquet(
-                *[os.path.join(self.corpus_table, d) for d in compacted]
-            )
+            folded = self.spark.read.schema(ext).parquet(*table.paths(compacted))
             origin_n = F.regexp_extract(
                 F.col(fsutil.ORIGIN_COL), r"^batch-stream-(\d+)$", 1
             )
@@ -554,29 +449,12 @@ class CorpusIngestPipeline:
         n_docs) — resolved from live batch dirs plus the origin
         attribution inside compacted targets.  Dimension-sized output
         (one row per epoch ever accepted)."""
-        dirs = self._live_batch_dirs()
+        dirs = self._corpus_batches.live_dirs()
         if not dirs:
             return self.spark.createDataFrame(
                 [], "epoch string, n_docs long"
             )
-        import os
-
-        from hedera_etl_spark import fsutil
-
-        ext = fsutil.with_origin_schema(DOC_SCHEMA)
-        frames = []
-        for d in dirs:
-            frames.append(
-                self.spark.read.schema(ext)
-                .parquet(os.path.join(self.corpus_table, d))
-                .withColumn(
-                    fsutil.ORIGIN_COL,
-                    F.coalesce(F.col(fsutil.ORIGIN_COL), F.lit(d)),
-                )
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
+        out = fsutil.origin_fold(self.spark, self.corpus_table, dirs, DOC_SCHEMA)
         return (
             out.groupBy(
                 F.regexp_replace(F.col(fsutil.ORIGIN_COL), "^batch-", "").alias(
@@ -594,97 +472,26 @@ class CorpusIngestPipeline:
         listing dominates open cost).  Returns the number of batch dirs
         folded (0 when there is nothing to do).
 
-        Crash-safe without coordination, via a manifest commit point:
-        (1) stage the merged rows; (2) write ``_compaction/<target>.json``
-        naming the sources (atomic rename); (3) rename the staged dir to
-        the live target; (4) delete the sources.  A crash after (2) is
-        inert (no target yet — sources still read); after (3) the
-        manifest + existing target EXCLUDE the sources from every read,
-        so no window double-counts; a retry after any crash re-derives a
-        NEW target from the then-live set.  ``dropDuplicates(doc_id)``
-        guards the merge (corpus rows are unique by the effectively-once
-        invariant; the guard keeps a violated invariant from compounding).
-        Caveat (same as the store): run past the replay horizon of a
-        drained/checkpointed stream — replays of retired batches are
-        absorbed by the ``_commit_corpus_batch`` retired check."""
-        import hashlib
-        import json
-        import os
-        import shutil
-
-        # cleanup pass: a prior crash between target-rename and source
-        # -delete leaves retired source dirs orphaned on disk (reads
-        # already exclude them) — remove them now so the file count
-        # actually shrinks and no later manifest shuffle can see them
-        self._retired_cache = None
-        for b in self._retired_batches():
-            shutil.rmtree(os.path.join(self.corpus_table, b), ignore_errors=True)
-
-        batches = self._live_batch_dirs()
-        if len(batches) <= 1:
-            return 0
-        target = (
-            "batch-compacted-"
-            + hashlib.md5("|".join(batches).encode()).hexdigest()[:12]
+        Crash-safe through the manifest commit point of
+        ``fsutil.RetiringBatchTable``.  Each row keeps its epoch in
+        ``origin_batch`` (``read_corpus(as_of=...)`` depends on it), and
+        ``dropDuplicates(doc_id)`` guards the merge (corpus rows are
+        unique by the effectively-once invariant; the guard keeps a
+        violated invariant from compounding).  Caveat (same as the
+        store): run past the replay horizon of a drained/checkpointed
+        stream — replays of retired batches are absorbed by the
+        table's retired check."""
+        return self._corpus_batches.compact(
+            lambda dirs: fsutil.origin_fold(
+                self.spark, self.corpus_table, dirs, DOC_SCHEMA
+            ).dropDuplicates(["doc_id"])
         )
-        # per-row epoch attribution survives the fold (r12): each source
-        # keeps its existing origin (nested compaction) or gains its dir
-        # name — read_corpus(as_of=...) time-travel depends on it
-        from hedera_etl_spark import fsutil
-
-        ext = fsutil.with_origin_schema(DOC_SCHEMA)
-        frames = []
-        for b in batches:
-            frames.append(
-                self.spark.read.schema(ext)
-                .parquet(os.path.join(self.corpus_table, b))
-                .withColumn(
-                    fsutil.ORIGIN_COL,
-                    F.coalesce(F.col(fsutil.ORIGIN_COL), F.lit(b)),
-                )
-            )
-        merged = frames[0]
-        for f in frames[1:]:
-            merged = merged.unionByName(f)
-        merged = merged.dropDuplicates(["doc_id"])
-        tmp = os.path.join(self.corpus_table, f".{target}.__new")
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(tmp)
-        mdir = os.path.join(self.corpus_table, "_compaction")
-        os.makedirs(mdir, exist_ok=True)
-        # TRANSITIVE retirement: the new manifest subsumes every name any
-        # prior manifest retired (a later compaction deletes superseded
-        # targets, so retirement must not depend on them surviving) —
-        # once retired, always retired
-        prior = self._manifests()
-        all_retired = set(batches)
-        for _, m in prior:
-            all_retired.update(m["sources"])
-        all_retired.discard(target)
-        mtmp = os.path.join(mdir, f".{target}.json.tmp")
-        with open(mtmp, "w") as fh:
-            json.dump({"target": target, "sources": sorted(all_retired)}, fh)
-        os.rename(mtmp, os.path.join(mdir, f"{target}.json"))
-        live = os.path.join(self.corpus_table, target)
-        if not os.path.exists(live):
-            os.rename(tmp, live)
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-        for b in batches:
-            shutil.rmtree(os.path.join(self.corpus_table, b), ignore_errors=True)
-        # superseded manifests are now redundant (the new one subsumes
-        # them) — drop them so per-batch commits parse ONE file, not
-        # O(#compactions ever)
-        for f, _ in prior:
-            os.remove(os.path.join(mdir, f))
-        self._retired_cache = None
-        return len(batches)
 
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
         m = self.metrics
         bid = f"stream-{batch_id}"
         ledger = None
-        if self.ledger_dir is not None and not self._has_ledger_batch(bid):
+        if self.ledger_dir is not None and not self._ledger_batches.has(bid):
             if self.store.has_batch(bid) and not self._is_latest_epoch(bid):
                 # the heal re-derives against the store MINUS this epoch,
                 # which equals store-as-of-before-the-epoch only while no
@@ -954,115 +761,24 @@ class CorpusIngestPipeline:
             m.accepted += stats.accepted
             m.dropped_exact += stats.exact_in_batch + stats.exact_vs_store
             m.dropped_near += stats.near_vs_store + stats.near_in_batch
-        self._commit_corpus_batch(accepted.select("doc_id", "text"), bid)
+        self._corpus_batches.commit(bid, accepted.select("doc_id", "text"))
         if ledger is not None and ledger.n_stages:
             self._commit_ledger_batch(ledger, bid)
 
-    def _ledger_retired(self) -> set:
-        """Ledger batch dirs folded into a compacted target whose target
-        exists — same manifest convention as the corpus table."""
-        import json
-        import os
-
-        mdir = os.path.join(self.ledger_dir, "_compaction")
-        if not os.path.isdir(mdir):
-            return set()
-        retired: set = set()
-        for f in sorted(os.listdir(mdir)):
-            if not f.endswith(".json"):
-                continue
-            with open(os.path.join(mdir, f)) as fh:
-                m = json.load(fh)
-            if os.path.exists(os.path.join(self.ledger_dir, m["target"])):
-                retired.update(m["sources"])
-        return retired
-
-    def _has_ledger_batch(self, bid: str) -> bool:
-        import os
-
-        # a folded epoch is STILL ledgered (the heal gate must not
-        # re-derive and double-write an epoch whose rows live in a
-        # compacted target)
-        return os.path.isdir(
-            os.path.join(self.ledger_dir, f"batch-{bid}")
-        ) or f"batch-{bid}" in self._ledger_retired()
-
-    def _live_ledger_dirs(self) -> list:
-        import os
-
-        if self.ledger_dir is None or not os.path.isdir(self.ledger_dir):
-            return []
-        retired = self._ledger_retired()
-        return sorted(
-            d
-            for d in os.listdir(self.ledger_dir)
-            if d.startswith("batch-") and d not in retired
-        )
-
     def compact_ledger(self) -> int:
         """Fold all live per-epoch ledger directories into one — the
-        same small-file maintenance every sibling store performs (after
-        many micro-batches the per-epoch listing dominates open cost).
-        Rows already carry their ``epoch`` column, so the fold needs no
-        extra attribution; the manifest commit point (stage target →
-        write ``_compaction/<target>.json`` naming the sources → rename
-        target live → delete sources) makes every crash window read
-        each row exactly once, exactly like ``compact_corpus``.
-        Returns the number of dirs folded."""
-        import hashlib
-        import json
-        import os
-        import shutil
-
-        # clear leftovers of a prior crash between target-rename and
-        # source-delete (reads already exclude them)
-        for b in self._ledger_retired():
-            shutil.rmtree(os.path.join(self.ledger_dir, b), ignore_errors=True)
-        dirs = self._live_ledger_dirs()
-        if len(dirs) <= 1:
-            return 0
-        target = (
-            "batch-compacted-"
-            + hashlib.md5("|".join(dirs).encode()).hexdigest()[:12]
-        )
-        merged = self.spark.read.parquet(
-            *[os.path.join(self.ledger_dir, d) for d in dirs]
-        )
-        tmp = os.path.join(self.ledger_dir, f".{target}.__new")
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(tmp)
-        mdir = os.path.join(self.ledger_dir, "_compaction")
-        os.makedirs(mdir, exist_ok=True)
-        prior = [
-            f for f in sorted(os.listdir(mdir)) if f.endswith(".json")
-        ]
-        all_retired = set(dirs)
-        for f in prior:  # transitive: once retired, always retired
-            with open(os.path.join(mdir, f)) as fh:
-                all_retired.update(json.load(fh)["sources"])
-        all_retired.discard(target)
-        mtmp = os.path.join(mdir, f".{target}.json.tmp")
-        with open(mtmp, "w") as fh:
-            json.dump({"target": target, "sources": sorted(all_retired)}, fh)
-        os.rename(mtmp, os.path.join(mdir, f"{target}.json"))
-        live = os.path.join(self.ledger_dir, target)
-        if not os.path.exists(live):
-            os.rename(tmp, live)
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-        for d in dirs:
-            shutil.rmtree(os.path.join(self.ledger_dir, d), ignore_errors=True)
-        for f in prior:  # superseded manifests are redundant now
-            os.remove(os.path.join(mdir, f))
-        return len(dirs)
+        same small-file maintenance and manifest commit point as
+        ``compact_corpus``.  Rows already carry their ``epoch`` column,
+        so the fold needs no extra attribution.  Returns the number of
+        dirs folded."""
+        table = self._ledger_batches
+        return table.compact(lambda dirs: self.spark.read.parquet(*table.paths(dirs)))
 
     def _is_latest_epoch(self, bid: str) -> bool:
         """True when no committed signature-store epoch is newer than
         ``bid`` (stream epoch ids are ``stream-<n>``, ordered by n;
         folded batches count — compaction does not reorder time)."""
         import re
-
-        from hedera_etl_spark import fsutil
 
         def _n(entry: str):
             m = re.fullmatch(r"batch=stream-(\d+)", entry)
@@ -1071,46 +787,26 @@ class CorpusIngestPipeline:
         mine = _n(f"batch={bid}")
         if mine is None:
             return True  # non-stream id: no ordering info
-        committed = self.store.committed_batches() | fsutil.folded_batches(
-            self.store.content_dir
-        )
         return not any(
-            n is not None and n > mine for n in (_n(e) for e in committed)
+            n is not None and n > mine
+            for n in (_n(e) for e in self.store.known_batches())
         )
 
     def _commit_ledger_batch(self, ledger, bid: str) -> None:
-        """Idempotent per-epoch provenance append — same staged-rename
-        protocol as the corpus batch dirs."""
-        import os
-        import shutil
-
-        live = os.path.join(self.ledger_dir, f"batch-{bid}")
-        if os.path.exists(live):
-            return
-        os.makedirs(self.ledger_dir, exist_ok=True)
-        tmp = os.path.join(self.ledger_dir, f".batch-{bid}.__new")
-        shutil.rmtree(tmp, ignore_errors=True)
-        ledger.df().withColumn("epoch", F.lit(bid)).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        if not os.path.exists(live):
-            os.rename(tmp, live)
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
+        """Idempotent per-epoch provenance append (a folded epoch stays
+        ledgered, so the heal gate never re-derives it)."""
+        self._ledger_batches.commit(bid, ledger.df().withColumn("epoch", F.lit(bid)))
 
     def read_ledger(self) -> DataFrame:
         """Every epoch's removal-provenance records as one frame (live
         dirs minus compaction-retired ones, so the crash window between
         a compaction target's rename and its sources' removal never
         double-counts — the corpus-table read discipline)."""
-        import os
-
-        dirs = self._live_ledger_dirs()
+        table = self._ledger_batches
+        dirs = table.live_dirs() if table is not None else []
         if not dirs:
             raise ValueError("no ledger_dir configured / nothing written yet")
-        return self.spark.read.parquet(
-            *[os.path.join(self.ledger_dir, d) for d in dirs]
-        )
+        return self.spark.read.parquet(*table.paths(dirs))
 
     def start(self, available_now: bool = True) -> StreamingQuery:
         writer = (

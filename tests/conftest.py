@@ -22,11 +22,12 @@ def spark():
 # Slow-tail profile (r16, VERDICT r15 #2): the full suite outgrew the
 # driver's verify window (625 tests / ~51 min of Spark-bound wall — the
 # r15 driver run truncated at ~45% with zero failures recorded).  The
-# tests below are the measured >= 10 s tail (full --durations=0 run,
-# 2026-08-18): soaks, ladders, multi-epoch replay/compaction scenarios
-# and crash-window drills — 63 tests carrying ~25 of those minutes.
-# They SKIP by default so a plain `pytest tests/ -x -q` completes inside
-# the window, and run with either
+# measured >= 10 s tail (full --durations=0 run, 2026-08-18: soaks,
+# ladders, multi-epoch replay/compaction scenarios and crash-window
+# drills — 63 tests carrying ~25 of those minutes) carries
+# ``@pytest.mark.slow`` at its definition, so a renamed test keeps its
+# lane.  Those tests SKIP by default so a plain `pytest tests/ -x -q`
+# completes inside the window, and run with either
 #
 #     SPARK_GRAFT_RUN_SLOW=1 python -m pytest tests/ -q     # env opt-in
 #     python -m pytest tests/ -q --run-slow                 # flag opt-in
@@ -36,71 +37,6 @@ def spark():
 # prepare, test_second_batch_dedups_against_store for the store path,
 # test_streamed_batches_dedup_against_history for the streaming epoch,
 # test_pipeline_exact_substr_stage for span dedup).
-SLOW_TESTS = {
-    "tests/test_cap_observability.py::test_ivf_history_cap_counter",
-    "tests/test_cap_observability.py::test_ivf_history_duplicate_rows_detected_and_neutralized",
-    "tests/test_cap_observability.py::test_ivf_primary_cap_counter",
-    "tests/test_cap_observability.py::test_semantic_lost_excludes_history_dropped_clusters",
-    "tests/test_cap_observability.py::test_semantic_lost_excludes_member_own_history_hit",
-    "tests/test_components.py::TestScoreKeeper::test_pipeline_keeper_score_col",
-    "tests/test_corpus_stream.py::TestCorpusCompaction::test_second_compaction_keeps_retirement_transitive",
-    "tests/test_corpus_stream.py::test_cli_compact_after_folds_all_three_stores",
-    "tests/test_corpus_stream.py::test_eval_rotation_versioned_and_replay_stable",
-    "tests/test_corpus_stream.py::test_ledger_compaction_folds_and_heal_gate_survives",
-    "tests/test_corpus_stream.py::test_ledger_crash_window_heals_on_replay",
-    "tests/test_corpus_stream.py::test_ledger_heal_refuses_non_latest_epoch",
-    "tests/test_corpus_stream.py::test_read_corpus_as_of_and_epoch_lineage",
-    "tests/test_corpus_stream.py::test_read_corpus_as_of_refuses_unattributed_compaction",
-    "tests/test_corpus_stream.py::test_rejected_doc_paragraphs_stay_claimable",
-    "tests/test_corpus_stream.py::test_rejected_doc_spans_stay_claimable",
-    "tests/test_corpus_stream.py::test_streaming_decontamination_guards_the_stores",
-    "tests/test_corpus_stream.py::test_streaming_exact_substr_across_epochs",
-    "tests/test_corpus_stream.py::test_streaming_paragraph_dedup_across_epochs",
-    "tests/test_corpus_stream.py::test_streaming_removal_ledger_partitions_each_epoch",
-    "tests/test_corpus_stream.py::test_streaming_text_classifier_floor",
-    "tests/test_corpus_stream.py::test_streaming_url_dedup_across_epochs",
-    "tests/test_corpus_stream.py::test_url_commit_policy_post_decontam_keeps_urls_reclaimable",
-    "tests/test_dedupe_job.py::test_full_dedup_heals_history",
-    "tests/test_incremental_dedup.py::test_compact_crash_window_converges",
-    "tests/test_incremental_dedup.py::test_compact_preserves_dedup_behavior",
-    "tests/test_incremental_dedup.py::test_crash_window_heals_and_batch_reruns",
-    "tests/test_incremental_dedup.py::test_replay_of_folded_batch_heals_across_compaction",
-    "tests/test_incremental_dedup.py::test_replay_with_ledger_heals_across_compaction",
-    "tests/test_incremental_dedup.py::test_replay_with_ledger_rederives_identical_records",
-    "tests/test_incremental_dedup.py::test_store_grows_append_only_per_batch",
-    "tests/test_incremental_dedup.py::test_store_hash_mode_pins_and_resolves",
-    "tests/test_incremental_dedup.py::test_store_probes_never_shuffle_history",
-    "tests/test_llm_pipeline_e2e.py::test_budget_bounded_mixture_shaped_output",
-    "tests/test_llm_pipeline_e2e.py::test_cli_bloom_decontam_mode",
-    "tests/test_llm_pipeline_e2e.py::test_cli_prepare_dataset_card",
-    "tests/test_llm_pipeline_e2e.py::test_full_hygiene_stages",
-    "tests/test_llm_pipeline_e2e.py::test_pipeline_deterministic",
-    "tests/test_pquant.py::TestPQIndexMaintenance::test_probe_catches_degraded_recall_and_rebuild_repairs",
-    "tests/test_pquant.py::test_opq_beats_plain_pq_on_rotated_data",
-    "tests/test_properties.py::test_asof_bucketed_equals_plain_form",
-    "tests/test_properties.py::test_asof_time_grouped_equals_preagg_form",
-    "tests/test_properties.py::test_bpe_matches_reference_trainer_any_corpus",
-    "tests/test_properties.py::test_decontaminate_is_a_subset_and_idempotent",
-    "tests/test_properties.py::test_lm_scores_match_reference_model",
-    "tests/test_properties.py::test_transform_never_crashes_and_conserves_rows",
-    "tests/test_provenance.py::test_semantic_member_of_history_hit_keeper_still_ledgered",
-    "tests/test_provenance.py::test_semantic_stage_records_keeper_and_history",
-    "tests/test_semantic_dedup.py::test_cross_batch_drop_and_index_growth",
-    "tests/test_semantic_dedup.py::test_degenerate_bucket_cap",
-    "tests/test_semantic_dedup.py::test_index_holds_final_survivors_not_prequality",
-    "tests/test_semantic_dedup.py::test_pipeline_composes_semantic_stage",
-    "tests/test_semantic_dedup.py::test_pipeline_retry_idempotent",
-    "tests/test_semantic_dedup.py::test_retry_idempotence_same_batch",
-    "tests/test_similarity.py::test_ann_results_are_true_neighbors",
-    "tests/test_similarity.py::test_ivf_recall_beats_random",
-    "tests/test_similarity.py::test_kmeans_training_is_repeatable",
-    "tests/test_similarity.py::test_kmeans_training_reduces_assignment_cost",
-    "tests/test_similarity.py::test_lsh_bucket_cap_drops_degenerate_buckets",
-    "tests/test_stateful.py::test_state_accumulates_across_restarts",
-    "tests/test_textdedup.py::test_prepare_analysis_form_is_a_physical_choice_only",
-    "tests/test_vectorindex.py::test_registry_replay_equals_throwaway_first_batch",
-    "tests/test_vectorindex.py::test_replay_equals_first_run_when_primary_cap_fires",
-}
 
 
 def pytest_addoption(parser):
@@ -129,5 +65,5 @@ def pytest_collection_modifyitems(config, items):
         reason="slow tail (>=10s): run with --run-slow or SPARK_GRAFT_RUN_SLOW=1"
     )
     for item in items:
-        if item.nodeid.split("[")[0] in SLOW_TESTS or "slow" in item.keywords:
+        if "slow" in item.keywords:
             item.add_marker(skip)

@@ -91,6 +91,7 @@ def test_cap_observations_none_attaches_nothing(spark):
 # ---------------------------------------------------------------------------
 # IVF primary-bucket cap (within-batch semantic dedup)
 # ---------------------------------------------------------------------------
+@pytest.mark.slow
 def test_ivf_primary_cap_counter(spark, tmp_path):
     from hedera_etl_spark.operators.vectorindex import semantic_dedup_decisions
 
@@ -128,6 +129,7 @@ def _near_centroid(cidx: int, noise_dim: int, eps: float = 0.05) -> list[float]:
     return [x / m for x in v]
 
 
+@pytest.mark.slow
 def test_ivf_history_cap_counter(spark, tmp_path):
     from hedera_etl_spark.operators.vectorindex import semantic_dedup_decisions
 
@@ -223,6 +225,7 @@ def test_semantic_lost_zero_when_keeper_survives(spark, tmp_path):
     assert caps["semantic_lost"] == {"lost_members": 0}
 
 
+@pytest.mark.slow
 def test_semantic_lost_excludes_history_dropped_clusters(spark, tmp_path):
     from hedera_etl_spark.operators.llm_pipeline import prepare_training_corpus
 
@@ -334,6 +337,7 @@ def test_winnow_cap_counter_zero_on_clean_corpus(spark):
 # review finding: cosine is not transitive — a member can match the
 # index even when its within-batch keeper missed it)
 # ---------------------------------------------------------------------------
+@pytest.mark.slow
 def test_semantic_lost_excludes_member_own_history_hit(spark, tmp_path):
     from hedera_etl_spark.operators.llm_pipeline import prepare_training_corpus
 
@@ -398,6 +402,7 @@ def test_winnow_two_sided_b_cap_observed(spark):
     assert got["winnow_fp_cap"]["capped_members"] == 0
 
 
+@pytest.mark.slow
 def test_ivf_history_duplicate_rows_detected_and_neutralized(spark, tmp_path):
     """Marker-lost replay duplicates list rows; the probe must (a) not
     let duplicates flip a bucket over the cap, (b) report them, and

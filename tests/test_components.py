@@ -288,6 +288,7 @@ class TestScoreKeeper:
             (r["doc_id"], r["component"]) for r in minid.collect()
         } == {(r["doc_id"], r["component"]) for r in rows.values()}
 
+    @pytest.mark.slow
     def test_pipeline_keeper_score_col(self, spark):
         from hedera_etl_spark.operators.llm_pipeline import (
             prepare_training_corpus,

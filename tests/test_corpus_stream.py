@@ -164,9 +164,9 @@ class TestCorpusCompaction:
         before = sorted(
             (r["doc_id"], r["text"]) for r in pipe.read_corpus().collect()
         )
-        assert len(pipe._live_batch_dirs()) == 2
+        assert len(pipe._corpus_batches.live_dirs()) == 2
         assert pipe.compact_corpus() == 2
-        assert len(pipe._live_batch_dirs()) == 1
+        assert len(pipe._corpus_batches.live_dirs()) == 1
         after = sorted(
             (r["doc_id"], r["text"]) for r in pipe.read_corpus().collect()
         )
@@ -186,7 +186,7 @@ class TestCorpusCompaction:
         pipe.run_until_drained()
         self._feed(pipe, "b.jsonl", [(3, "gamma three")])
         pipe.run_until_drained()
-        sources = pipe._live_batch_dirs()
+        sources = pipe._corpus_batches.live_dirs()
         # build the compacted target + manifest by hand, KEEP the sources
         merged = pipe.read_corpus()
         target = "batch-compacted-crashsim"
@@ -203,7 +203,7 @@ class TestCorpusCompaction:
         assert pipe.read_corpus().count() == 3
         # a manifest WITHOUT its target is inert (crash before rename)
         shutil.rmtree(os.path.join(pipe.corpus_table, target))
-        assert sorted(pipe._live_batch_dirs()) == sorted(sources)
+        assert sorted(pipe._corpus_batches.live_dirs()) == sorted(sources)
         assert pipe.read_corpus().count() == 3
 
     def test_retired_batch_replay_does_not_resurrect(self, spark, tmp_path):
@@ -215,11 +215,11 @@ class TestCorpusCompaction:
         self._feed(pipe, "b.jsonl", [(2, "beta two")])
         pipe.run_until_drained()
         pipe.compact_corpus()
-        n_dirs = len(pipe._live_batch_dirs())
+        n_dirs = len(pipe._corpus_batches.live_dirs())
         # very late replay of an already-compacted batch id
         row = pipe.read_corpus().limit(1)
-        pipe._commit_corpus_batch(row, "stream-0")
-        assert len(pipe._live_batch_dirs()) == n_dirs
+        pipe._corpus_batches.commit("stream-0", row)
+        assert len(pipe._corpus_batches.live_dirs()) == n_dirs
         assert pipe.read_corpus().count() == 2
 
     def test_compact_on_empty_or_single_batch_is_noop(self, spark, tmp_path):
@@ -231,6 +231,7 @@ class TestCorpusCompaction:
         assert pipe.compact_corpus() == 0  # single dir: nothing to fold
         assert pipe.read_corpus().count() == 1
 
+    @pytest.mark.slow
     def test_second_compaction_keeps_retirement_transitive(self, spark, tmp_path):
         """r7 third-review finding: compaction 2 deletes compaction 1's
         target; manifest subsumption must keep 1's sources retired (a
@@ -257,10 +258,11 @@ class TestCorpusCompaction:
         assert not os.path.exists(orphan)
         assert pipe.read_corpus().count() == 3
         row = pipe.read_corpus().limit(1)
-        pipe._commit_corpus_batch(row, "stream-0")  # very late replay
+        pipe._corpus_batches.commit("stream-0", row)  # very late replay
         assert pipe.read_corpus().count() == 3
 
 
+@pytest.mark.slow
 def test_streaming_paragraph_dedup_across_epochs(spark, dirs):
     """With --paragraph-dedup-sep, each epoch's paragraphs are judged
     against every EARLIER epoch via the persisted hash store: recycled
@@ -316,6 +318,7 @@ def test_streaming_paragraph_dedup_across_epochs(spark, dirs):
     ) == [1, 2, 11]
 
 
+@pytest.mark.slow
 def test_rejected_doc_paragraphs_stay_claimable(spark, dirs):
     """ADVICE r9 (medium): paragraph hashes commit only for documents the
     DOC-level stage accepted.  A paragraph whose canonical home is
@@ -350,7 +353,7 @@ def test_rejected_doc_paragraphs_stay_claimable(spark, dirs):
     m1 = p1.run_until_drained()
     assert m1.accepted == 1 and m1.dropped_near == 1
     assert sorted(r["doc_id"] for r in p1.read_corpus().collect()) == [1]
-    committed = {r["para_hash"] for r in p1.paragraph_store.hashes().collect()}
+    committed = {r["para_hash"] for r in p1.paragraph_store.read().collect()}
     assert md5(para1) in committed
     # the rejected doc's paragraphs were NOT recorded as accepted
     assert md5(P) not in committed and md5(variant) not in committed
@@ -365,10 +368,11 @@ def test_rejected_doc_paragraphs_stay_claimable(spark, dirs):
     p2.run_until_drained()
     rows = {r["doc_id"]: r["text"] for r in p2.read_corpus().collect()}
     assert rows[10] == f"{P}\n\n{filler}"
-    committed2 = {r["para_hash"] for r in p2.paragraph_store.hashes().collect()}
+    committed2 = {r["para_hash"] for r in p2.paragraph_store.read().collect()}
     assert md5(P) in committed2
 
 
+@pytest.mark.slow
 def test_cli_compact_after_folds_all_three_stores(spark, dirs, capsys):
     from hedera_etl_spark import cli
 
@@ -407,6 +411,7 @@ def test_cli_compact_after_folds_all_three_stores(spark, dirs, capsys):
     assert "accepted=0" in capsys.readouterr().out  # BASE cut vs history
 
 
+@pytest.mark.slow
 def test_streaming_decontamination_guards_the_stores(spark, dirs):
     """A benchmark-contaminated document is dropped BEFORE any store
     commit — its hashes/signatures never become 'accepted' history, and
@@ -438,7 +443,7 @@ def test_streaming_decontamination_guards_the_stores(spark, dirs):
     assert sorted(r["doc_id"] for r in p.read_corpus().collect()) == [2]
     # nothing of doc 1 entered either store
     assert p.store.content().count() == 1
-    stored_hashes = {r["para_hash"] for r in p.paragraph_store.hashes().collect()}
+    stored_hashes = {r["para_hash"] for r in p.paragraph_store.read().collect()}
     import hashlib
 
     assert hashlib.md5((BASE + " extra tail").encode()).hexdigest() not in stored_hashes
@@ -452,6 +457,7 @@ def test_streaming_decontamination_guards_the_stores(spark, dirs):
     assert sorted(r["doc_id"] for r in p.read_corpus().collect()) == [2]
 
 
+@pytest.mark.slow
 def test_eval_rotation_versioned_and_replay_stable(spark, dirs):
     """VERDICT r10 #7: an eval refresh takes effect from the NEXT epoch,
     and a replayed OLD epoch keeps its original decision — it re-reads
@@ -518,6 +524,7 @@ def test_eval_rotation_versioned_and_replay_stable(spark, dirs):
     assert sorted(r["doc_id"] for r in p2.read_corpus().collect()) == [2, 11]
 
 
+@pytest.mark.slow
 def test_streaming_removal_ledger_partitions_each_epoch(spark, dirs, tmp_path):
     """Streaming removal provenance (VERDICT r10 #3): every dropped doc
     appears exactly once with its stage and duplicate attribution;
@@ -648,6 +655,7 @@ def _write_jsonl_url(path, rows):
             fh.write(json.dumps({"doc_id": doc_id, "text": text, "url": url}) + "\n")
 
 
+@pytest.mark.slow
 def test_streaming_url_dedup_across_epochs(spark, dirs, tmp_path):
     """Canonical-URL dedup as the first streaming stage: within-batch
     variants keep the min-id doc, recrawls of URLs committed by earlier
@@ -729,6 +737,7 @@ def test_streaming_url_dedup_across_epochs(spark, dirs, tmp_path):
     assert sorted(r["doc_id"] for r in p2.read_corpus().collect()) == [1, 3, 4, 11]
 
 
+@pytest.mark.slow
 def test_ledger_crash_window_heals_on_replay(spark, dirs, tmp_path):
     """VERDICT r11 #2: a crash between the signature-store commit and the
     ledger write must not lose that epoch's provenance rows forever — on
@@ -839,6 +848,7 @@ def test_eval_reregistration_with_different_content_raises(spark, dirs):
     assert os.path.exists(fp)  # re-derived and re-recorded
 
 
+@pytest.mark.slow
 def test_url_commit_policy_post_decontam_keeps_urls_reclaimable(spark, dirs):
     """ADVICE r11 (urlstore policy): under 'post_decontam' a URL whose
     first crawl is dropped by decontamination is NOT committed, so a
@@ -904,6 +914,7 @@ def test_url_commit_policy_post_decontam_keeps_urls_reclaimable(spark, dirs):
     assert sorted(r["doc_id"] for r in p3.read_corpus().collect()) == [2, 10]
 
 
+@pytest.mark.slow
 def test_ledger_heal_refuses_non_latest_epoch(spark, dirs, tmp_path):
     """r12 review finding: the heal re-derives against store-minus-epoch,
     which equals store-as-of-before-the-epoch ONLY for the latest epoch
@@ -948,6 +959,7 @@ def test_ledger_heal_refuses_non_latest_epoch(spark, dirs, tmp_path):
     assert os.path.isdir(os.path.join(ledger_dir, "batch-stream-1"))
 
 
+@pytest.mark.slow
 def test_read_corpus_as_of_and_epoch_lineage(spark, dirs):
     """r12 time-travel: read_corpus(as_of=epoch) reproduces the exact
     corpus a training run saw after that epoch committed — before AND
@@ -992,6 +1004,7 @@ def test_read_corpus_as_of_and_epoch_lineage(spark, dirs):
         p.read_corpus(as_of="not-an-epoch")
 
 
+@pytest.mark.slow
 def test_read_corpus_as_of_refuses_unattributed_compaction(spark, dirs):
     """A corpus compacted BEFORE origin tracking (NULL origins) must
     refuse as-of reads instead of silently dropping rows."""
@@ -1028,6 +1041,7 @@ def test_read_corpus_as_of_refuses_unattributed_compaction(spark, dirs):
         p.read_corpus(as_of="stream-1").count()
 
 
+@pytest.mark.slow
 def test_ledger_compaction_folds_and_heal_gate_survives(spark, dirs, tmp_path):
     """r12: the ledger compacts like every sibling store — rows carry
     their epoch already, reads exclude retired sources in the crash
@@ -1058,23 +1072,23 @@ def test_ledger_compaction_folds_and_heal_gate_survives(spark, dirs, tmp_path):
         p = pipeline()
         p.run_until_drained()
     before = sorted(map(tuple, p.read_ledger().collect()))
-    assert len(before) == 3 and len(p._live_ledger_dirs()) == 3
+    assert len(before) == 3 and len(p._ledger_batches.live_dirs()) == 3
 
     assert p.compact_ledger() == 3
-    assert len(p._live_ledger_dirs()) == 1
+    assert len(p._ledger_batches.live_dirs()) == 1
     assert sorted(map(tuple, p.read_ledger().collect())) == before
     assert p.compact_ledger() == 0  # idempotent when nothing to do
 
     # folded epochs still count as ledgered: a replay must not re-derive
     for i in range(3):
-        assert p._has_ledger_batch(f"stream-{i}")
+        assert p._ledger_batches.has(f"stream-{i}")
     batch = spark.createDataFrame(epochs[2], ["doc_id", "text"])
     p._process_batch(batch, 2)
     assert sorted(map(tuple, p.read_ledger().collect())) == before
 
     # crash window: target + manifest live, sources still on disk ->
     # reads see each row exactly once
-    target = p._live_ledger_dirs()[0]
+    target = p._ledger_batches.live_dirs()[0]
     src = os.path.join(ledger_dir, "batch-stream-0")
     os.makedirs(src)
     spark.createDataFrame(
@@ -1126,6 +1140,7 @@ def test_streaming_gopher_rules_floor(spark, dirs):
     assert (2, "gopher_rules") in rows and (3, "gopher_rules") in rows
 
 
+@pytest.mark.slow
 def test_streaming_exact_substr_across_epochs(spark, dirs):
     """With --exact-substr-min-len, each epoch's >= L-token substrings
     are judged against every EARLIER epoch's accepted spans via the
@@ -1182,6 +1197,7 @@ def test_streaming_exact_substr_across_epochs(spark, dirs):
     ) == [1, 2, 11]
 
 
+@pytest.mark.slow
 def test_rejected_doc_spans_stay_claimable(spark, dirs):
     """Deferred-commit contract for the span store: spans commit only
     for documents the DOC-level stage accepted.  The rejected near-dup
@@ -1229,6 +1245,7 @@ def test_rejected_doc_spans_stay_claimable(spark, dirs):
     assert run in texts[20]
 
 
+@pytest.mark.slow
 def test_streaming_text_classifier_floor(spark, dirs):
     """text_classifier_weights in the streaming pipeline: the hashed-text
     classifier floor (operators/qualityclf.py) drops low-scoring docs per

@@ -129,6 +129,7 @@ def test_gap_scenario(spark, tmp_path):
     assert int(state.read()[INCREMENTAL_STATE_KEY]) == max(r[2] for r in late)
 
 
+@pytest.mark.slow
 def test_full_dedup_heals_history(spark, tmp_path):
     """FullDeduplication.java:30-54: duplicates that land BELOW the
     incremental checkpoint (pathological lateness) are healed by run_full,

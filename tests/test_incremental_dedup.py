@@ -112,6 +112,7 @@ def test_retry_replays_decision_without_reinserting(spark, store):
     assert sorted(map(tuple, store.content().collect())) == before
 
 
+@pytest.mark.slow
 def test_crash_window_heals_and_batch_reruns(spark, store):
     incremental_dedup_batch(store, _docs(spark, [(1, BASE)]), "b1")
     # simulate a crash between the two commit renames: content live,
@@ -128,6 +129,7 @@ def test_crash_window_heals_and_batch_reruns(spark, store):
     assert healed.has_batch("b1")
 
 
+@pytest.mark.slow
 def test_store_grows_append_only_per_batch(spark, store):
     incremental_dedup_batch(store, _docs(spark, [(1, BASE)]), "b1")
     incremental_dedup_batch(
@@ -153,6 +155,7 @@ def test_transitive_in_batch_chain_keeps_min_id(spark, store):
     assert [r["doc_id"] for r in accepted.collect()] == [30]
 
 
+@pytest.mark.slow
 def test_compact_preserves_dedup_behavior(spark, store):
     incremental_dedup_batch(store, _docs(spark, [(1, BASE)]), "b1")
     incremental_dedup_batch(
@@ -177,6 +180,7 @@ def test_compact_preserves_dedup_behavior(spark, store):
     assert store.compact() == 0
 
 
+@pytest.mark.slow
 def test_replay_of_folded_batch_heals_across_compaction(spark, store):
     """VERDICT r10 #4 (the docstring caveat made mechanical): a replayed
     pre-compaction epoch must reproduce its ORIGINAL accepted set.
@@ -210,6 +214,7 @@ def test_replay_of_folded_batch_heals_across_compaction(spark, store):
     assert sorted(r["doc_id"] for r in a1rr.collect()) == orig
 
 
+@pytest.mark.slow
 def test_compact_crash_window_converges(spark, store):
     """Crash after target commit, before source removal: a re-run folds
     the leftovers into a fresh target without row duplication."""
@@ -305,6 +310,7 @@ def test_candidate_probe_equals_full_union_banding(spark):
     assert any(a == 8 or b == 8 for a, b, _ in want)
 
 
+@pytest.mark.slow
 def test_store_probes_never_shuffle_history(spark, store):
     """VERDICT r9 #1 pin, both store sides: the content-hash probe and
     the signature candidate probe stream the history scan map-side into
@@ -338,6 +344,7 @@ def test_store_probes_never_shuffle_history(spark, store):
     assert_scan_probes_unshuffled(plan_of(cand), "struct<doc_id:bigint,mh_0:bigint")
 
 
+@pytest.mark.slow
 def test_replay_with_ledger_rederives_identical_records(spark, store):
     """VERDICT r11 #2 kernel: replaying a committed batch WITH a ledger
     re-derives the identical decision against the store as of before the
@@ -378,6 +385,7 @@ def test_replay_with_ledger_rederives_identical_records(spark, store):
     assert store.committed_batches() == {"batch=b0", "batch=b1"}
 
 
+@pytest.mark.slow
 def test_replay_with_ledger_heals_across_compaction(spark, store):
     """The exclude_batch reads resolve through origin attribution after
     compact() folds the batch dirs (content origin filter; sigs via the
@@ -398,6 +406,7 @@ def test_replay_with_ledger_heals_across_compaction(spark, store):
     assert sorted(r["doc_id"] for r in acc2.collect()) == [12]
 
 
+@pytest.mark.slow
 def test_store_hash_mode_pins_and_resolves(spark, tmp_path):
     """r15: the signature hash family is a STORE property.  A new store
     pins the requested mode; reopening with a different mode warns and

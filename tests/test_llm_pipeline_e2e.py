@@ -78,6 +78,7 @@ def test_pipeline_end_to_end(spark, corpus, tmp_path):
     assert {r["doc_id"] for r in back.select("doc_id").collect()} == survivor_ids
 
 
+@pytest.mark.slow
 def test_pipeline_deterministic(spark, corpus):
     a = prepare_training_corpus(corpus, **KNOBS)
     b = prepare_training_corpus(corpus, **KNOBS)
@@ -120,6 +121,7 @@ def test_cli_prepare_roundtrip(spark, corpus, tmp_path, capsys):
     assert len(checks) == 4 and all(r["ok"] for r in checks)
 
 
+@pytest.mark.slow
 def test_full_hygiene_stages(spark, corpus):
     """Decontamination + repetition caps + target mixture, composed."""
     # domains: alternate web/code by id parity; eval set = 3 real docs
@@ -161,6 +163,7 @@ def test_full_hygiene_stages(spark, corpus):
     assert ids == {r["doc_id"] for r in again.collect()}
 
 
+@pytest.mark.slow
 def test_budget_bounded_mixture_shaped_output(spark, corpus):
     """VERDICT r8 #4: the selection/sampling surfaces compose as pipeline
     stages — target mixture -> DSIR importance resample -> token-budget
@@ -363,6 +366,7 @@ def test_stage_observation_fallback_reads_are_cached(spark):
     assert obs["exact_dedup"].get["rows"] == 1
 
 
+@pytest.mark.slow
 def test_cli_bloom_decontam_mode(spark, corpus, tmp_path, capsys):
     """`prepare --decontam-mode bloom` end-to-end through argv parsing:
     the Bloom scale path is reachable from the CLI (VERDICT r9 #4) and
@@ -499,6 +503,7 @@ def test_gopher_rules_stage(spark):
     assert "quality_floor" in obs
 
 
+@pytest.mark.slow
 def test_cli_prepare_dataset_card(spark, corpus, tmp_path):
     """--dataset-card writes the datasheet next to the shards: totals
     match the manifest, ledger drop report aggregates every removal,

@@ -269,12 +269,12 @@ def test_incremental_store_grows_by_new_canon_only(spark, tmp_path):
         [(1, f"one\n\n{BOILER}"), (2, f"one\n\n{BOILER}")], ["doc_id", "text"]
     )
     incremental_paragraph_dedup(e1, store, "e1").collect()
-    assert store.hashes().count() == 2  # 'one' + boilerplate, deduped
+    assert store.read().count() == 2  # 'one' + boilerplate, deduped
     e2 = spark.createDataFrame(
         [(3, f"{BOILER}\n\ntwo")], ["doc_id", "text"]
     )
     incremental_paragraph_dedup(e2, store, "e2").collect()
-    assert store.hashes().count() == 3  # only 'two' is new
+    assert store.read().count() == 3  # only 'two' is new
 
 
 def test_incremental_heals_stale_staging(spark, tmp_path):
@@ -319,7 +319,7 @@ def test_history_probe_never_shuffles_store(spark, tmp_path):
         )
     )
     hits = inverted_store_probe(
-        store.hashes(), occ.select("para_hash").distinct(), "para_hash"
+        store.read(), occ.select("para_hash").distinct(), "para_hash"
     )
     assert sorted(r["para_hash"] for r in hits.collect())  # boilerplate hit
     assert_scan_probes_unshuffled(plan_of(hits), "struct<para_hash:string>")
@@ -360,7 +360,7 @@ def test_plan_variant_defers_commit_and_attributes_docs(spark, tmp_path):
         "e1",
         new_canon.filter(F.col("doc_id") == 1).select("para_hash").distinct(),
     )
-    committed = {r["para_hash"] for r in store.hashes().collect()}
+    committed = {r["para_hash"] for r in store.read().collect()}
     assert committed == {md5("alpha body"), md5("shared para")}
     # a later epoch re-submits 'beta body': it was never accepted, so its
     # one legitimate home survives
@@ -389,10 +389,10 @@ def test_paragraph_store_compact_folds_and_preserves_history(spark, tmp_path):
         store,
         "e2",
     ).collect()
-    before = {r["para_hash"] for r in store.hashes().collect()}
+    before = {r["para_hash"] for r in store.read().collect()}
     assert store.compact() == 2
     assert len(store.committed_batches()) == 1
-    assert {r["para_hash"] for r in store.hashes().collect()} == before
+    assert {r["para_hash"] for r in store.read().collect()} == before
     # history still cuts: recycled boilerplate vanishes post-compaction
     out = incremental_paragraph_dedup(
         spark.createDataFrame(
@@ -446,7 +446,7 @@ def test_paragraph_store_compact_crash_leftover_converges(spark, tmp_path):
     )
     assert {r["text"] for r in out.collect()} == {"new text"}
     assert store.compact() == 3
-    assert store.hashes().count() == 3  # dropDuplicates folded the overlap
+    assert store.read().count() == 3  # dropDuplicates folded the overlap
 
 
 def test_skew_safe_drops_equal_window_form(spark, corpus):

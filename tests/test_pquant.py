@@ -266,6 +266,7 @@ def _subspace_clustered(n: int, m: int, k: int, dims: int, spread=0.02):
     return rows
 
 
+@pytest.mark.slow
 def test_opq_beats_plain_pq_on_rotated_data(spark):
     """The OPQ claim: on data whose cluster structure was smeared
     across subspace boundaries by an orthogonal rotation, the learned
@@ -493,6 +494,7 @@ class TestPQIndexMaintenance:
     drifts; the probe measures it per batch, the rebuild repairs it
     through the shared move-aside protocol."""
 
+    @pytest.mark.slow
     def test_probe_catches_degraded_recall_and_rebuild_repairs(
         self, spark, tmp_path
     ):

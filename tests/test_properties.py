@@ -67,6 +67,7 @@ def test_transform_preserves_any_int64_exactly(spark, rows):
     assert got == sorted((ts, tt, fee, memo) for ts, tt, fee, memo in rows)
 
 
+@pytest.mark.slow
 @settings(**SPARK_SETTINGS)
 @given(junk=st.lists(st.text(max_size=40).filter(lambda s: s.strip() != ""), min_size=1, max_size=10))
 def test_transform_never_crashes_and_conserves_rows(spark, junk):
@@ -255,6 +256,7 @@ def test_asof_collision_check_covers_keys_and_ts(spark):
                    right_payload=["lts"])  # collides with the left ts name
 
 
+@pytest.mark.slow
 @settings(**SPARK_SETTINGS)
 @given(
     left=st.lists(st.tuples(st.integers(0, 2), st.integers(0, 50)), min_size=1, max_size=12),
@@ -312,6 +314,7 @@ def test_asof_time_grouped_single_pre_window_exchange(spark):
     assert "Sort" in plan
 
 
+@pytest.mark.slow
 @settings(**SPARK_SETTINGS)
 @given(
     left=st.lists(st.tuples(st.integers(0, 2), st.integers(0, 50)), min_size=1, max_size=12),
@@ -413,6 +416,7 @@ word = st.text(alphabet="abcdef", min_size=1, max_size=3)
 doc_text = st.lists(word, min_size=1, max_size=12).map(" ".join)
 
 
+@pytest.mark.slow
 @settings(**SPARK_SETTINGS)
 @given(
     corpus=st.lists(doc_text, min_size=1, max_size=8),
@@ -481,6 +485,7 @@ _word = st.text(alphabet="abcd", min_size=1, max_size=5)
 _doc = st.lists(_word, min_size=1, max_size=8).map(" ".join)
 
 
+@pytest.mark.slow
 @settings(**SPARK_SETTINGS)
 @given(texts=st.lists(_doc, min_size=1, max_size=6), k=st.integers(1, 6))
 def test_bpe_matches_reference_trainer_any_corpus(spark, texts, k):
@@ -549,6 +554,7 @@ def test_fuzzy_pairs_match_bruteforce_jaccard(spark, corpus, evals, threshold):
     assert got == expected
 
 
+@pytest.mark.slow
 @settings(**SPARK_SETTINGS)
 @given(texts=st.lists(_doc, min_size=1, max_size=6))
 def test_lm_scores_match_reference_model(spark, texts):

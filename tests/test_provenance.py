@@ -115,6 +115,7 @@ def test_paragraph_emptied_and_sampling_recorded(spark):
     assert all(by_doc[d] == ("rate_sample", "rate_sample", None) for d in sampled_out)
 
 
+@pytest.mark.slow
 def test_semantic_stage_records_keeper_and_history(spark, tmp_path):
     """Within-batch semantic dup -> keeper ref; cross-batch history hit
     -> vs_history reason with NULL ref (the match lives in the index)."""
@@ -164,6 +165,7 @@ def test_semantic_stage_records_keeper_and_history(spark, tmp_path):
     ]
 
 
+@pytest.mark.slow
 def test_semantic_member_of_history_hit_keeper_still_ledgered(spark, tmp_path):
     """r11 review finding: when a cluster's keeper is ITSELF a history
     hit, the component has no keep=True row — the member's ledger row

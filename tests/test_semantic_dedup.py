@@ -81,6 +81,7 @@ def test_within_batch_transitive_collapse(spark, tmp_path):
     assert got == {1: True, 2: False, 3: False, 10: True}
 
 
+@pytest.mark.slow
 def test_cross_batch_drop_and_index_growth(spark, tmp_path):
     path = str(tmp_path / "ivf")
     b1 = [(1, _unit(5)), (2, _unit(33))]
@@ -107,6 +108,7 @@ def test_cross_batch_drop_and_index_growth(spark, tmp_path):
     assert IVFIndex(spark, path).lists().count() == 3  # 1, 2, 102
 
 
+@pytest.mark.slow
 def test_pipeline_composes_semantic_stage(spark, tmp_path):
     from hedera_etl_spark.operators.llm_pipeline import prepare_training_corpus
 
@@ -165,6 +167,7 @@ def test_embeddings_without_path_raises(spark):
         )
 
 
+@pytest.mark.slow
 def test_retry_idempotence_same_batch(spark, tmp_path):
     """A replayed batch (job retry after its append landed) must
     re-derive the SAME decisions — not drop everything as history
@@ -184,6 +187,7 @@ def test_retry_idempotence_same_batch(spark, tmp_path):
     assert IVFIndex(spark, path).lists().count() == n_after_first
 
 
+@pytest.mark.slow
 def test_pipeline_retry_idempotent(spark, tmp_path):
     """Full-pipeline retry with the same inputs returns the same docs
     (the r7 code-review repro: the second run used to return [])."""
@@ -224,6 +228,7 @@ def test_docs_without_embeddings_pass_through(spark, tmp_path):
     assert sorted(r["doc_id"] for r in out.collect()) == [1, 2, 3]
 
 
+@pytest.mark.slow
 def test_index_holds_final_survivors_not_prequality(spark, tmp_path):
     """A doc that passes semantic dedup but fails a later quality floor
     must NOT enter the index (it never reached the corpus, so it must
@@ -293,6 +298,7 @@ def test_fuzzy_decontam_custom_id_col(spark):
     assert sorted(r["my_id"] for r in out.collect()) == [2]
 
 
+@pytest.mark.slow
 def test_degenerate_bucket_cap(spark, tmp_path):
     """All-identical vectors land in ONE bucket; with max_bucket below
     the batch size the quadratic within-bucket join is skipped (rows

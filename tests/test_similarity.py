@@ -37,6 +37,7 @@ def recall(approx_rows, exact_sets) -> float:
     return hits / total
 
 
+@pytest.mark.slow
 def test_ivf_recall_beats_random(spark, emb, exact):
     """IVF with 2/16 probes scans ~1/8 of the corpus; recall must be far
     above the ~12.5% a random 1/8 sample would give."""
@@ -84,6 +85,7 @@ def test_lsh_multiprobe_recall_dominates_single_probe(spark, emb, exact):
     assert all(q != n for q, n in m_pairs)  # never self-matches
 
 
+@pytest.mark.slow
 def test_lsh_bucket_cap_drops_degenerate_buckets(spark, emb):
     """max_bucket is the anti-quadratic guard: with a cap of 1 every
     multi-occupant bucket is dropped, so NO candidate pairs survive on a
@@ -120,6 +122,7 @@ def test_ivf_partitions_corpus(spark, emb):
     assert max(r["count"] for r in sizes) < n  # no single-bucket collapse
 
 
+@pytest.mark.slow
 def test_ann_results_are_true_neighbors(spark, emb, exact):
     """ANN may miss neighbors but must never fabricate: every returned
     cosine must equal the exact cosine for that pair."""
@@ -137,6 +140,7 @@ def test_ann_results_are_true_neighbors(spark, emb, exact):
         assert pair in full and full[pair] == cos
 
 
+@pytest.mark.slow
 def test_kmeans_training_reduces_assignment_cost(spark, emb):
     """Spherical k-means iterations must improve the quantizer: the mean
     best-centroid COSINE over the corpus rises from the md5-grid init to
@@ -174,6 +178,7 @@ def test_kmeans_training_reduces_assignment_cost(spark, emb):
     assert rows  # the trained quantizer serves the same pipeline
 
 
+@pytest.mark.slow
 def test_kmeans_training_is_repeatable(spark, emb):
     """Fixed init + fixed iteration count: two runs agree to float noise
     (exact bits may differ with partition order; centroid VALUES converge

@@ -362,7 +362,7 @@ def test_incremental_history_probe_never_shuffles_store(spark, tmp_path):
     # (the scan must read ONE column — the count columns only load on
     # the min_count>2 path)
     hits = inverted_store_probe(
-        store.hashes().withColumnRenamed("span_hash", "h").select("h"),
+        store.read().withColumnRenamed("span_hash", "h").select("h"),
         rows.select("h").distinct(),
         "h",
     )
@@ -544,7 +544,7 @@ def test_span_store_reads_pre_r15_presence_rows_as_count_one(spark, tmp_path):
     )
     staged = fsutil.stage_batch_dir(store.hashes_dir, "batch=legacy", h)
     fsutil.publish_batch_dir(store.hashes_dir, "batch=legacy", staged)
-    got = store.hashes().collect()
+    got = store.read().collect()
     assert got and all(r["n"] == 1 for r in got)
     # and the min_count=2 presence path still cuts against legacy rows
     e2 = _inc(spark, store, "e2", [(9, f"x {PHRASE} y")])

@@ -48,6 +48,7 @@ def run_stream(spark, input_dir, ckpt, out_dir):
     return latest
 
 
+@pytest.mark.slow
 def test_state_accumulates_across_restarts(spark, tmp_path):
     input_dir = tmp_path / "in"
     ckpt = tmp_path / "ckpt"

@@ -585,6 +585,7 @@ def test_form_auto_selectors_pick_by_size_and_stay_bit_equal(spark):
             fn(docs, form="bogus")
 
 
+@pytest.mark.slow
 def test_prepare_analysis_form_is_a_physical_choice_only(spark):
     """e2e: prepare_training_corpus survivors are identical under
     analysis_form='per_row' / 'scalable' / 'auto' — the quality-floor

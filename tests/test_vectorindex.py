@@ -82,6 +82,7 @@ def test_incremental_add_extends_index(spark, emb, index):
         assert r["neighbor_id"] == r["query_id"] + 1_000_000 or r["cos_sim"] >= 0.999999
 
 
+@pytest.mark.slow
 def test_registry_replay_equals_throwaway_first_batch(spark, emb, tmp_path):
     """r14 (VERDICT r13 #3): the registry entry probes a PERSISTED index
     — its replay decisions (2nd+ call on the same corpus, same batch
@@ -140,6 +141,7 @@ def test_pair_verify_stages_compile_without_codegen_overflow(spark, emb, tmp_pat
         spark.conf.set("spark.sql.codegen.fallback", old)
 
 
+@pytest.mark.slow
 def test_replay_equals_first_run_when_primary_cap_fires(spark, tmp_path):
     """r14 review finding: when max_bucket drops a hot bucket from the
     within-batch pass, the history pass must skip that bucket too —

@@ -134,7 +134,7 @@ def main() -> None:
     if bad_content & store_content:
         failures.append("contaminated content hash committed to signature store")
     bad_intros = {md5(f"intro paragraph for page {i}") for i in contaminated_ids}
-    para_hashes = {r["para_hash"] for r in p.paragraph_store.hashes().collect()}
+    para_hashes = {r["para_hash"] for r in p.paragraph_store.read().collect()}
     if bad_intros & para_hashes:
         failures.append("contaminated doc's paragraph hash committed")
     log(check="epoch1_store_hygiene", ok=not failures,
@@ -152,7 +152,7 @@ def main() -> None:
     log(epoch=2, accepted_new=sorted(accepted2), dropped_near=m2.dropped_near)
     if accepted2 != {20_000_000}:
         failures.append(f"epoch2 accepted {sorted(accepted2)}, expected [20000000]")
-    para_hashes2 = {r["para_hash"] for r in p2.paragraph_store.hashes().collect()}
+    para_hashes2 = {r["para_hash"] for r in p2.paragraph_store.read().collect()}
     ok = md5(NOVEL) not in para_hashes2 and md5(P1) in para_hashes2
     log(check="deferred_commit_withholds_rejected_paragraph", ok=ok)
     if not ok:
@@ -165,7 +165,7 @@ def main() -> None:
     batch_df = spark.createDataFrame(e2, ["doc_id", "text"])
     p3 = pipeline()
     p3._process_batch(batch_df, 1)
-    after_hashes = {r["para_hash"] for r in p3.paragraph_store.hashes().collect()}
+    after_hashes = {r["para_hash"] for r in p3.paragraph_store.read().collect()}
     after_corpus = sorted(map(tuple, p3.read_corpus().collect()))
     ok = after_hashes == before_hashes and after_corpus == before_corpus
     log(check="crash_between_doc_and_paragraph_commit_replays_identically", ok=ok)

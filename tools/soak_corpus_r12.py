@@ -140,7 +140,7 @@ def main() -> None:
     # post_decontam policy: a contaminated doc's canonical URL stays
     # unclaimed (pick contaminated docs that were their URL-group keeper)
     url_store_ids = {
-        r["doc_id"] for r in p.url_store.urls().select("doc_id").collect()
+        r["doc_id"] for r in p.url_store.read().select("doc_id").collect()
     }
     check(
         "e1_policy_withholds_contaminated_urls",
@@ -233,7 +233,7 @@ def main() -> None:
         n_reclaims=len(reclaim_src),
     )
     url_ids_after = {
-        r["doc_id"] for r in p3.url_store.urls().select("doc_id").collect()
+        r["doc_id"] for r in p3.url_store.read().select("doc_id").collect()
     }
     check(
         "e3_reclaimed_urls_now_claimed",

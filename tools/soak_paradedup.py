@@ -116,7 +116,7 @@ def main() -> int:
                     "epoch": epoch,
                     "docs_in": n_in,
                     "docs_out": n_out,
-                    "store_hashes": store.hashes().count(),
+                    "store_hashes": store.read().count(),
                     "elapsed_sec": round(time.time() - t0, 2),
                 }
             )

@@ -110,7 +110,7 @@ def time_naive_paragraph_probe(spark, store, batch):
     against the FULL history (history shuffles)."""
     t0 = time.time()
     occ = paragraph_occurrences(batch)
-    history = store.hashes()
+    history = store.read()
     vs_store = occ.join(history.hint("merge"), "para_hash", "left_semi")
     n = vs_store.count()
     return time.time() - t0, n
