@@ -824,6 +824,7 @@ def main(argv: list[str] | None = None) -> int:
         m = pipeline.run_until_drained()
         print(
             f"batches={m.batches} rows_in={m.rows_in} accepted={m.accepted} "
+            f"dropped_quality={m.dropped_quality} "
             f"dropped_exact={m.dropped_exact} dropped_near={m.dropped_near}"
         )
         if args.compact_after:

@@ -58,6 +58,7 @@ from pyspark.sql import types as T
 from hedera_etl_spark import fsutil
 from hedera_etl_spark.operators.components import collapse_components
 from hedera_etl_spark.operators.joins import inverted_store_probe
+from hedera_etl_spark.operators.stats import counted_checkpoint
 from hedera_etl_spark.operators.textdedup import (
     band_structs_expr,
     lsh_candidates,
@@ -345,7 +346,9 @@ def incremental_dedup_batch(
     """Deduplicate one batch against the store and everything earlier in
     the batch; commit the accepted documents' hashes + signatures.
 
-    Returns (accepted docs — same schema as ``new_docs`` — and stats).
+    Returns (accepted docs — same schema as ``new_docs``, checkpointed
+    so callers commit from it without re-running the decision — and
+    stats).
     Retrying an already-committed ``batch_id`` replays the recorded
     decision without touching the store.
 
@@ -365,46 +368,49 @@ def incremental_dedup_batch(
     k = store.k
     replaying = store.has_batch(batch_id)
     if replaying and removal_ledger is None:
-        accepted = new_docs.join(
-            store.batch_doc_ids(batch_id).withColumnRenamed("doc_id", id_col),
-            id_col,
-            "left_semi",
+        new_docs, c_in = counted_checkpoint(new_docs, "incdedup.replay_in")
+        accepted, c_acc = counted_checkpoint(
+            new_docs.join(
+                store.batch_doc_ids(batch_id).withColumnRenamed("doc_id", id_col),
+                id_col,
+                "left_semi",
+            ),
+            "incdedup.replay_accepted",
         )
-        n_acc = accepted.count()
         return accepted, BatchStats(
-            batch_id, new_docs.count(), 0, 0, 0, 0, n_acc, already_committed=True
+            batch_id, c_in["n"], 0, 0, 0, 0, c_acc["n"], already_committed=True
         )
     exclude = batch_id if replaying else None
-
-    from hedera_etl_spark.operators.stats import robust_observe
 
     docs = new_docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
-    # Plain counts for the pre-signature stages, deliberately NOT
-    # plan-riding observations (r16 finding): the eager content_hits
-    # store-probe checkpoint below contains these subtrees, and on a
-    # FRESH store the static empty-relation rewrite deletes the probe's
-    # broadcast side — an observation then completes with a populated
-    # all-zeros row (no task updates) that the elimination probe cannot
-    # tell from a real zero.  Only the signature count (whose observe
-    # node is the ROOT of its own eager checkpoint, with no intervening
-    # action) rides a job safely — see below.
-    rows_in = docs.count()
+    # Every stage below ends in ONE eager checkpoint whose count rides
+    # that checkpoint's own job (stats.counted_checkpoint: the observed
+    # node is the ROOT of the checkpointed plan and nothing touched it
+    # before, so neither a lazy completion nor the static empty-relation
+    # rewrite of some other query can zero it — the r16 hazard that
+    # forbids observations INSIDE a store-probe plan).  Every other
+    # count is arithmetic over those: no job exists only to count.
 
-    # 1. exact, within batch then vs store.  The store probe is INVERTED
-    #    (VERDICT r9 #1): the batch's hash set broadcasts, the history
-    #    scan reduces map-side to the tiny hit set (one scan, zero
-    #    history shuffles — a mature store cannot broadcast and the
+    # 1. exact, within batch then vs store.  The in-batch keeper set
+    #    carries each hash's row count, so one aggregate yields both the
+    #    keeper count and the batch's row count.  The store probe is
+    #    INVERTED (VERDICT r9 #1): the batch's hash set broadcasts, the
+    #    history scan reduces map-side to the tiny hit set (one scan,
+    #    zero history shuffles — a mature store cannot broadcast and the
     #    direct left_anti would shuffle the full history every batch),
-    #    and the batch anti-joins against broadcast hits.  localCheckpoint
-    #    pins the hits: survivors has three downstream consumers and each
-    #    would otherwise rerun the history scan.
+    #    and the batch anti-joins against broadcast hits.
     hashed = docs.select("doc_id", F.md5("text").alias("content_hash"))
-    in_batch_keep = hashed.groupBy("content_hash").agg(
-        F.min("doc_id").alias("doc_id")
+    in_batch_keep, c_keep = counted_checkpoint(
+        hashed.groupBy("content_hash").agg(
+            F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("__n")
+        ),
+        "incdedup.in_batch_keep",
+        F.coalesce(F.sum("__n"), F.lit(0)).alias("rows"),
     )
-    exact_in_batch = rows_in - in_batch_keep.count()
+    rows_in = c_keep["rows"]
+    exact_in_batch = rows_in - c_keep["n"]
     # with a ledger attached the probe carries the STORE doc id through
     # (same one-scan zero-history-shuffle plan — the hit rows are just
     # one long wider) so exact-vs-store drops can name their duplicate
@@ -414,11 +420,14 @@ def incremental_dedup_batch(
     content_hits = inverted_store_probe(
         probe_cols, in_batch_keep, "content_hash"
     ).localCheckpoint()
-    survivors = in_batch_keep.join(
-        F.broadcast(content_hits.select("content_hash")), "content_hash", "left_anti"
+    survivors, c_surv = counted_checkpoint(
+        in_batch_keep.join(
+            F.broadcast(content_hits.select("content_hash")), "content_hash", "left_anti"
+        ),
+        "incdedup.survivors",
     )
-    n_after_store = survivors.count()
-    exact_vs_store = (rows_in - exact_in_batch) - n_after_store
+    n_after_store = c_surv["n"]
+    exact_vs_store = c_keep["n"] - n_after_store
     if removal_ledger is not None:
         keep_map = in_batch_keep.withColumnRenamed("doc_id", "__keeper")
         removal_ledger.record(
@@ -440,7 +449,7 @@ def incremental_dedup_batch(
         )
 
     # 2. near vs store: batch signatures + stored signatures, one LSH pass.
-    #    localCheckpoint pins the signatures — they feed the pair join, the
+    #    The signature checkpoint pins them — they feed the pair join, the
     #    store commit, AND the keeper decision, and recomputing the
     #    md5-per-shingle stage three times dominates batch cost otherwise.
     batch_docs = docs.join(survivors.select("doc_id"), "doc_id", "left_semi")
@@ -450,7 +459,7 @@ def incremental_dedup_batch(
     # signature stage at sf0.1 vs the interpreted md5-hex lambdas);
     # md5 remains for stores created before the mode existed.  Both
     # emit a row exactly for docs with >= n tokens, so the sigless
-    # pass-through arithmetic below is mode-independent.
+    # pass-through below is mode-independent.
     if store.hash_fn == "xxhash64":
         from hedera_etl_spark.operators.textdedup import (
             hashed_shingle_sets,
@@ -464,15 +473,6 @@ def incremental_dedup_batch(
         pre_sigs = minhash_signatures_from_sets(
             shingle_sets(batch_docs, n=n), k=k
         )
-    # the signature count rides the checkpoint job (r16, guide §5): the
-    # observe node is the ROOT of the checkpointed plan and the eager
-    # localCheckpoint on the next line is the FIRST action to touch it,
-    # so no intermediate action (and no empty-relation rewrite of some
-    # OTHER query) can complete it early — a root CollectMetrics over a
-    # statically-emptied child still reports the true count (zero)
-    pre_sigs, sigs_obs = robust_observe(
-        pre_sigs, "incdedup.batch_sigs", F.count(F.lit(1)).alias("n")
-    )
     batch_sigs = pre_sigs.localCheckpoint()
     # inverted candidate probe: only stored sigs sharing a batch bucket
     # join the LSH pass (pinned equivalent to banding the full store —
@@ -480,13 +480,13 @@ def incremental_dedup_batch(
     cand_sigs = store_candidate_sigs(
         store.signatures(exclude), batch_sigs, bands=bands, rows=rows
     ).localCheckpoint()
-    # lazy checkpoint: est feeds the vs-store drop set (count + anti-join)
-    # AND the in-batch pair set — three consumers would otherwise re-run
-    # the banded pair join (r12: measured as part of the ~7 s fixed cost
-    # of a 500-doc epoch, see docs/PERF_NOTES.md)
+    # est feeds the vs-store drop set and the in-batch pair set (and the
+    # ledger) — each would otherwise re-run the banded pair join (r12:
+    # measured as part of the ~7 s fixed cost of a 500-doc epoch, see
+    # docs/PERF_NOTES.md)
     est = signature_estimate_pairs(
         batch_sigs.unionByName(cand_sigs), k=k, bands=bands, rows=rows, max_bucket=max_bucket
-    ).filter(F.col("est_jaccard") >= threshold).localCheckpoint(eager=False)
+    ).filter(F.col("est_jaccard") >= threshold).localCheckpoint()
 
     new_ids = batch_sigs.select("doc_id")
     # lsh_candidates orders doc_a < doc_b; stored ids may be larger or
@@ -507,7 +507,6 @@ def incremental_dedup_batch(
             .alias("doc_id")
         ).distinct()
     )
-    near_vs_store = dropped_vs_store.count()
     if removal_ledger is not None:
         # ref = min matching STORE doc per dropped batch doc (pairs have
         # exactly one batch side after the XOR filter above)
@@ -526,29 +525,34 @@ def incremental_dedup_batch(
             .agg(F.min("__store_doc").alias("__store_doc")),
             ref_col="__store_doc",
         )
-    remaining = new_ids.join(dropped_vs_store, "doc_id", "left_anti")
+    # docs shorter than n tokens have no shingles, hence no signature row:
+    # they cannot near-dup under this definition and must pass through
+    # (they already survived exact dedup) rather than silently vanish —
+    # so the decision's universe is every survivor minus the vs-store
+    # drops, and a sigless doc is a singleton keeper
+    remaining = survivors.select("doc_id").join(
+        dropped_vs_store, "doc_id", "left_anti"
+    )
 
-    # 3. in-batch transitive collapse among the remaining docs
+    # 3. in-batch transitive collapse among the remaining docs (pairs
+    #    have both sides in new_ids, so only signed docs ever pair)
     in_batch_pairs = est.filter(
         F.col("__na").isNotNull() & F.col("__nb").isNotNull()
     ).join(remaining.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi").join(
         remaining.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi"
     )
-    # always checkpointed (r12): the decision feeds the keeper count,
-    # BOTH store commits, the accepted join, and (with a ledger) the
-    # drop records — five consumers re-running the iterative component
-    # collapse dominated the per-epoch fixed cost
-    decision = collapse_components(
-        remaining, in_batch_pairs.select("doc_a", "doc_b")
-    ).localCheckpoint(eager=False)
-    kept_ids = decision.filter("keep").select("doc_id")
-    # derived, not recounted (r12): remaining = batch_sigs minus the
-    # vs-store drops (both ⊆ new_ids by construction), so its size is
-    # arithmetic; the signature count rode the checkpoint job (r16), so
-    # only the keeper count runs a job (on the checkpointed decision)
-    n_batch_sigs = int(sigs_obs.get["n"])
-    n_kept_core = kept_ids.count()
-    near_in_batch = (n_batch_sigs - near_vs_store) - n_kept_core
+    # the decision (one row per remaining doc) feeds the accepted set,
+    # both store commits and (with a ledger) the drop records; its
+    # checkpoint counts the remaining docs and the keepers at once, and
+    # the vs-store and in-batch drop counts are arithmetic over those
+    decision, c_dec = counted_checkpoint(
+        collapse_components(remaining, in_batch_pairs.select("doc_a", "doc_b")),
+        "incdedup.decision",
+        F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0)).alias("kept"),
+    )
+    near_vs_store = n_after_store - c_dec["n"]
+    n_accepted = c_dec["kept"]
+    near_in_batch = c_dec["n"] - n_accepted
     if removal_ledger is not None:
         kept_by_comp = decision.filter("keep").select(
             "component", F.col("doc_id").alias("__keeper")
@@ -561,29 +565,25 @@ def incremental_dedup_batch(
             .join(kept_by_comp, "component"),
             ref_col="__keeper",
         )
-    # docs shorter than n tokens have no shingles, hence no signature row:
-    # they cannot near-dup under this definition and must pass through
-    # (they already survived exact dedup) rather than silently vanish.
-    # batch_sigs ⊆ survivors, so |sigless| = n_after_store - n_batch_sigs
-    # and the accepted count is arithmetic too.
-    sigless = survivors.select("doc_id").join(
-        batch_sigs.select("doc_id"), "doc_id", "left_anti"
-    )
-    kept_ids = kept_ids.unionByName(sigless)
-    n_accepted = n_kept_core + (n_after_store - n_batch_sigs)
 
-    accepted_content = hashed.join(kept_ids, "doc_id", "left_semi").select(
-        "content_hash", "doc_id"
+    # the accepted documents, materialized once: the store commit below
+    # and every caller commit (corpus batch, paragraph / span stores)
+    # read this frame instead of re-running the decision.  On the ledger
+    # replay heal the RECORDED accepted set stays the decision of record
+    # (the re-derived set is pinned equal by the determinism the heal
+    # relies on, but the store is the authority) and nothing commits.
+    keep_src = (
+        store.batch_doc_ids(batch_id) if replaying
+        else decision.filter("keep").select("doc_id")
     )
-    accepted_sigs = batch_sigs.join(kept_ids, "doc_id", "left_semi")
-    store.commit_batch(batch_id, accepted_content, accepted_sigs)  # no-op on replay
-
-    # on the ledger replay heal the RECORDED accepted set stays the
-    # decision of record (the re-derived set is pinned equal by the
-    # determinism the heal relies on, but the store is the authority)
-    keep_src = store.batch_doc_ids(batch_id) if replaying else kept_ids
     accepted = new_docs.join(
-        keep_src.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
+        F.broadcast(keep_src.withColumnRenamed("doc_id", id_col)), id_col, "left_semi"
+    ).localCheckpoint()
+    accepted_ids = F.broadcast(accepted.select(F.col(id_col).alias("doc_id")))
+    store.commit_batch(  # no-op on replay
+        batch_id,
+        accepted.select(F.md5(text_col).alias("content_hash"), F.col(id_col).alias("doc_id")),
+        batch_sigs.join(accepted_ids, "doc_id", "left_semi"),
     )
     return accepted, BatchStats(
         batch_id,

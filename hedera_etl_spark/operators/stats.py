@@ -238,6 +238,27 @@ def robust_observe(
     )
 
 
+def counted_checkpoint(
+    df: DataFrame, name: str, *metrics
+) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` with ONE eager ``localCheckpoint`` and read its
+    row count (``"n"``) plus ``metrics`` from that same job — a stage's
+    count never costs a job of its own.
+
+    Safe by construction: the observed node is the ROOT of the
+    checkpointed plan and the eager checkpoint is the first action to
+    touch it, so no earlier action can complete the observation with a
+    default row and no empty-relation rewrite of another query can drop
+    the node.  Spark eliminates a root node only when its output is
+    empty, so the observation trusts zeros (``trust_zeros``): every
+    metric must read zero over an empty frame (coalesce sums)."""
+    df, obs = robust_observe(
+        df, name, F.count(F.lit(1)).alias("n"), *metrics, trust_zeros=True
+    )
+    df = df.localCheckpoint()
+    return df, {k: int(v) for k, v in obs.get.items()}
+
+
 def observe_bucket_cap(
     df: DataFrame,
     size_col: str,

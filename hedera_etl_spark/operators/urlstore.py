@@ -108,22 +108,17 @@ def incremental_url_dedup(
     present = canon.filter(
         F.col("canonical_url").isNotNull() & (F.col("canonical_url") != "")
     )
-    # within-batch keeper per canonical URL
+    # within-batch keeper per canonical URL, materialized once: the
+    # history probe, the commit, the survivor set and the ledger all
+    # read it, and each would otherwise re-run its exchange
     keep_map = present.groupBy("canonical_url").agg(
         F.min(id_col).alias("__keeper")
-    )
+    ).localCheckpoint()
     # history probe, inverted: the batch's canonical set broadcasts
     history = store.read(exclude_batch=batch_id)
     hits = inverted_store_probe(
         history, keep_map.select(F.col("canonical_url")), "canonical_url"
     ).localCheckpoint(eager=True)
-
-    survivors_in_batch = present.join(keep_map, "canonical_url").filter(
-        F.col(id_col) == F.col("__keeper")
-    )
-    kept = survivors_in_batch.join(
-        F.broadcast(hits.select("canonical_url")), "canonical_url", "left_anti"
-    ).select(F.col(id_col))
     missing = canon.filter(
         F.col("canonical_url").isNull() | (F.col("canonical_url") == "")
     ).select(F.col(id_col))
@@ -152,13 +147,15 @@ def incremental_url_dedup(
         )
 
     # the epoch's first-seen canonical set (in-batch keepers not
-    # already in history) — deterministic from the input, replay-safe
+    # already in history) — deterministic from the input, replay-safe.
+    # Its keepers are exactly the surviving URL-bearing docs: a keeper
+    # id is the min id of a row carrying that URL.
     new_urls = keep_map.join(
         F.broadcast(hits.select("canonical_url")), "canonical_url", "left_anti"
     ).select("canonical_url", F.col("__keeper").alias("doc_id"))
 
-    accepted_ids = kept.unionByName(missing)
-    out = docs.join(accepted_ids, id_col, "left_semi")
+    accepted_ids = new_urls.select(F.col("doc_id").alias(id_col)).unionByName(missing)
+    out = docs.join(F.broadcast(accepted_ids), id_col, "left_semi")
     if defer_commit:
         return out, new_urls
     store.commit_batch(batch_id, new_urls)

@@ -122,6 +122,14 @@ def get_spark(
         # process-local, so the delay-scheduling wait only adds task-launch
         # latency; on object-storage clusters 0 is the standard setting too
         .config("spark.locality.wait", "0")
+        # static conf, read once per JVM when codegen first runs: Spark's
+        # default of 100 compiled classes is below one run's working set,
+        # so every warm micro-batch recompiled classes the previous one
+        # evicted.  Measured distinct generated classes of one
+        # perfbench/run.py run (4-core box): corpus 364, hedera_two_tier
+        # 121; at 100 entries they compiled 645 and 141 classes.  1024
+        # holds both with headroom.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

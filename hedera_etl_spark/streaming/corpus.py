@@ -22,6 +22,21 @@ and never double-appends.
 Scale: per batch, the store is touched by one anti-join (content hashes)
 and one LSH bucket join (signatures) — both against O(accepted docs) of
 fixed-width rows, never against corpus text; history is never re-read.
+
+Each stage of a micro-batch ends in ONE eager ``localCheckpoint`` whose
+own job carries the stage's row count (``stats.counted_checkpoint``):
+input, URL, each quality floor, decontamination, paragraph and span
+stages in the spine; in-batch keepers, store survivors and the keeper
+decision inside ``incremental_dedup_batch``.  A stage's ``before`` is the
+previous stage's ``after``, so no job exists only to count.  The commits
+write from materialized frames: the URL store from its checkpointed
+keeper map; the signature store (content + sigs), the paragraph and span
+stores and the corpus batch from the ``accepted`` frame that
+``incremental_dedup_batch`` materializes once.  Budget, measured with
+``perfbench/run.py --workload corpus --trace 1`` (URL, min-token and
+paragraph stages, 250-document micro-batches): 56.5 Spark jobs per
+micro-batch (94.5 before the spine counted once); a warm micro-batch of
+the same stages is pinned by ``test_stream_accounting_and_job_budget``.
 """
 
 from __future__ import annotations
@@ -50,8 +65,11 @@ DOC_SCHEMA = T.StructType(
 @dataclass
 class CorpusIngestMetrics:
     batches: int = 0
+    #: input rows of every non-replayed micro-batch: ``accepted`` plus
+    #: the ``dropped_*`` counters sum to it
     rows_in: int = 0
     accepted: int = 0
+    dropped_quality: int = 0
     dropped_exact: int = 0
     dropped_near: int = 0
     dropped_paragraph_docs: int = 0
@@ -488,11 +506,14 @@ class CorpusIngestPipeline:
         )
 
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        from hedera_etl_spark.operators.stats import counted_checkpoint
+
         m = self.metrics
         bid = f"stream-{batch_id}"
+        replay = self.store.has_batch(bid)
         ledger = None
         if self.ledger_dir is not None and not self._ledger_batches.has(bid):
-            if self.store.has_batch(bid) and not self._is_latest_epoch(bid):
+            if replay and not self._is_latest_epoch(bid):
                 # the heal re-derives against the store MINUS this epoch,
                 # which equals store-as-of-before-the-epoch only while no
                 # LATER epoch has committed — the genuine crash window
@@ -514,75 +535,78 @@ class CorpusIngestPipeline:
                 from hedera_etl_spark.operators.provenance import RemovalLedger
 
                 ledger = RemovalLedger()
-                batch = batch.localCheckpoint(eager=False)  # ledger anti-joins
 
-        def _ledger_drops(stage, reason, pre, post, eager=False):
-            if ledger is None:
-                return post
-            post = post.localCheckpoint(eager=eager)
-            ledger.record(
-                stage, reason,
-                pre.select("doc_id").join(post.select("doc_id"), "doc_id", "left_anti"),
-            )
-            return post
+        def stage(name, out, pre=None, reason=None):
+            """End a stage: ONE eager checkpoint, whose own job carries
+            the stage's row count (no job exists only to count).  With a
+            ledger, the stage's whole-doc drops are ``pre`` anti-join the
+            materialized output — both sides already checkpointed."""
+            out, c = counted_checkpoint(out, f"stream.{name}")
+            if ledger is not None and reason is not None:
+                ledger.record(
+                    *reason,
+                    pre.select("doc_id").join(
+                        out.select("doc_id"), "doc_id", "left_anti"
+                    ),
+                )
+            return out, c["n"]
 
+        # the micro-batch input, read once; every later stage's `before`
+        # is the previous stage's `after`
+        batch, rows_in = stage("input", batch)
+        n = rows_in
         pending_urls = None
         if self.url_store is not None:
             from hedera_etl_spark.operators.urlstore import incremental_url_dedup
 
             url_replay = self.url_store.has_batch(bid)
-            # a plain count, NOT a plan-riding observation (r16 finding):
-            # incremental_url_dedup runs an eager store-probe checkpoint
-            # whose plan contains this subtree, and on a FRESH url store
-            # the static empty-relation rewrite deletes that probe's
-            # broadcast side — the observation then completes with a
-            # populated all-zeros row (no task updates) that the
-            # elimination probe cannot distinguish from a real zero
-            before = batch.count()
             if self.url_commit_policy == "post_decontam":
-                batch, pending_urls = incremental_url_dedup(
+                out, pending_urls = incremental_url_dedup(
                     batch, self.url_store, bid,
                     removal_ledger=ledger, defer_commit=True,
                 )
             else:
-                batch = incremental_url_dedup(
+                out = incremental_url_dedup(
                     batch, self.url_store, bid, removal_ledger=ledger
                 )
-            batch = batch.drop("url").localCheckpoint(eager=False)
+            batch, n_url = stage("url", out.drop("url"))
             if not url_replay:  # replays must not double-count drops
-                m.dropped_url += before - batch.count()
+                m.dropped_url += n - n_url
+            n = n_url
 
+        n_floor_in = n
         if self.min_tokens > 0:
-            pre = batch
-            batch = batch.filter(
-                F.size(F.split("text", " ")) >= self.min_tokens
-            )
             # stage named identically to the batch pipeline's min-token
             # filter (llm_pipeline.py) so ledgers aggregate across the
             # two pipelines under one key (ADVICE r11)
-            batch = _ledger_drops("quality_floor", "below_min_tokens", pre, batch)
+            batch, n = stage(
+                "min_tokens",
+                batch.filter(F.size(F.split("text", " ")) >= self.min_tokens),
+                batch, ("quality_floor", "below_min_tokens"),
+            )
         if self.gopher_rules is not None:
             from hedera_etl_spark.operators.textanalysis import (
                 gopher_quality_flags,
             )
 
-            pre = batch
             flags = gopher_quality_flags(batch, "text", "doc_id",
                                          **self.gopher_rules)
-            batch = batch.join(
-                flags.filter(F.col("gopher_pass")).select("doc_id"),
-                "doc_id",
-                "left_semi",
-            )
             # same stage/reason keys as the batch pipeline's gopher
             # stage (llm_pipeline.py) — cross-pipeline ledger unity
-            batch = _ledger_drops("quality_floor", "gopher_rules", pre, batch)
+            batch, n = stage(
+                "gopher",
+                batch.join(
+                    flags.filter(F.col("gopher_pass")).select("doc_id"),
+                    "doc_id",
+                    "left_semi",
+                ),
+                batch, ("quality_floor", "gopher_rules"),
+            )
         if self.text_classifier_weights is not None:
             from hedera_etl_spark.operators.qualityclf import (
                 quality_classifier_scores,
             )
 
-            pre = batch
             w = (
                 None
                 if self.text_classifier_weights is True
@@ -593,54 +617,37 @@ class CorpusIngestPipeline:
                 n_buckets=self.text_classifier_buckets,
                 scale=self.text_classifier_scale,
             )
-            batch = batch.join(
-                scored.filter(
-                    F.col("score") >= F.lit(self.text_classifier_min_score)
-                ).select("doc_id"),
-                "doc_id",
-                "left_semi",
-            )
             # same stage/reason keys as prepare's classifier floor
-            batch = _ledger_drops(
-                "quality_floor", "text_classifier", pre, batch
+            batch, n = stage(
+                "text_classifier",
+                batch.join(
+                    scored.filter(
+                        F.col("score") >= F.lit(self.text_classifier_min_score)
+                    ).select("doc_id"),
+                    "doc_id",
+                    "left_semi",
+                ),
+                batch, ("quality_floor", "text_classifier"),
             )
+        dropped_quality = n_floor_in - n
         eval_sh = self._eval_sh_for(bid)
-        n_after_decontam = None
         if eval_sh is not None:
             from hedera_etl_spark.operators.decontam import (
                 decontaminate_against_shingles,
             )
-            from hedera_etl_spark.operators.stats import robust_observe
 
             # FIRST, before any store sees the batch: a contaminated doc
             # must never commit hashes/signatures as "accepted" content.
             # eval_sh is the epoch's RECORDED version (replay-stable
             # across eval rotations — see _eval_sh_for).
-            # The pre-decontam count rides the post-decontam count below
-            # as an observation (r16): the standalone `before` job ran
-            # the min-token filter chain once more per micro-batch.
-            batch, pre_obs = robust_observe(
-                batch, "stream.decontam_in", F.count(F.lit(1)).alias("n")
+            batch, n_dec = stage(
+                "decontam",
+                decontaminate_against_shingles(batch, eval_sh, n=self.decontam_n),
+                batch, ("decontam", "contaminated"),
             )
-            pre = batch
-            batch = decontaminate_against_shingles(
-                batch, eval_sh, n=self.decontam_n
-            )
-            # eager on the ledgered path (ADVICE r16 a): a lazy checkpoint
-            # completes pre_obs when it is called, with the true count
-            # only if AQE happened to run the observed node in a shuffle
-            # stage during that call, else with a default row that sends
-            # the read to the fallback job.  The eager one runs the node.
-            batch = _ledger_drops(
-                "decontam", "contaminated", pre, batch, eager=True
-            )
-            if not self.store.has_batch(bid):  # replays don't double-count
-                # remembered for the paragraph stage (r16): its `before`
-                # count re-executed this exact decontam plan every batch
-                n_after_decontam = batch.count()
-                m.dropped_contaminated += (
-                    int(pre_obs.get["n"]) - n_after_decontam
-                )
+            if not replay:  # replays don't double-count
+                m.dropped_contaminated += n - n_dec
+            n = n_dec
         if pending_urls is not None:
             # post_decontam commit policy: remember only URLs whose
             # keeper is still alive after decontamination (and the token
@@ -672,28 +679,21 @@ class CorpusIngestPipeline:
             # identical rebuild; the accepted set is deterministic, so
             # the deferred commit is replay-stable too.
             para_replay = self.paragraph_store.has_batch(bid)
-            pre_para = batch
-            # `batch` is unchanged since the decontam count above (the
-            # deferred URL commit reads it without reassigning), so reuse
-            # that value instead of re-running the decontam plan (r16)
-            before = (
-                n_after_decontam
-                if n_after_decontam is not None
-                else batch.count()
-            )
-            batch, para_new_canon = incremental_paragraph_dedup_plan(
+            out, para_new_canon = incremental_paragraph_dedup_plan(
                 batch,
                 self.paragraph_store,
                 bid,
                 sep=self.paragraph_dedup_sep,
                 min_chars=self.paragraph_min_chars,
             )
-            batch = batch.localCheckpoint(eager=False)
             # only WHOLE-DOC drops (all paragraphs cut) enter the ledger;
             # paragraph cuts that leave the doc alive are text rewrites
-            batch = _ledger_drops("paragraph_dedup", "emptied", pre_para, batch)
+            batch, n_para = stage(
+                "paragraph", out, batch, ("paragraph_dedup", "emptied")
+            )
             if not para_replay:  # replays must not double-count drops
-                m.dropped_paragraph_docs += before - batch.count()
+                m.dropped_paragraph_docs += n - n_para
+            n = n_para
         span_new_canon = None
         if self.span_store is not None:
             from hedera_etl_spark.operators.spandedup import (
@@ -707,22 +707,21 @@ class CorpusIngestPipeline:
             # rejected doc's content would be permanently cut from every
             # later epoch without ever shipping.
             span_replay = self.span_store.has_batch(bid)
-            pre_span = batch
-            before = batch.count()
-            batch, span_new_canon = incremental_exact_substr_plan(
+            out, span_new_canon = incremental_exact_substr_plan(
                 batch,
                 self.span_store,
                 bid,
                 min_len=self.exact_substr_min_len,
             )
-            batch = batch.localCheckpoint(eager=False)
             # only WHOLE-DOC drops (text cut to empty) enter the ledger;
             # partial cuts are text rewrites, exactly like paragraphs
-            batch = batch.filter(F.col("text") != "")
-            batch = _ledger_drops("exact_substr", "emptied", pre_span, batch)
+            batch, n_span = stage(
+                "exact_substr", out.filter(F.col("text") != ""),
+                batch, ("exact_substr", "emptied"),
+            )
             if not span_replay:
-                m.dropped_exact_substr_docs += before - batch.count()
-        replay = self.store.has_batch(bid)
+                m.dropped_exact_substr_docs += n - n_span
+        # `accepted` comes back materialized: every commit below reads it
         accepted, stats = incremental_dedup_batch(
             self.store,
             batch,
@@ -731,21 +730,18 @@ class CorpusIngestPipeline:
             threshold=self.near_threshold,
             removal_ledger=ledger,
         )
+        accepted_ids = F.broadcast(accepted.select("doc_id"))
         if para_new_canon is not None:
             self.paragraph_store.commit_batch(
                 bid,
-                para_new_canon.join(
-                    accepted.select("doc_id"), "doc_id", "left_semi"
-                )
+                para_new_canon.join(accepted_ids, "doc_id", "left_semi")
                 .select("para_hash")
                 .distinct(),
             )
         if span_new_canon is not None:
             self.span_store.commit_batch(
                 bid,
-                span_new_canon.join(
-                    accepted.select("doc_id"), "doc_id", "left_semi"
-                )
+                span_new_canon.join(accepted_ids, "doc_id", "left_semi")
                 # per-hash shipped-occurrence counts (r15) so the store
                 # can serve min_count>2 probes; presence semantics at
                 # min_count=2 are unchanged (any n >= 1 row is a hit)
@@ -753,11 +749,12 @@ class CorpusIngestPipeline:
                 .agg(F.count(F.lit(1)).cast("long").alias("n")),
             )
         m.batches += 1
-        m.rows_in += stats.rows_in
         m.history.append(stats)
         if replay:
             m.replayed_batches += 1
         else:
+            m.rows_in += rows_in
+            m.dropped_quality += dropped_quality
             m.accepted += stats.accepted
             m.dropped_exact += stats.exact_in_batch + stats.exact_vs_store
             m.dropped_near += stats.near_vs_store + stats.near_in_batch

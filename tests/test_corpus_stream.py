@@ -119,9 +119,9 @@ def test_cli_corpus_ingest_roundtrip(spark, dirs, capsys):
     assert rc == 0
     out = capsys.readouterr().out
     # the whole-doc clone (doc 2) is consumed by the PARAGRAPH stage
-    # (its only paragraph is doc 1's), so the doc-level exact counter
-    # sees 2 rows and drops none
-    assert "rows_in=2" in out and "accepted=2" in out
+    # (its only paragraph is doc 1's), so of the 3 input rows the
+    # doc-level exact counter drops none
+    assert "rows_in=3" in out and "accepted=2" in out
     assert "dropped_exact=0" in out
 
 
@@ -1282,3 +1282,133 @@ def test_streaming_text_classifier_floor(spark, dirs):
         for r in ledger.filter("stage = 'quality_floor'").collect()
     }
     assert (2, "text_classifier") in rows and (4, "text_classifier") in rows
+
+
+LONG = (
+    "a long paragraph about distributed stream processing engines and the "
+    "exactly once sinks they commit to"
+)
+#: two epochs through the URL, min-token, paragraph and document stages:
+#: each stage drops at least one document
+ACCOUNTING_EPOCHS = [
+    [
+        (1, BASE, "https://a.example.com/p1"),
+        (2, BASE, "https://a.example.com/p2"),  # exact dup of 1
+        (3, BASE + " zzz", "https://a.example.com/p3"),  # near dup of 1
+        (4, "tiny", "https://a.example.com/p4"),  # below the token floor
+        (5, LONG, "https://a.example.com/p5"),
+        (6, OTHER, "https://a.example.com/p1?utm_source=feed"),  # URL variant of 1
+    ],
+    [
+        (10, LONG, "https://a.example.com/p10"),  # paragraph seen in epoch 1
+        (11, "fresh unseen words that share nothing here", "https://a.example.com/p1"),
+        (12, BASE + " zzz", "https://a.example.com/p12"),  # near dup of stored 1
+        (13, "yet another novel page about parquet files", "https://a.example.com/p13"),
+        (14, BASE, "https://a.example.com/p14"),  # exact dup of stored 1
+    ],
+]
+#: counter -> ledger stage that records the same drops
+ACCOUNTING_STAGES = {
+    "dropped_url": "url_dedup",
+    "dropped_quality": "quality_floor",
+    "dropped_paragraph_docs": "paragraph_dedup",
+    "dropped_exact": "exact_dedup",
+    "dropped_near": "near_dedup",
+}
+
+
+def _accounting_pipeline(spark, dirs, ledger_dir):
+    # paragraphs under 80 chars are exempt from paragraph dedup, so the
+    # short exact / near duplicates reach the document stages
+    return CorpusIngestPipeline(
+        spark,
+        input_dir=dirs["in"],
+        corpus_table=dirs["corpus"],
+        store_path=dirs["store"],
+        checkpoint=dirs["ckpt"],
+        min_tokens=3,
+        paragraph_dedup_sep="\n\n",
+        paragraph_min_chars=80,
+        url_field="url",
+        ledger_dir=ledger_dir,
+    )
+
+
+#: Spark jobs of the warm (second) micro-batch below — URL, min-token
+#: and paragraph stages, store probes, five commits (plus the ledger
+#: write) — measured with this file's session.  Each stage costs the
+#: jobs of its one materialization and no job exists only to count, so
+#: a stray action (a metric ``count()``, a re-derived commit frame)
+#: breaks the budget here instead of in a benchmark.
+WARM_BATCH_JOBS = {"plain": 61, "ledgered": 74}
+
+
+@pytest.mark.parametrize("ledgered", [False, True], ids=["plain", "ledgered"])
+def test_stream_accounting_and_job_budget(spark, dirs, tmp_path, ledgered):
+    """Every document of a micro-batch lands in exactly one counter:
+    ``accepted + drops == rows_in`` over two epochs, each stage dropping
+    something, and a replay of epoch 1 adds nothing.  With a ledger,
+    each stage's ledger rows match its counter.  The warm epoch's jobs,
+    read from the query's job group like perfbench's harness, stay
+    within the budget."""
+    name = "ledgered" if ledgered else "plain"
+    p = _accounting_pipeline(
+        spark, dirs, str(tmp_path / "ledger") if ledgered else None
+    )
+    p.max_files_per_trigger = 1
+    for k, rows in enumerate(ACCOUNTING_EPOCHS):
+        path = os.path.join(dirs["in"], f"b{k}.jsonl")
+        _write_jsonl_url(path, rows)
+        os.utime(path, (k + 1, k + 1))  # one epoch per file, in order
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = []
+    process = p._process_batch
+
+    def counted(batch, batch_id):
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        before = len(tracker.getJobIdsForGroup(group))
+        process(batch, batch_id)
+        jobs.append((group, len(tracker.getJobIdsForGroup(group)) - before))
+
+    p._process_batch = counted
+    q = p.start(available_now=True)
+    q.awaitTermination()
+    assert [g for g, _ in jobs] == [str(q.runId)] * 2
+    assert jobs[1][1] <= WARM_BATCH_JOBS[name], jobs
+
+    m = p.metrics
+    want = {
+        "batches": 2, "rows_in": 11, "accepted": 3, "dropped_quality": 1,
+        "dropped_url": 2, "dropped_paragraph_docs": 1, "dropped_exact": 2,
+        "dropped_near": 2, "dropped_exact_substr_docs": 0,
+        "dropped_contaminated": 0, "replayed_batches": 0,
+    }
+    assert {k: getattr(m, k) for k in want} == want
+    drops = sum(getattr(m, k) for k in ACCOUNTING_STAGES)
+    assert m.accepted + drops == m.rows_in
+    assert sorted(r["doc_id"] for r in p.read_corpus().collect()) == [1, 5, 13]
+    if ledgered:
+        by_stage = {
+            r["stage"]: r["count"]
+            for r in p.read_ledger().groupBy("stage").count().collect()
+        }
+        assert by_stage == {
+            stage: getattr(m, counter)
+            for counter, stage in ACCOUNTING_STAGES.items()
+        }
+        n_ledger = p.read_ledger().count()
+
+    # replay of epoch 1 (a stale checkpoint): nothing counts but the replay
+    process(
+        spark.createDataFrame(
+            ACCOUNTING_EPOCHS[0], "doc_id long, text string, url string"
+        ),
+        0,
+    )
+    assert {k: getattr(m, k) for k in want} == {
+        **want, "batches": 3, "replayed_batches": 1,
+    }
+    assert sorted(r["doc_id"] for r in p.read_corpus().collect()) == [1, 5, 13]
+    if ledgered:
+        assert p.read_ledger().count() == n_ledger
