@@ -64,7 +64,6 @@ def prepare_training_corpus(
     span_dedup_n: int | None = None,
     span_keep_first: bool = True,
     exact_substr_min_len: int | None = None,
-    dedup_skew_safe: bool = False,
     embeddings: DataFrame | None = None,
     embedding_index_path: str | None = None,
     embedding_threshold: float = 0.95,
@@ -137,11 +136,9 @@ def prepare_training_corpus(
     keeps the canonical occurrence), arbitrary-length ExactSubstr
     cutting at ``exact_substr_min_len`` tokens (skipped when None; all
     occurrences go — the Lee et al. 2022 semantics, exact by the
-    spandedup.repeated_intervals coverage equivalence;
-    ``dedup_skew_safe=True`` switches the paragraph/span/ExactSubstr
-    flag stages to the groupBy + SHUFFLE_HASH-hinted form for
-    boilerplate-heavy corpora where one hash goes ultra-hot — see
-    paradedup.duplicate_paragraph_drops), SEMANTIC
+    spandedup.repeated_intervals coverage equivalence; the paragraph,
+    span and ExactSubstr flags are count-over-window forms whose
+    hot-hash skew ``tools/bench_skew.py`` gates), SEMANTIC
     near-dup collapse when
     ``embeddings`` is given (cosine >= ``embedding_threshold`` against
     the persisted IVF index at ``embedding_index_path`` — built on the
@@ -335,7 +332,6 @@ def prepare_training_corpus(
         docs = paragraph_dedup(
             docs, text_col=text_col, id_col=id_col,
             sep=paragraph_dedup_sep, min_chars=paragraph_min_chars,
-            skew_safe=dedup_skew_safe,
         ).localCheckpoint(eager=False)
         docs = _observed("paragraph_dedup", docs)
         # only drops emptied docs (all paragraphs were duplicates)
@@ -469,7 +465,7 @@ def prepare_training_corpus(
 
         out = remove_repeated_spans(
             out, n=span_dedup_n, keep_first=span_keep_first,
-            text_col=text_col, id_col=id_col, skew_safe=dedup_skew_safe,
+            text_col=text_col, id_col=id_col,
         )
         out = _observed("span_dedup", out)
 
@@ -484,7 +480,7 @@ def prepare_training_corpus(
 
         out = exact_substr_dedup(
             out, min_len=exact_substr_min_len,
-            text_col=text_col, id_col=id_col, skew_safe=dedup_skew_safe,
+            text_col=text_col, id_col=id_col,
         )
         out = _observed("exact_substr", out)
 

@@ -84,9 +84,17 @@ def paragraph_occurrences(
     )
 
 
-def duplicate_paragraph_drops(
-    occ: DataFrame, skew_safe: bool = False
-) -> DataFrame:
+# in-batch count and min-(doc_id, idx) keeper of every occurrence: two
+# window functions over ONE (para_hash)-partitioned exchange, shared by
+# the batch drops and the incremental flag frame
+_KEEPER_WINDOW = (
+    "count(1) OVER (PARTITION BY para_hash) AS __cnt",
+    "min(struct(doc_id, idx)) OVER (PARTITION BY para_hash) AS __keep",
+)
+_NOT_KEEPER = "__cnt >= 2 AND (doc_id <> __keep.doc_id OR idx <> __keep.idx)"
+
+
+def duplicate_paragraph_drops(occ: DataFrame) -> DataFrame:
     """(doc_id, idx) of every NON-canonical occurrence of a duplicated
     paragraph: count + min-(doc_id, idx) keeper election as two window
     functions over ONE (para_hash)-partitioned exchange, then a row
@@ -101,48 +109,17 @@ def duplicate_paragraph_drops(
     (0.67 s vs 0.90 s, docs/PERF_NOTES.md); only narrow
     hash/index rows move, as before.
 
-    Skew exposure (r13 advice, disclosed): one ultra-hot paragraph
-    hash (a cookie banner repeated across a crawl) buffers every
-    occurrence in a single window task with no map-side combine.
-    ``skew_safe=True`` switches to the groupBy + SHUFFLE_HASH-hinted
-    join-back: the count and the min-struct keeper election combine
-    map-side (one partial row per distinct hash per task), the hint
-    forbids the driver-built broadcast the r7 form died on, and
-    occurrences STREAM through the probe instead of buffering.  Cost:
-    ``occ`` gains a second consumer — callers that pass a
-    localCheckpoint'ed occurrence frame (paragraph_dedup does) pay
-    nothing extra.  Equality of the two forms is pytest-pinned."""
-    if skew_safe:
-        agg = (
-            occ.groupBy("para_hash")
-            .agg(
-                F.count(F.lit(1)).alias("__cnt"),
-                F.min(F.struct("doc_id", "idx")).alias("__keep"),
-            )
-            .filter(F.col("__cnt") >= 2)
-            .select("para_hash", "__keep")
-        )
-        return (
-            occ.join(agg.hint("shuffle_hash"), "para_hash", "inner")
-            .filter(
-                (F.col("doc_id") != F.col("__keep.doc_id"))
-                | (F.col("idx") != F.col("__keep.idx"))
-            )
-            .select("doc_id", "idx")
-        )
+    Skew: one ultra-hot paragraph hash (a cookie banner repeated across
+    a crawl) buffers every occurrence in a single window task.  Measured
+    bounded: ``tools/bench_skew.py`` gates this form's skew/uniform
+    ratio on a corpus where one paragraph is ~25% of the documents
+    (docs/PERF_NOTES.md)."""
     # SQL-text construction (r16, guide §7.3): identical analyzed plan to
     # the previous Column-chain form in ~10x fewer py4j round-trips — the
     # composed prepare rebuilds this every call
     return (
-        occ.selectExpr(
-            "doc_id",
-            "idx",
-            "count(1) OVER (PARTITION BY para_hash) AS __cnt",
-            "min(struct(doc_id, idx)) OVER (PARTITION BY para_hash) AS __keep",
-        )
-        .filter(
-            "__cnt >= 2 AND (doc_id <> __keep.doc_id OR idx <> __keep.idx)"
-        )
+        occ.selectExpr("doc_id", "idx", *_KEEPER_WINDOW)
+        .filter(_NOT_KEEPER)
         .select("doc_id", "idx")
     )
 
@@ -187,7 +164,6 @@ def paragraph_dedup(
     sep: str = "\n\n",
     min_chars: int = 1,
     drop_empty: bool = True,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Corpus with duplicated paragraphs removed (module docstring
     semantics): same schema as ``docs`` with ``text_col`` rebuilt from
@@ -198,19 +174,14 @@ def paragraph_dedup(
     trim agrees, and the property test pins the rule)."""
     if "__drop_idx" in docs.columns:
         raise ValueError("column name '__drop_idx' is reserved")
-    # the occurrence frame feeds TWO consumers (the keeper aggregate and
-    # the drop probe) and its derivation is real per-row work (split +
-    # per-paragraph md5 over the whole corpus): pin it once instead of
-    # hashing the corpus twice — the checkpoint-vs-rescan rule
-    # (docs/PERF_NOTES.md); the pinned frame is the narrow
-    # (doc_id, idx, hash) projection, not the text
+    # one consumer (the keeper window), yet the lazy checkpoint stays:
+    # the benchmarked prepare path is measured with this plan boundary,
+    # which pins the narrow (doc_id, idx, hash) projection, not the text;
+    # dropping it is a performance change to measure on its own
     occ = paragraph_occurrences(docs, text_col, id_col, sep, min_chars).localCheckpoint(
         eager=False
     )
-    # skew_safe (r14): the hot-hash escape hatch threads through to the
-    # production path — the occurrence frame is already checkpointed
-    # here, so its second consumer costs nothing extra
-    drops = duplicate_paragraph_drops(occ, skew_safe=skew_safe)
+    drops = duplicate_paragraph_drops(occ)
     return rebuild_without(docs, drops, text_col, id_col, sep, drop_empty)
 
 
@@ -220,7 +191,7 @@ def paragraph_dedup(
 # continuous-crawl analogue of incremental_dedup.py's document-level
 # signature store, at paragraph granularity.  The store keeps ONE md5
 # per accepted canonical paragraph (O(accepted paragraphs) bytes, never
-# corpus text), and a batch run touches it with one anti-join.
+# corpus text), and a batch run touches it with one broadcast probe.
 # ---------------------------------------------------------------------------
 
 
@@ -261,47 +232,47 @@ def incremental_paragraph_dedup_plan(
     after filtering by a downstream acceptance decision, e.g. doc-level
     dedup: committing a paragraph whose canonical document is later
     REJECTED would permanently cut content whose one legitimate home
-    never entered the corpus — ADVICE r9).
+    never entered the corpus — ADVICE r9).  Each new hash survives at
+    exactly ONE (doc_id, idx), so the doc attribution is unambiguous.
+
+    One decision frame: every eligible occurrence carries its in-batch
+    count and min-(doc_id, idx) keeper (the window of
+    :func:`duplicate_paragraph_drops`) and its history hit, and is
+    materialized once.  An occurrence is CUT when history holds its
+    hash or it is a non-keeper in-batch copy; the cut rows feed the
+    rebuild and the kept rows are the new canon.
 
     Scale shape (VERDICT r9 #1 — the history side never shuffles): the
-    store probe is INVERTED.  Instead of anti/semi-joining the batch
-    against the full history (a full-history shuffle per micro-batch,
-    since a mature store cannot broadcast), the batch's OWN distinct
-    hash set — bounded by batch size — broadcasts, the history scan is
-    reduced map-side by one BroadcastHashJoin to the tiny ``hits`` set
-    (history ∩ batch), and both downstream probes (the drop semi-join
-    and the new-canon anti-join) run against broadcast hits.  Per batch:
-    ONE history scan, ZERO history shuffles (plan-pinned in
-    tests/test_paradedup.py); ``hits`` is eagerly pinned so its two
-    consumers do not re-scan history."""
+    store probe is INVERTED.  The batch's OWN distinct hash set — bounded
+    by batch size — broadcasts, and the history scan is reduced map-side
+    by one BroadcastHashJoin to the tiny hit set (history ∩ batch), which
+    broadcasts into the flag frame.  Per batch: ONE history scan, ZERO
+    history shuffles (plan-pinned in tests/test_paradedup.py).  A
+    crash-interrupted compaction can leave a hash in history twice; the
+    flag join then repeats only CUT rows, which the rebuild's per-doc
+    index list absorbs, so the hit set is never deduplicated."""
     occ = paragraph_occurrences(docs, text_col, id_col, sep, min_chars).localCheckpoint(
         eager=False
     )
-    history = store.read(exclude_batch=batch_id)
-    batch_hashes = occ.select("para_hash").distinct()
-    # hits may carry duplicate hashes after a crash-interrupted
-    # compaction (target + leftover sources overlap); both consumers are
-    # semi/anti joins, so duplicates are harmless and deduping here would
-    # put a shuffle back over the history subtree
-    hits = inverted_store_probe(history, batch_hashes, "para_hash").localCheckpoint(
-        eager=True
+    hits = inverted_store_probe(
+        store.read(exclude_batch=batch_id),
+        occ.select("para_hash").distinct(),
+        "para_hash",
+    ).select("para_hash", F.lit(True).alias("__hit"))
+    flags = (
+        occ.selectExpr("doc_id", "idx", "para_hash", *_KEEPER_WINDOW)
+        .join(F.broadcast(hits), "para_hash", "left")
+        .selectExpr(
+            "doc_id", "idx", "para_hash",
+            # NULL (a NULL doc_id) keeps the row, as the batch filter does
+            f"coalesce(__hit IS NOT NULL OR ({_NOT_KEEPER}), false) AS __cut",
+        )
+        .localCheckpoint()
     )
-    vs_store = occ.join(F.broadcast(hits), "para_hash", "left_semi").select("doc_id", "idx")
-    in_batch = duplicate_paragraph_drops(occ)
-    # union then distinct: an occurrence can be both a store hit and a
-    # within-batch non-canonical copy
-    drops = vs_store.unionByName(in_batch).distinct().localCheckpoint(eager=True)
-    out = rebuild_without(docs, drops, text_col, id_col, sep, drop_empty)
-    # newly-accepted canon: every eligible occurrence that survived —
-    # i.e. is not in the drop set and not already in history.  Each hash
-    # survives at exactly ONE (doc_id, idx) (within-batch keep-first), so
-    # the doc attribution is unambiguous for acceptance filtering.
-    new_canon = (
-        occ.join(drops, ["doc_id", "idx"], "left_anti")
-        .select("doc_id", "para_hash")
-        .join(F.broadcast(hits), "para_hash", "left_anti")
+    out = rebuild_without(
+        docs, flags.filter("__cut"), text_col, id_col, sep, drop_empty
     )
-    return out, new_canon
+    return out, flags.filter("NOT __cut").select("doc_id", "para_hash")
 
 
 def incremental_paragraph_dedup(
@@ -324,8 +295,8 @@ def incremental_paragraph_dedup(
     excludes ``batch_id`` itself, so a replay of a committed batch
     judges against the same history it saw the first time and returns
     byte-identical documents (pinned in tests).  The commit itself is
-    idempotent (single rename).  Plan shape and the deferred-commit
-    variant: :func:`incremental_paragraph_dedup_plan`."""
+    idempotent (single rename).  Plan shape:
+    :func:`incremental_paragraph_dedup_plan`."""
     out, new_canon = incremental_paragraph_dedup_plan(
         docs, store, batch_id, text_col, id_col, sep, min_chars, drop_empty
     )

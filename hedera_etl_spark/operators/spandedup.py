@@ -101,13 +101,33 @@ def _span_rows(
     )
 
 
+def _window_flags(rows: DataFrame, owner: bool) -> DataFrame:
+    """``rows`` plus ``__cnt``, the occurrence count of its span hash,
+    and (``owner``) ``__own``, the hash's min-(doc_id, pos) occurrence:
+    window functions over ONE h-partitioned exchange — the flag of the
+    batch operators and of the incremental epoch alike."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("h")
+    out = rows.withColumn("__cnt", F.count(F.lit(1)).over(w))
+    if owner:
+        out = out.withColumn("__own", F.min(F.struct("doc_id", "pos")).over(w))
+    return out
+
+
+def _not_owner():
+    return ~(
+        (F.col("doc_id") == F.col("__own.doc_id"))
+        & (F.col("pos") == F.col("__own.pos"))
+    )
+
+
 def repeated_spans(
     docs: DataFrame,
     n: int = 50,
     min_count: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    skew_safe: bool = False,
 ) -> DataFrame:
     """(doc_id, pos) of every n-token span whose verbatim content occurs
     at least ``min_count`` times across the corpus.
@@ -126,40 +146,14 @@ def repeated_spans(
     span-rows subtree now has exactly ONE consumer so no checkpoint is
     needed at all.
 
-    Skew exposure (r13 advice, disclosed): the window partitions by
-    the span hash, so EVERY occurrence of one ultra-hot hash (a
-    ubiquitous cookie banner, a license header) buffers in a single
-    task's window partition — a straggler/spill task on
-    boilerplate-heavy corpora, with no map-side partial combine.
-    ``skew_safe=True`` is the escape hatch: per-hash counts via
-    groupBy (partial aggregation combines the hot hash map-side, each
-    map task emits ONE row per distinct hash) joined back with an
-    explicit SHUFFLE_HASH hint — the hint forbids the driver-built
-    broadcast that OOM'd the r7 join-back form (the build side stays
-    partition-wise and bounded by distinct flagged hashes, and the
-    occurrence side STREAMS through the probe instead of buffering).
-    Cost: the span-rows subtree gains a second consumer, i.e. one
-    extra corpus scan (deterministic recompute — cheaper than
-    checkpointing corpus-sized span rows).  Default stays the window
-    form: faster when no hash is pathologically hot (one exchange, no
-    join, docs/PERF_NOTES.md r13); equality of the two forms is
-    pytest-pinned."""
-    from pyspark.sql import Window
-
+    Skew: every occurrence of one ultra-hot hash (a ubiquitous cookie
+    banner, a license header) lands in a single task's window
+    partition.  Measured bounded: ``tools/bench_skew.py`` gates this
+    form's skew/uniform ratio on a corpus where one boilerplate run is
+    in ~25% of the documents (docs/PERF_NOTES.md)."""
     rows = _span_rows(docs, n, text_col, id_col)
-    if skew_safe:
-        flagged_h = (
-            rows.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-            .filter(F.col("__cnt") >= min_count)
-            .select("h")
-        )
-        return rows.join(
-            flagged_h.hint("shuffle_hash"), "h", "left_semi"
-        ).select("doc_id", "pos")
-    w = Window.partitionBy("h")
     return (
-        rows.withColumn("__cnt", F.count(F.lit(1)).over(w))
+        _window_flags(rows, owner=False)
         .filter(F.col("__cnt") >= min_count)
         .select("doc_id", "pos")
     )
@@ -172,7 +166,6 @@ def remove_repeated_spans(
     keep_first: bool = False,
     text_col: str = "text",
     id_col: str = "doc_id",
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Rebuild each document with every repeated n-token span cut out.
 
@@ -183,54 +176,14 @@ def remove_repeated_spans(
     SAME (h)-partitioned window spec, so it rides the one existing
     exchange instead of adding an aggregate + join.
 
-    Same window-form rationale as :func:`repeated_spans` (r13): the
-    old aggregate + join-back broadcast-OOMs once the flagged
-    dimension outgrows the driver, and the window form is faster at
-    bench SF anyway.  Same hot-hash skew exposure too —
-    ``skew_safe=True`` switches to the groupBy + SHUFFLE_HASH-hinted
-    join-back (map-side partial combine for the count AND the
-    min-struct owner election, both algebraic; occurrences stream
-    through the probe instead of buffering in one window partition) at
-    the cost of a second span-rows scan; see repeated_spans."""
-    from pyspark.sql import Window
-
+    Same window-form rationale and hot-hash measurement as
+    :func:`repeated_spans`."""
     rows = _span_rows(docs, n, text_col, id_col)
-    if skew_safe:
-        # owner election only when keep_first needs it (r14 review:
-        # the default cut-all path shouldn't pay a second corpus-scale
-        # aggregate and carry __o through the join for nothing)
-        aggs = [F.count(F.lit(1)).alias("__cnt")]
-        if keep_first:
-            aggs.append(F.min(F.struct("doc_id", "pos")).alias("__o"))
-        agg = (
-            rows.groupBy("h")
-            .agg(*aggs)
-            .filter(F.col("__cnt") >= min_count)
-            .select("h", *(["__o"] if keep_first else []))
-        )
-        flagged = rows.join(agg.hint("shuffle_hash"), "h", "inner")
-        if keep_first:
-            flagged = flagged.filter(
-                ~(
-                    (F.col("doc_id") == F.col("__o.doc_id"))
-                    & (F.col("pos") == F.col("__o.pos"))
-                )
-            )
-    else:
-        w = Window.partitionBy("h")
-        flagged = rows.withColumn("__cnt", F.count(F.lit(1)).over(w))
-        if keep_first:
-            flagged = flagged.withColumn(
-                "__o", F.min(F.struct("doc_id", "pos")).over(w)
-            )
-        flagged = flagged.filter(F.col("__cnt") >= min_count)
-        if keep_first:
-            flagged = flagged.filter(
-                ~(
-                    (F.col("doc_id") == F.col("__o.doc_id"))
-                    & (F.col("pos") == F.col("__o.pos"))
-                )
-            )
+    flagged = _window_flags(rows, owner=keep_first).filter(
+        F.col("__cnt") >= min_count
+    )
+    if keep_first:
+        flagged = flagged.filter(_not_owner())
     cuts = flagged.groupBy("doc_id").agg(
         F.array_sort(F.collect_list("pos")).alias("__cuts")
     )
@@ -276,7 +229,6 @@ def repeated_intervals(
     min_count: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Maximal repeated-coverage intervals per document: (doc_id, start,
     end_pos, n_tokens), 1-based inclusive token positions, for every
@@ -313,8 +265,7 @@ def repeated_intervals(
     """
     w = int(min_len)
     starts = repeated_spans(
-        docs, n=w, min_count=min_count, text_col=text_col, id_col=id_col,
-        skew_safe=skew_safe,
+        docs, n=w, min_count=min_count, text_col=text_col, id_col=id_col
     )
     return _starts_to_intervals(starts, w)
 
@@ -357,7 +308,6 @@ def exact_substr_dedup(
     min_count: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Rebuild each document with every repeated substring of
     >= ``min_len`` tokens cut out — distributed ExactSubstr.  Returns
@@ -374,7 +324,7 @@ def exact_substr_dedup(
     boilerplate-heavy documents, same output."""
     ivals = repeated_intervals(
         docs, min_len=min_len, min_count=min_count,
-        text_col=text_col, id_col=id_col, skew_safe=skew_safe,
+        text_col=text_col, id_col=id_col,
     )
     return _cut_by_intervals(docs, ivals, text_col, id_col)
 
@@ -429,14 +379,12 @@ def _span_hash_schema():
     # that committed batch, so the history probe can honor min_count>2.
     # Nullable: stores written before r15 carry presence-only rows, and
     # read() coalesces a missing n to 1 (each old row was committed
-    # DISTINCT, i.e. "at least one shipped occurrence" — the exact
-    # information the old min_count=2 path consumed, so old stores stay
-    # correct at min_count=2 and conservatively UNDER-count — never
-    # over-cut — at higher thresholds).
-    # ``b`` = committing batch id.  The count path sums per-hash counts
-    # across batches, and a crash-interrupted compaction can transiently
-    # leave a batch's rows in BOTH source and target dirs — the presence
-    # path absorbs that through its semi-join, the count path dedups by
+    # DISTINCT, i.e. "at least one shipped occurrence" — exact at
+    # min_count=2 and conservatively UNDER-counting — never over-cutting
+    # — at higher thresholds).
+    # ``b`` = committing batch id.  The probe sums per-hash counts across
+    # batches, and a crash-interrupted compaction can transiently leave a
+    # batch's rows in BOTH source and target dirs — the probe dedups by
     # (hash, batch) before summing.  Constant per batch dir, so parquet
     # dictionary-encodes it to nothing.
     return T.StructType(
@@ -547,115 +495,82 @@ def incremental_exact_substr_plan(
     here.  A window cuts when history + batch occurrences reach
     ``min_count``; if history already ships a copy, ALL batch
     occurrences cut (the canonical copy lives in an earlier epoch),
-    else the min-(doc_id, pos) batch occurrence survives as keeper —
-    the same keep-first composition rule as min_count=2.  Below the
-    threshold every occurrence ships and its count commits, so a hash
-    crossing the threshold in a LATER epoch cuts from that epoch on
-    while earlier shipped copies stay (the documented late-duplicate
-    asymmetry; the published algorithm's fixed min_count=2 is the
-    degenerate case where presence alone decides, and that path keeps
-    its r14 plan shape bit-for-bit).  Pre-r15 presence-only store rows
-    count as 1 — exact at min_count=2, conservatively under-counting
-    (never over-cutting) above it.
+    else the min-(doc_id, pos) batch occurrence survives as keeper.
+    Below the threshold every occurrence ships and its count commits,
+    so a hash crossing the threshold in a LATER epoch cuts from that
+    epoch on while earlier shipped copies stay (the documented
+    late-duplicate asymmetry).  At the published ``min_count=2`` any
+    history copy cuts.  Pre-r15 presence-only store rows count as 1 —
+    exact at min_count=2, conservatively under-counting (never
+    over-cutting) above it.
 
-    Scale shape: the within-batch flag is the count-over-window form
-    (one exchange on the span hash, no join); the history probe is
-    INVERTED (the batch's own distinct hash set broadcasts, history
-    scans map-side to the tiny hit set — one history scan, ZERO
-    history shuffles, plan-pinned); the merge + cut are the batch
-    operators unchanged."""
-    from pyspark.sql import Window
+    One decision frame: every window occurrence carries its in-batch
+    count and min-(doc_id, pos) owner (the window of the batch
+    operators) and its history count, and is materialized once.  Its
+    cut rows merge into the cut intervals; its kept rows, clear of
+    every cut interval, are the new canon.
 
+    Scale shape: the history probe is INVERTED (the batch's own distinct
+    hash set broadcasts, history scans map-side to the tiny hit set —
+    one history scan, ZERO history shuffles, plan-pinned), and the
+    per-hash history counts broadcast into the flag frame; the merge +
+    cut are the batch operators unchanged."""
     from hedera_etl_spark.operators.joins import inverted_store_probe
 
     if int(min_count) < 2:
         raise ValueError("min_count must be >= 2 (1 would cut everything)")
     w = int(min_len)
-    rows = _span_rows(docs, w, text_col, id_col)
-    win = Window.partitionBy("h")
-    counted = rows.withColumn(
-        "__cnt", F.count(F.lit(1)).over(win)
-    ).localCheckpoint(eager=False)
-    history = store.read(exclude_batch=batch_id).withColumnRenamed(
-        "span_hash", "h"
-    )
-    batch_hashes = counted.select("h").distinct()
-    # prune before the probe: the presence path consumes only h (scan
-    # reads one column, r14 plan shape byte-identical); the count path
-    # also needs (n, b) for the per-batch sums
-    probe_cols = ["h"] if int(min_count) == 2 else ["h", "n", "b"]
+    rows = _span_rows(docs, w, text_col, id_col).localCheckpoint(eager=False)
     hits = inverted_store_probe(
-        history.select(*probe_cols), batch_hashes, "h"
-    ).localCheckpoint(eager=True)
-    # within-batch: the min-(doc_id, pos) occurrence of each repeated
-    # hash is the canonical keeper — its election rides the SAME
-    # h-partitioned window as the count, no extra exchange
-    owner = F.min(F.struct("doc_id", "pos")).over(win)
-    not_owner = ~(
-        (F.col("doc_id") == F.col("__own.doc_id"))
-        & (F.col("pos") == F.col("__own.pos"))
+        store.read(exclude_batch=batch_id).select(
+            F.col("span_hash").alias("h"), "n", "b"
+        ),
+        rows.select("h").distinct(),
+        "h",
     )
-    if int(min_count) == 2:
-        # presence path, r14 plan shape unchanged: any history hit IS
-        # the second occurrence; duplicate hit keys are semi-join-safe
-        vs_store = counted.join(F.broadcast(hits), "h", "left_semi").select(
-            "doc_id", "pos"
+    # history total per hash = shipped occurrences summed over committed
+    # batches.  Compaction debris repeats a batch's rows in source and
+    # target dirs, so (h, committing batch) dedups first.  Pre-r15
+    # presence rows have b NULL: distinct old batches sharing a hash then
+    # collapse to one row — an UNDER-count, the documented conservative
+    # direction.
+    hit_counts = (
+        hits.dropDuplicates(["h", "b"]).groupBy("h").agg(F.sum("n").alias("__hn"))
+    )
+    hn = F.coalesce(F.col("__hn"), F.lit(0))
+    flags = (
+        _window_flags(rows, owner=True)
+        .join(F.broadcast(hit_counts), "h", "left")
+        .select(
+            "doc_id", "pos", "h",
+            # NULL (a NULL doc_id) keeps the row, as the batch filter does
+            F.coalesce(
+                (hn + F.col("__cnt") >= min_count) & ((hn >= 1) | _not_owner()),
+                F.lit(False),
+            ).alias("__cut"),
         )
-        in_batch = (
-            counted.withColumn("__own", owner)
-            .filter((F.col("__cnt") >= min_count) & not_owner)
-            .select("doc_id", "pos")
-        )
-        starts = vs_store.unionByName(in_batch).distinct()
-    else:
-        # count path (r15): total = history shipped occurrences + batch
-        # occurrences.  The hit-set aggregate dedups compaction-debris
-        # rows per (h, committing batch) first — compact can transiently
-        # leave a batch's rows in both source and target dirs, and
-        # summing the duplicate would inflate history counts (the same
-        # duplicate-tolerance rule the presence path gets from its
-        # semi-join).  Pre-r15 presence rows have b NULL: distinct old
-        # batches sharing a hash then collapse to one row — an
-        # UNDER-count, the documented conservative direction.
-        hit_counts = (
-            hits.dropDuplicates(["h", "b"])
-            .groupBy("h")
-            .agg(F.sum("n").alias("__hn"))
-        )
-        flagged = (
-            counted.withColumn("__own", owner)
-            .join(F.broadcast(hit_counts), "h", "left")
-            .withColumn("__hn", F.coalesce(F.col("__hn"), F.lit(0)))
-        )
-        starts = (
-            flagged.filter(
-                (F.col("__hn") + F.col("__cnt") >= min_count)
-                & ((F.col("__hn") >= 1) | not_owner)
-            )
-            .select("doc_id", "pos")
-            .distinct()
-        )
-    ivals = _starts_to_intervals(starts, w).localCheckpoint(eager=False)
+        .localCheckpoint()
+    )
+    ivals = _starts_to_intervals(
+        flags.filter("__cut").select("doc_id", "pos"), w
+    ).localCheckpoint(eager=False)
     out = _cut_by_intervals(docs, ivals, text_col, id_col)
-    # surviving canon: every occurrence that was not cut (anti-join on
-    # the start set covers history hits AND within-batch non-canonical
-    # copies) and is clear of every cut interval (per-doc bounded
-    # exists) — seam-straddling windows describe token runs that no
-    # longer exist in the shipped text
+    # surviving canon: every kept occurrence clear of every cut interval
+    # (per-doc bounded exists) — seam-straddling windows describe token
+    # runs that no longer exist in the shipped text
     per_doc = ivals.groupBy("doc_id").agg(
         F.collect_list(F.struct("start", "end_pos")).alias("__iv")
-    )
-    candidates = (
-        counted.join(starts, ["doc_id", "pos"], "left_anti")
-        .join(per_doc, "doc_id", "left")
     )
     clear = F.col("__iv").isNull() | ~F.exists(
         F.col("__iv"),
         lambda iv: (iv["start"] <= F.col("pos") + F.lit(w - 1))
         & (F.col("pos") <= iv["end_pos"]),
     )
-    new_canon = candidates.filter(clear).select(
-        "doc_id", F.col("h").alias("span_hash")
+    new_canon = (
+        flags.filter("NOT __cut")
+        .join(per_doc, "doc_id", "left")
+        .filter(clear)
+        .select("doc_id", F.col("h").alias("span_hash"))
     )
     return out, new_canon
 

@@ -700,7 +700,7 @@ def char_fingerprints_auto(
     the explode+aggregate scale form at/above it (the measured sf10
     crossover), or obeys an explicit ``form=``.  The two forms are
     bit-equal (pinned in test_textdedup.py), so the choice is purely a
-    physical-plan decision — exactly the dedup_skew_safe pattern."""
+    physical-plan decision."""
     scalable = _pick_form(docs, text_col, form, auto_threshold_chars)
     fn = char_fingerprints_scalable if scalable else char_fingerprints
     return fn(docs, gram=gram, text_col=text_col, id_col=id_col)

@@ -26,24 +26,25 @@ Semantics:
 - within a batch the min-doc-id keeper per canonical URL survives;
 - a doc whose canonical URL was committed by any EARLIER epoch drops
   (the recrawl);
-- WHAT the epoch commits is a policy choice (ADVICE r11).  The default
-  commits the full first-seen canonical set — including URLs of docs a
-  LATER stage (content dedup, decontamination, floors) goes on to
-  drop — on the argument that re-fetching can only yield the same
-  later-stage outcome.  That argument holds only while (a) the page's
-  content is stable across crawls and (b) the later stages' decision
-  inputs are stable: a versioned eval rotation invalidates (b) — a URL
-  whose first crawl was contaminated under eval v1 stays excluded
-  forever even after rotating to v2, because the recrawl dies at the
-  URL stage before decontamination can re-decide — and a recrawl whose
-  content CHANGED invalidates (a).  ``defer_commit=True`` is the hook
-  for the alternative policy: the caller receives the epoch's
-  first-seen set and commits only the slice it wants remembered
-  (CorpusIngestPipeline's ``url_commit_policy="post_decontam"`` commits
-  only URLs whose keeper survived decontamination, so contaminated-on-
-  first-crawl URLs stay reclaimable after an eval rotation or a content
+- the epoch's first-seen canonical set (in-batch keepers not already in
+  history) is returned, not committed: WHAT the epoch remembers is a
+  policy choice (ADVICE r11) that the caller makes with
+  ``store.commit_batch`` under the SAME ``batch_id``.
+  ``CorpusIngestPipeline`` commits the full set at the URL stage under
+  ``url_commit_policy="always"`` — including URLs of docs a LATER stage
+  (content dedup, decontamination, floors) goes on to drop — on the
+  argument that re-fetching can only yield the same later-stage
+  outcome.  That argument holds only while (a) the page's content is
+  stable across crawls and (b) the later stages' decision inputs are
+  stable: a versioned eval rotation invalidates (b) — a URL whose first
+  crawl was contaminated under eval v1 stays excluded forever even
+  after rotating to v2, because the recrawl dies at the URL stage
+  before decontamination can re-decide — and a recrawl whose content
+  CHANGED invalidates (a).  Under ``"post_decontam"`` it commits only
+  URLs whose keeper survived decontamination, so contaminated-on-first-
+  crawl URLs stay reclaimable after an eval rotation or a content
   change, at the price of re-running the content stages on every
-  recrawl of a dropped page).  Either policy is deterministic from the
+  recrawl of a dropped page.  Either policy is deterministic from the
   epoch's input + pinned eval version, so replays re-derive the
   identical commit (idempotent rename).
 """
@@ -86,23 +87,19 @@ def incremental_url_dedup(
     url_col: str = "url",
     id_col: str = "doc_id",
     removal_ledger=None,
-    defer_commit: bool = False,
-):
+) -> tuple[DataFrame, DataFrame]:
     """One epoch of streaming canonical-URL dedup: drop recrawls of any
     URL committed by an earlier epoch plus within-batch URL variants
-    (min-id keeper), commit this epoch's first-seen canonical set, and
-    return the surviving docs (input schema preserved).
+    (min-id keeper).  Returns ``(surviving docs, first-seen canonical
+    set)``: the docs keep the input schema; the set is
+    (canonical_url, doc_id) rows that the caller commits, or the slice
+    of them it wants remembered (module docstring), under the SAME
+    ``batch_id`` with ``store.commit_batch``.
 
     Deterministic under retries without storing outputs: the store read
     excludes ``batch_id`` itself.  ``removal_ledger``: optional
     provenance — in-batch drops name their keeper, vs-store drops name
     the store doc that first claimed the URL.
-
-    ``defer_commit=True`` is the commit-policy hook (module docstring):
-    nothing commits; returns ``(surviving docs, first-seen canonical
-    set)`` and the caller commits the slice it wants remembered under
-    the SAME ``batch_id`` (``store.commit_batch``), after whatever later
-    stage informs the policy.
     """
     canon = canonical_urls(docs, url_col).localCheckpoint(eager=False)
     present = canon.filter(
@@ -156,7 +153,4 @@ def incremental_url_dedup(
 
     accepted_ids = new_urls.select(F.col("doc_id").alias(id_col)).unionByName(missing)
     out = docs.join(F.broadcast(accepted_ids), id_col, "left_semi")
-    if defer_commit:
-        return out, new_urls
-    store.commit_batch(batch_id, new_urls)
-    return out
+    return out, new_urls

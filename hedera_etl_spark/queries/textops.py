@@ -1815,12 +1815,11 @@ _PARA_ORACLE = f"""
     # the plan embeds the occurrence frame's lazy localCheckpoint —
     # same cache opt-out rationale as the minhash/ngram entries
     cache_plan=False,
-    # Driver-green r14 (incl. the skew_safe hatch); parked r15: the
-    # count-over-window dup kernel stays driver-checked via llm_span_flags
-    # (IN r15, same window form) and the keeper collapse via
-    # llm_removal_ledger's keeper attribution (IN r17); window==skew_safe
-    # equality pinned in test_paradedup.py; keeps
-    # its bench slot.
+    # Driver-green r14; parked r15: the count-over-window dup kernel
+    # stays driver-checked via llm_span_flags (IN r15, same window form)
+    # and the keeper collapse via llm_removal_ledger's keeper attribution
+    # (IN r17); the keep-first drop set is pinned in test_paradedup.py;
+    # keeps its bench slot.
     driver_visible=False,
 )
 def llm_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

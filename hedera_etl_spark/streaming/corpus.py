@@ -28,15 +28,20 @@ own job carries the stage's row count (``stats.counted_checkpoint``):
 input, URL, each quality floor, decontamination, paragraph and span
 stages in the spine; in-batch keepers, store survivors and the keeper
 decision inside ``incremental_dedup_batch``.  A stage's ``before`` is the
-previous stage's ``after``, so no job exists only to count.  The commits
-write from materialized frames: the URL store from its checkpointed
-keeper map; the signature store (content + sigs), the paragraph and span
-stores and the corpus batch from the ``accepted`` frame that
-``incremental_dedup_batch`` materializes once.  Budget, measured with
-``perfbench/run.py --workload corpus --trace 1`` (URL, min-token and
-paragraph stages, 250-document micro-batches): 56.5 Spark jobs per
-micro-batch (94.5 before the spine counted once); a warm micro-batch of
-the same stages is pinned by ``test_stream_accounting_and_job_budget``.
+previous stage's ``after``, so no job exists only to count.  The URL,
+paragraph and span store commits are made in ``_process_batch``, from
+materialized frames: the URL store from the stage's checkpointed keeper
+map (at the URL stage, or after decontamination under
+``url_commit_policy="post_decontam"``); the paragraph and span stores
+and the corpus batch restricted to the ``accepted`` frame that
+``incremental_dedup_batch`` materializes once (and from which it commits
+the signature store, content + sigs).
+Budget, measured with ``perfbench/run.py --workload corpus --seed 1
+--trace 1`` (URL, min-token and paragraph stages, 250-document
+micro-batches, 4 cores): 55 Spark jobs per micro-batch (56.5 before the
+paragraph stage decided from one materialized flag frame, 94.5 before
+the spine counted once); a warm micro-batch of the same stages is pinned
+by ``test_stream_accounting_and_job_budget``.
 """
 
 from __future__ import annotations
@@ -560,15 +565,13 @@ class CorpusIngestPipeline:
             from hedera_etl_spark.operators.urlstore import incremental_url_dedup
 
             url_replay = self.url_store.has_batch(bid)
-            if self.url_commit_policy == "post_decontam":
-                out, pending_urls = incremental_url_dedup(
-                    batch, self.url_store, bid,
-                    removal_ledger=ledger, defer_commit=True,
-                )
+            out, new_urls = incremental_url_dedup(
+                batch, self.url_store, bid, removal_ledger=ledger
+            )
+            if self.url_commit_policy == "always":
+                self.url_store.commit_batch(bid, new_urls)
             else:
-                out = incremental_url_dedup(
-                    batch, self.url_store, bid, removal_ledger=ledger
-                )
+                pending_urls = new_urls
             batch, n_url = stage("url", out.drop("url"))
             if not url_replay:  # replays must not double-count drops
                 m.dropped_url += n - n_url
@@ -742,9 +745,8 @@ class CorpusIngestPipeline:
             self.span_store.commit_batch(
                 bid,
                 span_new_canon.join(accepted_ids, "doc_id", "left_semi")
-                # per-hash shipped-occurrence counts (r15) so the store
-                # can serve min_count>2 probes; presence semantics at
-                # min_count=2 are unchanged (any n >= 1 row is a hit)
+                # per-hash shipped-occurrence counts (r15): the history
+                # side of the min_count threshold for later epochs
                 .groupBy("span_hash")
                 .agg(F.count(F.lit(1)).cast("long").alias("n")),
             )

@@ -620,38 +620,3 @@ def test_prepare_cluster_balance_stage(spark):
         prepare_training_corpus(
             docs, near_threshold=0.0, cluster_balance_k=k,
         )
-
-
-def test_prepare_dedup_skew_safe_is_value_identical(spark):
-    """r14 review: the hot-hash escape hatch must be reachable from the
-    PRODUCTION path — prepare_training_corpus(dedup_skew_safe=True)
-    threads to the paragraph, span, and ExactSubstr stages and ships a
-    byte-identical corpus."""
-    boiler = "SUBSCRIBE to our newsletter for daily updates and offers"
-    rows = [
-        (1, f"{boiler}\n\nunique first body alpha beta gamma delta"),
-        (2, f"second body epsilon zeta eta theta\n\n{boiler}"),
-        (3, "third unique body iota kappa lambda mu nu xi"),
-        (4, f"{boiler}\n\n{boiler}\n\nfourth body omicron pi rho sigma"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(
-        paragraph_dedup_sep="\n\n",
-        span_dedup_n=4,
-        exact_substr_min_len=4,
-        near_threshold=None,
-        min_tokens=0,
-        salt="skewsafe-e2e",
-    )
-    base = {
-        r["doc_id"]: r["text"]
-        for r in prepare_training_corpus(docs, **kw).collect()
-    }
-    safe = {
-        r["doc_id"]: r["text"]
-        for r in prepare_training_corpus(
-            docs, dedup_skew_safe=True, **kw
-        ).collect()
-    }
-    assert safe == base
-    assert base, "pipeline dropped everything — fixture bug"

@@ -370,6 +370,29 @@ def test_plan_variant_defers_commit_and_attributes_docs(spark, tmp_path):
     out2 = {r["doc_id"]: r["text"] for r in
             incremental_paragraph_dedup(e2, store, "e2").collect()}
     assert out2 == {10: "beta body\n\nfresh epoch two prose"}
+    # epoch 3: 'shared para' is in the store and repeats in-batch (every
+    # copy cuts); 'new repeat para' is new and repeats in-batch (the
+    # min-(doc_id, idx) copy is the one new canon row)
+    e3 = spark.createDataFrame(
+        [
+            (20, "shared para\n\nnew repeat para\n\nown text twenty"),
+            (21, "new repeat para\n\nshared para\n\nown text twentyone"),
+        ],
+        ["doc_id", "text"],
+    )
+    out3, canon3 = incremental_paragraph_dedup_plan(e3, store, "e3")
+    assert {r["doc_id"]: r["text"] for r in out3.collect()} == {
+        20: "new repeat para\n\nown text twenty",
+        21: "own text twentyone",
+    }
+    assert sorted((r["doc_id"], r["para_hash"]) for r in canon3.collect()) == sorted(
+        [
+            (20, md5("new repeat para")),
+            (20, md5("own text twenty")),
+            (21, md5("own text twentyone")),
+        ]
+    )
+    assert not store.has_batch("e3")
 
 
 def test_paragraph_store_compact_folds_and_preserves_history(spark, tmp_path):
@@ -447,26 +470,3 @@ def test_paragraph_store_compact_crash_leftover_converges(spark, tmp_path):
     assert {r["text"] for r in out.collect()} == {"new text"}
     assert store.compact() == 3
     assert store.read().count() == 3  # dropDuplicates folded the overlap
-
-
-def test_skew_safe_drops_equal_window_form(spark, corpus):
-    """r13 advice: duplicate_paragraph_drops(skew_safe=True) — the
-    groupBy + SHUFFLE_HASH join-back escape hatch for hot-hash skew —
-    must produce the exact window-form drop set, and its plan must not
-    contain a broadcast join."""
-    from hedera_etl_spark.operators.paradedup import (
-        duplicate_paragraph_drops,
-        paragraph_occurrences,
-    )
-
-    occ = paragraph_occurrences(corpus)
-    base = sorted(
-        (r["doc_id"], r["idx"])
-        for r in duplicate_paragraph_drops(occ).collect()
-    )
-    safe_df = duplicate_paragraph_drops(occ, skew_safe=True)
-    safe = sorted((r["doc_id"], r["idx"]) for r in safe_df.collect())
-    assert safe == base
-    plan = safe_df._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan
-    assert "BroadcastHashJoin" not in plan

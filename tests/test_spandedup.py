@@ -344,6 +344,7 @@ def test_incremental_history_probe_never_shuffles_store(spark, tmp_path):
     the history scan and the probe join — one history SCAN, zero
     history SHUFFLES per epoch at any store size."""
     from planutil import assert_scan_probes_unshuffled, plan_of
+    from pyspark.sql import functions as F
 
     from hedera_etl_spark.operators.joins import inverted_store_probe
     from hedera_etl_spark.operators.spandedup import (
@@ -358,16 +359,17 @@ def test_incremental_history_probe_never_shuffles_store(spark, tmp_path):
         [(10, f"novel {PHRASE} run")], "doc_id long, text string"
     )
     rows = _span_rows(batch, 5, "text", "doc_id")
-    # mirror the operator's presence path: prune to h before the probe
-    # (the scan must read ONE column — the count columns only load on
-    # the min_count>2 path)
+    # mirror the operator: the probe reads the columns its per-hash
+    # history counts need, (h, n, b)
     hits = inverted_store_probe(
-        store.read().withColumnRenamed("span_hash", "h").select("h"),
+        store.read().select(F.col("span_hash").alias("h"), "n", "b"),
         rows.select("h").distinct(),
         "h",
     )
     assert hits.count() > 0  # the phrase windows hit history
-    assert_scan_probes_unshuffled(plan_of(hits), "struct<span_hash:bigint>")
+    assert_scan_probes_unshuffled(
+        plan_of(hits), "struct<span_hash:bigint,n:bigint,b:string>"
+    )
 
 
 def test_span_store_compact_preserves_replay(spark, tmp_path):
@@ -385,42 +387,43 @@ def test_span_store_compact_preserves_replay(spark, tmp_path):
     again = _inc(spark, store, "e1", rows1)
     assert first == again
 
+    # a crash between the fold's publish and its sources' removal leaves
+    # the folded rows on disk twice; at min_count=2 the next epoch's cuts
+    # and new canon must not move (history counts dedup by (hash, batch))
+    import os
+    import shutil
 
-def test_skew_safe_forms_equal_window_forms(spark, docs):
-    """r13 advice: the skew_safe escape hatch (groupBy partial-combine +
-    SHUFFLE_HASH-hinted join-back) must produce the exact window-form
-    relations — flags, all-occurrences cut, and keep-first cut."""
-    flags_w = sorted(
-        (r["doc_id"], r["pos"])
-        for r in repeated_spans(docs, n=6, min_count=2).collect()
+    from hedera_etl_spark.operators.spandedup import (
+        incremental_exact_substr_plan,
     )
-    flags_s = sorted(
-        (r["doc_id"], r["pos"])
-        for r in repeated_spans(docs, n=6, min_count=2, skew_safe=True).collect()
+
+    probe = spark.createDataFrame(
+        [
+            (3, f"lead {PHRASE} tail words"),
+            (4, f"new run r1 r2 r3 r4 then {PHRASE}"),
+            (5, "new run r1 r2 r3 r4 again here"),
+        ],
+        "doc_id long, text string",
     )
-    assert flags_s == flags_w
-    for kf in (False, True):
-        out_w = {
-            r["doc_id"]: r["text"]
-            for r in remove_repeated_spans(docs, n=6, keep_first=kf).collect()
-        }
-        out_s = {
-            r["doc_id"]: r["text"]
-            for r in remove_repeated_spans(
-                docs, n=6, keep_first=kf, skew_safe=True
-            ).collect()
-        }
-        assert out_s == out_w
 
+    def decide():
+        out, canon = incremental_exact_substr_plan(
+            probe, store, "e3", min_len=5
+        )
+        return (
+            {r["doc_id"]: r["text"] for r in out.collect()},
+            sorted((r["doc_id"], r["span_hash"]) for r in canon.collect()),
+        )
 
-def test_skew_safe_plan_never_broadcasts_the_flag_join(spark, docs):
-    """The escape hatch exists to forbid the driver-built broadcast the
-    r7 join-back died on: the flagged-hash join must plan as a shuffled
-    hash join, with no BroadcastExchange feeding it."""
-    df = repeated_spans(docs, n=6, min_count=2, skew_safe=True)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan
-    assert "BroadcastHashJoin" not in plan
+    before = decide()
+    assert before[0][3] == "lead tail words"  # history cut
+    assert before[0][5] == "again here"  # in-batch non-owner cut
+    folded = next(iter(store.committed_batches()))
+    shutil.copytree(
+        os.path.join(store.hashes_dir, folded),
+        os.path.join(store.hashes_dir, "batch=leftover"),
+    )
+    assert decide() == before
 
 
 def test_incremental_min_count_rejects_below_two(spark, tmp_path):
@@ -549,27 +552,3 @@ def test_span_store_reads_pre_r15_presence_rows_as_count_one(spark, tmp_path):
     # and the min_count=2 presence path still cuts against legacy rows
     e2 = _inc(spark, store, "e2", [(9, f"x {PHRASE} y")])
     assert PHRASE not in e2[9]
-
-
-def test_exact_substr_skew_safe_passthrough(spark, xs_docs):
-    """skew_safe threads through repeated_intervals/exact_substr_dedup
-    to the span-flag stage: identical intervals and identical cuts."""
-    df = _xs_df(spark, xs_docs)
-    base_iv = sorted(
-        tuple(r) for r in repeated_intervals(df, min_len=5).collect()
-    )
-    safe_iv = sorted(
-        tuple(r)
-        for r in repeated_intervals(df, min_len=5, skew_safe=True).collect()
-    )
-    assert base_iv, "fixture planted repeats should flag"
-    assert safe_iv == base_iv
-    base_cut = {
-        r["doc_id"]: r["text"]
-        for r in exact_substr_dedup(df, min_len=5).collect()
-    }
-    safe_cut = {
-        r["doc_id"]: r["text"]
-        for r in exact_substr_dedup(df, min_len=5, skew_safe=True).collect()
-    }
-    assert safe_cut == base_cut

@@ -23,6 +23,12 @@ measures each skew-exposed operator against its uniform twin:
                    Expected bounded: grouped_topk's two-phase
                    local-then-global plan was built for exactly this
                    (no whole-group single-reducer sort).
+- paragraph_dedup / repeated_spans
+                 — 25% of docs carry ONE boilerplate paragraph (a hot
+                   paragraph hash and hot span hashes).  The flags are
+                   count-over-window forms, so every occurrence of the
+                   hot hash lands in one window partition; measured
+                   here rather than assumed bounded.
 
 Pass criteria (printed per op and as a final verdict): skew/uniform
 wall ratio < 2.0, OR the op's loud cap fired and the post-cap ratio is
@@ -215,12 +221,9 @@ def main() -> int:
     # -- paragraph/span dedup: ONE ultra-hot hash (r13 advice) -------------
     # 25% of docs carry an identical boilerplate paragraph, so one
     # para_hash (and each of its w-window span hashes) collects ~n/4
-    # occurrences.  The default count-over-window form buffers them all
-    # in ONE task's window partition (the disclosed exposure); the
-    # skew_safe form partial-aggregates map-side and STREAMS occurrences
-    # through a SHUFFLE_HASH probe.  Pass criterion applies to the
-    # skew_safe form; the window form's ratio is recorded as the
-    # documented exposure, not gated.
+    # occurrences, all buffered in ONE task's count-over-window
+    # partition (the only flag form; no map-side combine).  Gated like
+    # the others: skew/uniform < THRESH.
     from hedera_etl_spark.operators.paradedup import (
         duplicate_paragraph_drops,
         paragraph_occurrences,
@@ -238,65 +241,23 @@ def main() -> int:
     ).localCheckpoint()
     uni_para = base.select("doc_id", "text").localCheckpoint()
 
-    para_rows = {}
-    for form, safe in (("window", False), ("skew_safe", True)):
-        t_u = timed(
-            lambda: materialize(
-                duplicate_paragraph_drops(
-                    paragraph_occurrences(uni_para), skew_safe=safe
-                )
-            )
+    for op, flag, hot_share in (
+        ("paragraph_dedup_hot_hash",
+         lambda d: duplicate_paragraph_drops(paragraph_occurrences(d)),
+         "one paragraph"),
+        ("repeated_spans_hot_hash",
+         lambda d: repeated_spans(d, n=20),
+         "one boilerplate run"),
+    ):
+        t_u = timed(lambda: materialize(flag(uni_para)))
+        t_s = timed(lambda: materialize(flag(hot_para)))
+        r = round(t_s / t_u, 2) if t_u else None
+        results.append(
+            {"op": op, "uniform_sec": t_u, "skew_sec": t_s, "ratio": r,
+             "hot_share": f"~{100 // HOT_FRAC_MOD}% {hot_share}",
+             "n_docs": n_docs}
         )
-        t_s = timed(
-            lambda: materialize(
-                duplicate_paragraph_drops(
-                    paragraph_occurrences(hot_para), skew_safe=safe
-                )
-            )
-        )
-        para_rows[form] = {
-            "uniform_sec": t_u, "skew_sec": t_s,
-            "ratio": round(t_s / t_u, 2) if t_u else None,
-        }
-    results.append(
-        {"op": "paragraph_dedup_hot_hash", **{
-            f"{k}_{m}": v for k, row in para_rows.items()
-            for m, v in row.items()},
-         "hot_share": f"~{100 // HOT_FRAC_MOD}% one paragraph",
-         "n_docs": n_docs}
-    )
-    ok &= (
-        para_rows["skew_safe"]["ratio"] is not None
-        and para_rows["skew_safe"]["ratio"] < THRESH
-    )
-
-    span_rows = {}
-    for form, safe in (("window", False), ("skew_safe", True)):
-        t_u = timed(
-            lambda: materialize(
-                repeated_spans(uni_para, n=20, skew_safe=safe)
-            )
-        )
-        t_s = timed(
-            lambda: materialize(
-                repeated_spans(hot_para, n=20, skew_safe=safe)
-            )
-        )
-        span_rows[form] = {
-            "uniform_sec": t_u, "skew_sec": t_s,
-            "ratio": round(t_s / t_u, 2) if t_u else None,
-        }
-    results.append(
-        {"op": "repeated_spans_hot_hash", **{
-            f"{k}_{m}": v for k, row in span_rows.items()
-            for m, v in row.items()},
-         "hot_share": f"~{100 // HOT_FRAC_MOD}% one boilerplate run",
-         "n_docs": n_docs}
-    )
-    ok &= (
-        span_rows["skew_safe"]["ratio"] is not None
-        and span_rows["skew_safe"]["ratio"] < THRESH
-    )
+        ok &= r is not None and r < THRESH
 
     for row in results:
         print(json.dumps(row))
