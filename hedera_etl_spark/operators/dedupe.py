@@ -17,10 +17,19 @@ Spark-native design decisions:
   (IncrementalDeduplication.java:89-107) exists only because BigQuery's
   streaming buffer rejects DML for ~30 min.  Parquet has no mutability
   horizon, so the window end is simply ``min(max(ts), now - lateness_slack)``
-  — deterministic, no probing (SURVEY §4 O6).
+  — deterministic, no probing (SURVEY §4 O6).  On the parquet table
+  ``max(ts)`` comes from the ``ts_sec`` max statistics in the footers of
+  the live part files, read on the driver; only a row group that holds
+  values but no statistics, or a table with no part file, falls back to
+  a Spark scan (the Delta table keeps the scan).
 - State lives in a tiny single-file parquet KV table with the reference's
   schema (state-schema.json:1-13) and keys
   (AbstractDeduplication.java:60-61): incremental/full LatestEndTimestamp.
+  Two rows do not need a cluster: the parquet state is read and written
+  driver-local with pyarrow, and Spark can still read the directory.
+- Detection is one aggregate: the per-key count also carries the key's
+  dates, so the row count, the excess and the partitions to rewrite come
+  back in one collect.  A run without duplicates rewrites nothing.
 
 Scale: the duplicate-collapse is a single shuffle on the dedup key *within
 the affected date partitions only* — the time predicate prunes everything
@@ -35,14 +44,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("name", T.StringType(), False),
-        T.StructField("value", T.StringType(), True),
-    ]
-)
+from hedera_etl_spark.schema import STATE_SCHEMA
 
 INCREMENTAL_STATE_KEY = "incrementalLatestEndTimestamp"
 FULL_STATE_KEY = "fullLatestEndTimestamp"
@@ -80,16 +83,67 @@ def replace_where_predicate(touched_dates: list) -> str:
 
 
 # ---------------------------------------------------------------------------
+# window end from parquet footers (ST4 without a scan)
+# ---------------------------------------------------------------------------
+def live_part_files(table_path: str) -> list[str]:
+    """The part files a Spark read of the DAY-partitioned table sees:
+    ``part_date=*/*.parquet`` minus ``.``- and ``_``-prefixed names (swap
+    siblings, ``_SUCCESS``, checksums)."""
+    import glob
+
+    return sorted(
+        f for f in glob.glob(os.path.join(table_path, "part_date=*", "*.parquet"))
+        if not os.path.basename(f).startswith((".", "_"))
+    )
+
+
+def footer_max(files: list[str], column: str):
+    """Max of the top-level ``column`` over ``files``, from the row-group
+    max statistics in their footers (None when no file holds a non-null
+    value).  Files without the column and all-null row groups are
+    skipped.  Raises ``LookupError`` when there is no file or a row group
+    may hold values but carries no min/max statistics — the caller must
+    scan instead (a scan of a table with no part file raises as before)."""
+    import pyarrow.parquet as pq
+
+    if not files:
+        raise LookupError("no part file")
+    best = None
+    for f in files:
+        md = pq.read_metadata(f)
+        paths = [md.schema.column(j).path for j in range(md.num_columns)]
+        if column not in paths:
+            continue
+        j = paths.index(column)
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(j).statistics
+            if rg.num_rows == 0 or (
+                st is not None and st.has_null_count and st.null_count == rg.num_rows
+            ):
+                continue
+            if st is None or not st.has_min_max:
+                raise LookupError(f"{f}: row group {g} has no {column} statistics")
+            best = st.max if best is None else max(best, st.max)
+    return best
+
+
+# ---------------------------------------------------------------------------
 # state table (S4/J2: GetStateQuery / SetStateQuery)
 # ---------------------------------------------------------------------------
 class StateStore:
     """KV state table with the reference's dedupe_state schema.
 
     The reference keeps it in BigQuery "because the task already relies on
-    BigQuery" (README.md:65-67); we keep it in a single-file parquet table
-    and emulate the MERGE upsert (SetStateQuery.java:34-40) with
-    read-union-dropDuplicates-overwrite — correct under the same
-    single-writer discipline the reference assumes.
+    BigQuery" (README.md:65-67).  We keep it in a parquet directory holding
+    one part file and emulate the MERGE upsert (SetStateQuery.java:34-40)
+    with read-modify-replace — correct under the same single-writer
+    discipline the reference assumes.  The parquet table is read and
+    written driver-local with pyarrow: it holds two rows, so a Spark job
+    per access is pure overhead.  The layout (``STATE_SCHEMA``, one part
+    file inside the directory) stays readable by
+    ``spark.read.schema(STATE_SCHEMA).parquet``, and a directory Spark
+    wrote reads back the same.  A Delta state table goes through Spark.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -100,6 +154,8 @@ class StateStore:
         if delta_available() and is_delta_table(self.path):
             rows = self.spark.read.format("delta").load(self.path).collect()
             return {r["name"]: r["value"] for r in rows}
+        import pyarrow.dataset as ds
+
         from hedera_etl_spark.fsutil import heal
 
         # a crash between upsert's two renames leaves the previous state
@@ -107,8 +163,9 @@ class StateStore:
         heal(self.path)
         if not os.path.exists(self.path):
             return {}
-        rows = self.spark.read.schema(STATE_SCHEMA).parquet(self.path).collect()
-        return {r["name"]: r["value"] for r in rows}
+        # ignores "_"- and "."-prefixed files (_SUCCESS, .crc), as Spark does
+        rows = ds.dataset(self.path, schema=_arrow_state_schema(), format="parquet").to_table()
+        return dict(zip(rows["name"].to_pylist(), rows["value"].to_pylist()))
 
     def upsert(self, name: str, value: str) -> None:
         """Crash-safe KV upsert via ``fsutil.atomic_replace``: at every
@@ -116,7 +173,8 @@ class StateStore:
         complete previous-or-new state, and a crash window left by a
         previous writer is healed before anything is deleted (the
         in-place overwrite this replaces could corrupt the only copy if
-        the writer died mid-write)."""
+        the writer died mid-write).  The parquet branch runs no Spark
+        job."""
         if delta_available() and not os.path.exists(self.path):
             # first write with delta on the classpath: CREATE the state
             # table as Delta so the MERGE branch is reachable for
@@ -141,42 +199,33 @@ class StateStore:
             )
             return
 
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         from hedera_etl_spark.fsutil import atomic_replace
 
         state = self.read()  # read() heals a prior crash window first
         state[name] = value
-        df = self.spark.createDataFrame(
-            [(k, v) for k, v in sorted(state.items())], STATE_SCHEMA
-        )
-        atomic_replace(
-            self.path,
-            lambda tmp: df.coalesce(1).write.mode("overwrite").parquet(tmp),
+        names = sorted(state)
+        table = pa.table(
+            [names, [state[k] for k in names]], schema=_arrow_state_schema()
         )
 
+        def write(tmp: str) -> None:
+            os.makedirs(tmp)
+            pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
 
-# ---------------------------------------------------------------------------
-# duplicate detection (A1: GetDuplicatesTemplateQuery.java:33-36)
-# ---------------------------------------------------------------------------
-def find_duplicates(df: DataFrame, key: str, start=None, end=None, ts_col: str | None = None) -> DataFrame:
-    """GROUP BY key HAVING count(*) > 1 over an optional time window.
+        atomic_replace(self.path, write)
 
-    Returns (key, num) — the same shape the reference feeds its duplicate
-    metrics fold (GetDuplicatesTemplateQuery.java:62-72).
-    """
-    if start is not None:
-        df = df.filter(F.col(ts_col or key).between(start, end))
-    return (
-        df.groupBy(key)
-        .agg(F.count("*").alias("num"))
-        .filter(F.col("num") > 1)
+
+def _arrow_state_schema():
+    """``STATE_SCHEMA`` as a pyarrow schema (``name`` required, as Spark
+    writes a non-nullable field)."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [pa.field(f.name, pa.string(), nullable=f.nullable) for f in STATE_SCHEMA.fields]
     )
-
-
-def duplicate_count(dups: DataFrame) -> int:
-    """Total excess rows: sum(num - 1) — the reference's client-side fold
-    (GetDuplicatesTemplateQuery.java:62-72) pushed into the engine."""
-    row = dups.agg(F.sum(F.col("num") - 1).alias("extra")).collect()[0]
-    return int(row["extra"] or 0)
 
 
 # ---------------------------------------------------------------------------
@@ -189,9 +238,11 @@ def collapse_duplicates(df: DataFrame, key, tiebreak: list[str] | None = None) -
     RemoveDuplicatesTemplateQuery.java:33) because its duplicates are
     byte-identical; for hash-stable results we keep the first row under an
     explicit tiebreak ordering when one is given, else dropDuplicates.
+    A tiebreak made only of key columns orders nothing (every row of a
+    group ties), so it is dropDuplicates too.
     """
     keys = [key] if isinstance(key, str) else list(key)
-    if not tiebreak:
+    if not tiebreak or set(tiebreak) <= set(keys):
         return df.dropDuplicates(keys)
     w = W.partitionBy(*keys).orderBy(*tiebreak)
     return (
@@ -295,10 +346,21 @@ class DedupeJob:
         return self.spark.read.parquet(self.table_path)
 
     def _window_end(self) -> int | None:
-        row = self._read().agg(F.max("ts_sec").alias("m")).collect()[0]
-        if row["m"] is None:
+        """``max(ts_sec) - lateness_slack_sec`` (None for an empty table):
+        from the part-file footers of the parquet table, by a scan when a
+        row group lacks statistics, the table has no part file or it is
+        Delta."""
+        if self._use_delta:
+            m = self._read().agg(F.max("ts_sec")).collect()[0][0]
+        else:
+            self._heal_partitions()
+            try:
+                m = footer_max(live_part_files(self.table_path), "ts_sec")
+            except LookupError:
+                m = self._read().agg(F.max("ts_sec")).collect()[0][0]
+        if m is None:
             return None
-        return int(row["m"]) - self.lateness_slack_sec
+        return int(m) - self.lateness_slack_sec
 
     def run_incremental(self) -> DedupeResult:
         state = self.state.read()
@@ -325,36 +387,33 @@ class DedupeJob:
     def _dedupe_window(self, start: int, end: int) -> DedupeResult:
         df = self._read()
         in_window = df.filter(F.col("ts_sec").between(start, end))
-        # A1 detection + A5 row count + A6 excess fold in ONE aggregate
-        # pass (the reference issues three separate queries for these)
-        key_counts = in_window.groupBy(self.key).agg(F.count("*").alias("num"))
+        # A1 detection + A5 row count + A6 excess fold + the partitions
+        # holding a duplicated key, in ONE aggregate pass (the reference
+        # issues three separate queries for the first three).  Only those
+        # partitions are rewritten: the reference rewrites the whole range,
+        # but at 100 TB write amplification dominates the rewrite.  The
+        # touched-date list is bounded by the number of DAY partitions.
+        key_counts = in_window.groupBy(self.key).agg(
+            F.count("*").alias("num"), F.collect_set("part_date").alias("dates")
+        )
         stats = key_counts.agg(
             F.coalesce(F.sum("num"), F.lit(0)).alias("n_rows"),
             F.coalesce(
                 F.sum(F.when(F.col("num") > 1, F.col("num") - 1)), F.lit(0)
             ).alias("extra"),
+            F.array_distinct(
+                F.flatten(F.collect_set(F.when(F.col("num") > 1, F.col("dates"))))
+            ).alias("touched"),
         ).collect()[0]
         n_rows, n_dups = int(stats["n_rows"]), int(stats["extra"])
         if n_dups == 0:
             # No-op fast path (AbstractDeduplication.java:109-111 only runs
             # the MERGE when duplicates exist).
             return DedupeResult(start, end, 0, n_rows)
-        dups = key_counts.filter(F.col("num") > 1)
+        touched_dates = sorted(stats["touched"])
 
-        # MERGE ON FALSE delete+insert == replace the range with its deduped
-        # content (RemoveDuplicatesTemplateQuery.java:29-43) — but only
-        # partitions that actually CONTAIN a duplicated key need rewriting
-        # (the reference rewrites the whole range; at 100 TB, write
-        # amplification is the dominant cost of the rewrite, so skipping
-        # clean partitions matters).  The collect is bounded by the number
-        # of touched DAY partitions.
-        touched_dates = [
-            r["part_date"]
-            for r in in_window.join(dups.select(self.key), self.key)
-            .select("part_date")
-            .distinct()
-            .collect()
-        ]
+        # MERGE ON FALSE delete+insert == replace the touched partitions
+        # with their deduped content (RemoveDuplicatesTemplateQuery.java:29-43).
         deduped = collapse_duplicates(
             in_window.filter(F.col("part_date").isin(touched_dates)),
             self.key,

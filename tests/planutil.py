@@ -65,3 +65,17 @@ def assert_scan_probes_unshuffled(
             assert "Exchange" not in anc, (
                 f"history shuffled before its probe join: {anc.strip()}\n{plan}"
             )
+
+
+def job_ids(spark, group, fn):
+    """Ids of the Spark jobs ``fn`` submits, tagged with job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the async listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))

@@ -11,6 +11,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.planutil import job_ids
+
 
 def _truth(n_nodes: int, edges: list[tuple[int, int]]) -> dict[int, int]:
     """Min-id component labels via union-find."""
@@ -121,20 +123,6 @@ def test_nonconvergence_rail_raises(spark):
         connected_components(df, max_iterations=1)
 
 
-def _job_ids(spark, group, fn):
-    """Ids of the Spark jobs ``fn`` submits, tagged with job group ``group``."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status store is fed by the async listener bus: drain it first
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return sorted(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_fused_rounds_reference_their_input_once(spark):
     """Two fused star rounds over a checkpointed edge frame hold that
     frame ONCE in the optimized plan; a self-union per round held it
@@ -170,14 +158,14 @@ def test_empty_graph_runs_no_fallback_job(spark):
             e = _small_star(_large_star(e, dedup=False))
         e.localCheckpoint(eager=True)
 
-    want = _job_ids(spark, "cc-empty-checkpoint", checkpoint_only)
+    want = job_ids(spark, "cc-empty-checkpoint", checkpoint_only)
     decision = None
 
     def collapse():
         nonlocal decision
         decision = collapse_components(ids, pairs)
 
-    got = _job_ids(spark, "cc-empty-collapse", collapse)
+    got = job_ids(spark, "cc-empty-collapse", collapse)
     assert len(want) >= 1 and len(got) == len(want)
     assert sorted(
         (r["doc_id"], r["component"], r["keep"]) for r in decision.collect()

@@ -18,9 +18,13 @@ from pyspark.sql import types as T
 from hedera_etl_spark.operators.dedupe import (
     FULL_STATE_KEY,
     INCREMENTAL_STATE_KEY,
+    STATE_SCHEMA,
     DedupeJob,
     StateStore,
+    footer_max,
+    live_part_files,
 )
+from tests.planutil import job_ids
 
 ROW_SCHEMA = T.StructType(
     [
@@ -206,6 +210,100 @@ def test_duplicate_free_partitions_not_rewritten(spark, tmp_path):
     assert final.count() == 21
     assert sorted(os.listdir(clean_dir)) == before
     assert max(os.path.getmtime(os.path.join(clean_dir, f)) for f in before) == before_mtime
+
+
+# ---------------------------------------------------------------------------
+# Spark jobs that decide nothing: state I/O and the window end run on the
+# driver, detection is one aggregate
+# ---------------------------------------------------------------------------
+def test_no_duplicate_incremental_runs_at_most_four_jobs(spark, tmp_path):
+    """A run with nothing to heal reads the table once for the detection
+    aggregate: no job for the state read or upsert, none for the window
+    end, no second pass for the touched dates."""
+    rows = [r for r in gen_rows(50) if r[1] == 0]
+    path = make_table(spark, tmp_path, rows)
+    job, state = make_job(spark, tmp_path, path)
+    state.upsert(INCREMENTAL_STATE_KEY, "0")
+    out = {}
+    ids = job_ids(spark, "dedupe-no-dup", lambda: out.update(r=job.run_incremental()))
+    assert out["r"].duplicates_removed == 0 and out["r"].rows_in_window == 50
+    assert len(ids) <= 4, ids
+
+
+def test_state_upsert_runs_no_spark_job(spark, tmp_path):
+    state = StateStore(spark, os.path.join(str(tmp_path), "state"))
+
+    def upserts():
+        state.upsert("b", "2")
+        state.upsert("a", "1")
+        state.upsert("b", "3")
+
+    assert job_ids(spark, "state-upsert", upserts) == []
+    assert state.read() == {"a": "1", "b": "3"}
+
+
+def test_state_written_by_spark_reads_back(spark, tmp_path):
+    """A state dir written the Spark way (one coalesced part file plus
+    _SUCCESS and .crc siblings) reads back unchanged and upserts in place."""
+    path = os.path.join(str(tmp_path), "state")
+    spark.createDataFrame(
+        [(INCREMENTAL_STATE_KEY, "17"), (FULL_STATE_KEY, None)], STATE_SCHEMA
+    ).coalesce(1).write.parquet(path)
+    state = StateStore(spark, path)
+    assert state.read() == {INCREMENTAL_STATE_KEY: "17", FULL_STATE_KEY: None}
+    state.upsert(FULL_STATE_KEY, "9")
+    assert state.read() == {INCREMENTAL_STATE_KEY: "17", FULL_STATE_KEY: "9"}
+
+
+def test_state_written_driver_local_reads_through_spark(spark, tmp_path):
+    path = os.path.join(str(tmp_path), "state")
+    state = StateStore(spark, path)
+    state.upsert(INCREMENTAL_STATE_KEY, "42")
+    state.upsert(FULL_STATE_KEY, "7")
+    rows = spark.read.schema(STATE_SCHEMA).parquet(path).collect()
+    assert sorted((r["name"], r["value"]) for r in rows) == [
+        (FULL_STATE_KEY, "7"),
+        (INCREMENTAL_STATE_KEY, "42"),
+    ]
+
+
+@pytest.mark.parametrize("case", ["no_statistics", "all_null", "slack"])
+def test_footer_window_end_matches_scan(spark, tmp_path, case):
+    """The window end read from the part-file footers equals the scan's
+    max(ts_sec) minus the slack: a file without statistics forces the
+    scan, an all-null ts_sec file is skipped without one."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = gen_rows(30)
+    path = make_table(spark, tmp_path, rows)
+    top = max(r[2] for r in rows)
+    extra = {"no_statistics": [top + 100], "all_null": [None, None]}.get(case)
+    if extra:
+        n = len(extra)
+        part = sorted(glob.glob(os.path.join(path, "part_date=*")))[0]
+        pq.write_table(
+            pa.table({
+                "consensus_timestamp": pa.array([BASE_NS - 1 - i for i in range(n)], pa.int64()),
+                "ingest_seq": pa.array([0] * n, pa.int64()),
+                "ts_sec": pa.array(extra, pa.int64()),
+            }),
+            os.path.join(part, "part-extra.parquet"),
+            write_statistics=case != "no_statistics",
+        )
+    slack = 7 if case == "slack" else 0
+    job, _ = make_job(spark, tmp_path, path, slack=slack)
+    scan = spark.read.parquet(path).agg(F.max("ts_sec")).collect()[0][0]
+    assert job._window_end() == scan - slack
+    if case == "no_statistics":
+        with pytest.raises(LookupError):
+            footer_max(live_part_files(path), "ts_sec")
+        with pytest.raises(LookupError):  # no part file: the scan decides
+            footer_max([], "ts_sec")
+    else:
+        assert footer_max(live_part_files(path), "ts_sec") == scan == top
 
 
 # ---------------------------------------------------------------------------

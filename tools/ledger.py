@@ -6,8 +6,6 @@ the driver-window rotation ledger: one row per registry entry with
 
 - ``window``              — True when the entry is inside the 50-entry
                             driver window (must match ``QuerySpec.driver_visible``),
-- ``last_driver_green``   — last round with a driver-green CORRECTNESS row
-                            (None = never driver-checked),
 - ``verifier``            — for parked entries, the in-window entry/pytest
                             that transitively keeps the family driver-checked,
 - ``bench_only_rows_only``— True for the two production-hash twins whose
@@ -16,11 +14,16 @@ the driver-window rotation ledger: one row per registry entry with
                             policing and are pinned pair-equal to their md5
                             siblings in pytest instead.
 
+An entry's last driver-green round is not kept in the ledger: it is read
+from the driver's own ``CORRECTNESS_r<N>.json`` files (``driver_record``).
+An entry is green in round N when that file lists it with rows, schema and
+hash all matching.
+
 ``tests/test_ledger.py`` polices this file every run: registry sync, window
 flags, and the staleness rule (no parked hash entry older than
 ``MAX_PARKED_AGE`` rounds).  ``python tools/ledger.py --emit-md`` regenerates
 the markdown table between the LEDGER markers in COVERAGE.md so the prose
-document can never drift from the JSON.
+document can never drift from the JSON and the driver files.
 """
 
 from __future__ import annotations
@@ -46,23 +49,35 @@ def load() -> dict[str, dict]:
         return json.load(f)
 
 
-def current_round() -> int:
-    """The round now being built = 1 + the newest driver CORRECTNESS file."""
-    rounds = [
-        int(m.group(1))
-        for p in REPO.glob("CORRECTNESS_r*.json")
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json", p.name))
-    ]
-    return (max(rounds) + 1) if rounds else 1
+#: the CORRECTNESS row fields that must all be true for a driver-green row
+GREEN_FIELDS = ("rows_match", "schema_match", "hash_match")
 
 
-def validate(ledger: dict[str, dict], registry: dict) -> list[str]:
-    """Return a list of human-readable violations (empty = clean)."""
+def driver_record(root: Path = REPO) -> tuple[int, dict[str, int]]:
+    """``(round, green)`` from ``root``'s ``CORRECTNESS_r<N>.json`` files:
+    the round now being built (1 + the newest file's N) and, per entry,
+    the newest N whose file lists it driver-green."""
+    rnd, green = 1, {}
+    for p in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
+        if not m:
+            continue
+        n = int(m.group(1))
+        rnd = max(rnd, n + 1)
+        for name, row in json.loads(p.read_text()).items():
+            if all(row.get(k) is True for k in GREEN_FIELDS):
+                green[name] = max(green.get(name, n), n)
+    return rnd, green
+
+
+def validate(ledger: dict[str, dict], registry: dict, root: Path = REPO) -> list[str]:
+    """Return a list of human-readable violations (empty = clean), judged
+    against the driver files in ``root``."""
     errs: list[str] = []
     lk, rk = set(ledger), set(registry)
     if lk != rk:
         errs.append(f"ledger/registry key drift: only-ledger={sorted(lk - rk)} only-registry={sorted(rk - lk)}")
-    rnd = current_round()
+    rnd, greens = driver_record(root)
     for name in sorted(lk & rk):
         row, spec = ledger[name], registry[name]
         if bool(row.get("window")) != bool(spec.driver_visible):
@@ -71,7 +86,7 @@ def validate(ledger: dict[str, dict], registry: dict) -> list[str]:
             if spec.oracle is not None and spec.driver_visible:
                 errs.append(f"{name}: marked bench_only_rows_only but is a driver-visible hash entry")
             continue
-        green = row.get("last_driver_green")
+        green = greens.get(name)
         if not row.get("window"):
             if green is None:
                 errs.append(f"{name}: parked but never driver-checked — rotate it IN")
@@ -84,7 +99,8 @@ def validate(ledger: dict[str, dict], registry: dict) -> list[str]:
     return errs
 
 
-def emit_md(ledger: dict[str, dict]) -> str:
+def emit_md(ledger: dict[str, dict], root: Path = REPO) -> str:
+    greens = driver_record(root)[1]
     lines = [
         BEGIN,
         "",
@@ -95,10 +111,10 @@ def emit_md(ledger: dict[str, dict]) -> str:
         row = ledger[name]
         if row.get("bench_only_rows_only"):
             green = "n/a (rows-only oracle by design)"
-        elif row.get("last_driver_green") is None:
+        elif name not in greens:
             green = "— (never; pending this round)"
         else:
-            green = f"r{row['last_driver_green']}"
+            green = f"r{greens[name]}"
         win = "IN" if row.get("window") else "out"
         lines.append(f"| `{name}` | {win} | {green} | {row.get('verifier', '')} |")
     lines += ["", END]
@@ -128,5 +144,5 @@ if __name__ == "__main__":
     if "--emit-md" in sys.argv:
         rewrite_coverage(ledger)
         print("COVERAGE.md ledger table regenerated")
-    print(f"ledger: {len(ledger)} rows, round r{current_round()}, {len(errs)} violation(s)")
+    print(f"ledger: {len(ledger)} rows, round r{driver_record()[0]}, {len(errs)} violation(s)")
     sys.exit(1 if errs else 0)
