@@ -400,12 +400,7 @@ def q07(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("join", "theta"),
     bench=True,
-    # parked in r14 (driver-green r13): range/non-equi joins stay
-    # driver-checked via q17_asof_join (IN); P6 open-ended bounds via
-    # q01_filter_project's BETWEEN + pushdown pins (IN r15; q04 parked
-    # r15 into llm_profile); oracle stays in tools/verify_oracle.py +
-    # bench.
-    driver_visible=False,
+    # back IN r17 (driver-green r13, parked r14-r16).
 )
 def q08a(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi key + range residual: the equi part drives the shuffle/join
@@ -501,12 +496,7 @@ def q08c(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("window", "rank"),
     bench=True,
-    # parked in r14 (driver-green r13): the rank-window kernel stays
-    # driver-checked via llm_grouped_sample (IN r15 — two-phase grouped
-    # top-k over the same exchange; llm_domain_topk parked r15 into it)
-    # and the rn=1 case via hed_dedupe_pipeline's full ROW_NUMBER()=1
-    # oracle (IN); analytic frames keep q10_window_frame IN.
-    driver_visible=False,
+    # back IN r17 (driver-green r13, parked r14-r16).
 )
 def q09(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-N per group via ranking window — one shuffle on the partition key,
@@ -807,12 +797,7 @@ def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("explode", "aggregate"),
     bench=True,
-    # parked in r14 (driver-green r13; slot ceded to the r9/r10-stale
-    # rotation cohort): explode stays driver-checked via the incoming
-    # hed_tx_explode_transfers (the reference's own REPEATED-record
-    # shape) plus llm_chunking / llm_vocab_stats' explode fan-outs (r17:
-    # llm_pair_stats parked, llm_vocab_stats back IN).
-    driver_visible=False,
+    # back IN r17 (driver-green r13, parked r14-r16).
 )
 def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """explode() over an array column — the load-bearing repeated-record
@@ -860,12 +845,7 @@ def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("window-agg", "streaming"),
     bench=True,
-    # parked in r14 (driver-green r13; slot ceded to the r9/r10-stale
-    # rotation cohort): ST6 time-window aggregation stays
-    # driver-checked via the incoming q18_session_window; the tumbling
-    # F.window expression also runs driver-checked under real
-    # streaming in hed_stream_ingest's windowed stats.
-    driver_visible=False,
+    # back IN r17 (driver-green r13, parked r14-r16).
 )
 def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling + hopping event-time windows via F.window, tagged union —

@@ -511,9 +511,11 @@ def _bpe_encode_oracle(k: int) -> str:
     "llm_bpe_merges",
     _bpe_oracle(_BPE_K),
     tags=("llm", "vocab", "tokenizer", "bpe", "iterative"),
-    # rotated back IN r15 (VERDICT r14 #1 — r11-stale cohort).
     # iterative: per-round localCheckpoints during construction
     cache_plan=False,
+    # parked r17 (driver-green r16): BPE via llm_bpe_encode (IN); the
+    # merge loop is pinned in test_bpe.py.
+    driver_visible=False,
 )
 def llm_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The complete BPE training loop (operators/vocab.bpe_merges): 8

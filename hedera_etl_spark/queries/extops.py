@@ -123,7 +123,10 @@ def q17_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, session_start
     """,
     tags=("window-agg", "session", "streaming"),
-    # rotated back IN r14 (VERDICT r13 #1 — r10-stale cohort).
+    # parked r17 (driver-green r16): event-time window aggregation via
+    # q16_window_tumbling (IN) and the windowed stats of
+    # hed_stream_ingest (IN).
+    driver_visible=False,
 )
 def q18_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-minute inactivity gap) via F.session_window —
@@ -204,7 +207,9 @@ def q19_cube_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY k_mod ORDER BY k_mod
     """,
     tags=("json", "map", "scalar"),
-    # rotated back IN r15 (VERDICT r14 #1 — r11-stale cohort).
+    # parked r17 (driver-green r16): JSON parsing via hed_tx_transform
+    # (IN); scalar surface via q13_scalar_functions (IN).
+    driver_visible=False,
 )
 def q21_json_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON + map function surface (SURVEY §2.6): parse the props JSON
@@ -299,7 +304,9 @@ def q23_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY src, key
     """,
     tags=("subquery", "correlated"),
-    # rotated back IN r15 (VERDICT r14 #1 — r11-stale cohort).
+    # parked r17 (driver-green r16): decorrelated semi/anti join +
+    # aggregate shapes via q06_semi_anti_join + q05_dim_join_agg (IN).
+    driver_visible=False,
 )
 def q24_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery (Catalyst plans it as a one-row

@@ -82,7 +82,9 @@ def mm_payload_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id, frame_idx
     """,
     tags=("mm", "video", "explode"),
-    # rotated back IN r15 (VERDICT r14 #1 — r11-stale cohort).
+    # parked r17 (driver-green r16): explode fan-out via
+    # q14_explode_tokens (IN) + hed_tx_explode_transfers (IN).
+    driver_visible=False,
 )
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling fan-out: explode over a computed per-row index
@@ -235,14 +237,10 @@ _PHASH_ORACLE = f"""
     "mm_phash_neardup",
     _PHASH_ORACLE,
     tags=("mm", "dedup", "phash", "image"),
-    # parked in r14 (driver-green r13; slot ceded to the r9/r10-stale
-    # rotation cohort): the Arrow mapInPandas decode path stays
-    # window-checked via mm_payload_decode (r17); banded-hash near-dup via
-    # llm_simhash_neardup (same band→equi-join→hamming-verify shape).
+    # back IN r17 (driver-green r13, parked r14-r16).
     # the fingerprint pass feeds bucket collection twice under AQE
     # re-use; keep plans fresh like the other pair detectors
     cache_plan=False,
-    driver_visible=False,
 )
 def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image near-dup (operators/multimodal.phash_neardups):

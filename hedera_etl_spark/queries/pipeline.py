@@ -223,38 +223,43 @@ def hed_dedupe_job(spark: SparkSession, sf_dir: str) -> DataFrame:
     AbstractDeduplication.java:104-107), then the full-history safety-net
     run, and hash the final table.  Exercises the state KV upsert (J2),
     window advance (ST4) and the partition-range rewrite via
-    temp-path-swap (J1)."""
+    temp-path-swap (J1).  The one-row result is collected before the
+    work dir is removed, so the call leaves no table behind."""
     import os
+    import shutil
 
     from hedera_etl_spark.operators.dedupe import DedupeJob, StateStore
 
     workdir = tempfile.mkdtemp(prefix="hed_dedupe_job_")
-    table_path = os.path.join(workdir, "tx")
-    tx_dups_table(spark, sf_dir).write.partitionBy("part_date").parquet(table_path)
+    try:
+        table_path = os.path.join(workdir, "tx")
+        tx_dups_table(spark, sf_dir).write.partitionBy("part_date").parquet(table_path)
 
-    job = DedupeJob(
-        spark,
-        table_path,
-        StateStore(spark, os.path.join(workdir, "state")),
-        key="consensus_timestamp",
-        tiebreak=["ingest_seq", "event_id"],
-    )
-    first = job.run_incremental()
-    if first.duplicates_removed == 0:
-        raise RuntimeError("generator must produce duplicates")
-    second = job.run_incremental()
-    if second.duplicates_removed != 0:
-        raise RuntimeError("second incremental must be a no-op")
-    job.run_full()
+        job = DedupeJob(
+            spark,
+            table_path,
+            StateStore(spark, os.path.join(workdir, "state")),
+            key="consensus_timestamp",
+            tiebreak=["ingest_seq", "event_id"],
+        )
+        first = job.run_incremental()
+        if first.duplicates_removed == 0:
+            raise RuntimeError("generator must produce duplicates")
+        second = job.run_incremental()
+        if second.duplicates_removed != 0:
+            raise RuntimeError("second incremental must be a no-op")
+        job.run_full()
 
-    final = spark.read.parquet(table_path)
-    return final.agg(
-        F.count("*").alias("n_rows"),
-        F.countDistinct("consensus_timestamp").alias("n_keys"),
-        F.sum("ingest_seq").alias("replay_rows_kept"),
-        F.sum("event_id").alias("id_sum"),
-        F.max("ts_sec").alias("max_ts_sec"),
-    )
+        final = spark.read.parquet(table_path).agg(
+            F.count("*").alias("n_rows"),
+            F.countDistinct("consensus_timestamp").alias("n_keys"),
+            F.sum("ingest_seq").alias("replay_rows_kept"),
+            F.sum("event_id").alias("id_sum"),
+            F.max("ts_sec").alias("max_ts_sec"),
+        )
+        return spark.createDataFrame(final.collect(), final.schema)
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -635,11 +635,7 @@ _PQ_ORACLE = f"""
     _PQ_ORACLE,
     tags=("sim", "ann", "pq", "adc"),
     bench=True,
-    # parked in r14 (driver-green r13; slot ceded to the r9/r10-stale
-    # rotation cohort): the encode-argmin + ADC-lookup kernels stay
-    # driver-checked via sim_ivfpq_topk (IN), which composes them with
-    # IVF routing; trained-codebook path stays pytest-pinned.
-    driver_visible=False,
+    # back IN r17 (driver-green r13, parked r14-r16).
 )
 def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-k (operators/pquant.py): encode the

@@ -460,6 +460,10 @@ _CONTAIN_ORACLE = f"""
     # exchange.  Hash-checks the CONTAINMENT relation — the
     # asymmetric-size duplication class Jaccard cannot express.
     cache_plan=False,
+    # parked r17 (driver-green r16): pair detection via
+    # llm_similarity_histogram (IN, exact-Jaccard pairs) +
+    # llm_dup_clusters (IN).
+    driver_visible=False,
 )
 def llm_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment near-dups (operators/textdedup.containment_neardups):
@@ -521,12 +525,8 @@ _SIM_HIST_ORACLE = f"""
     "llm_similarity_histogram",
     _SIM_HIST_ORACLE,
     tags=("llm", "dedup", "jaccard", "report"),
-    # parked in r14 (driver-green r13; slot ceded to the r9/r10-stale
-    # rotation cohort): the exact-Jaccard pair pipeline it reports over
-    # stays window-checked via llm_dup_clusters (its ngram_jaccard pairs,
-    # r17) + llm_containment_pairs.
+    # back IN r17 (driver-green r13, parked r14-r16).
     cache_plan=False,
-    driver_visible=False,
 )
 def llm_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup threshold-sweep report (operators/textdedup.py
@@ -682,6 +682,9 @@ def llm_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("llm", "textstats", "quality", "fingerprint"),
     bench=True,
+    # parked r17 (driver-green r16): per-row text features via
+    # llm_token_entropy + llm_gopher_flags (IN).
+    driver_visible=False,
 )
 def llm_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc text profile: token counting (whitespace tokens, BPE-ish
@@ -739,7 +742,10 @@ _FP_SCALABLE_ORACLE = """
     "llm_char_fingerprint_scalable",
     _FP_SCALABLE_ORACLE,
     tags=("llm", "fingerprint", "scale-path"),
-    # rotated IN r15 (VERDICT r14 #1 — NEW r14, first driver check).
+    # parked r17 (driver-green r16): shingle-hash fingerprints via
+    # llm_winnow_fp (IN); explode + two-level aggregate via
+    # q14_explode_tokens (IN).
+    driver_visible=False,
 )
 def llm_char_fingerprint_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style min-md5 5-gram document fingerprint, explode +
@@ -788,7 +794,9 @@ _LANG_ORACLE = f"""
     "llm_language_id",
     _LANG_ORACLE,
     tags=("llm", "langid"),
-    # rotated back IN r15 (VERDICT r14 #1 — r11-stale cohort).
+    # parked r17 (driver-green r16): per-row rule scoring over token
+    # ratios via llm_gopher_flags + llm_token_entropy (IN).
+    driver_visible=False,
 )
 def llm_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID via per-language stopword-ratio scores + deterministic
@@ -1004,15 +1012,10 @@ _BLOOM_DECON_ORACLE = f"""
     "llm_bloom_decontam",
     _BLOOM_DECON_ORACLE,
     tags=("llm", "decontamination", "bloom", "scale-path"),
-    # parked in r14 (driver-green r13; slot ceded to the r9/r10-stale
-    # rotation cohort): the word-5-gram eval-dimension probe stays
-    # window-checked via llm_fuzzy_decontam (r17); decisions equal to the
-    # exact operator and the Bloom prefilter's zero-false-negative
-    # property are pinned in test_decontam.py.
+    # back IN r17 (driver-green r13, parked r14-r16).
     # the reference shingle dimension carries a localCheckpoint (two
     # consumers: bloom build + exact verify) — cache opt-out as usual
     cache_plan=False,
-    driver_visible=False,
 )
 def llm_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prefiltered decontamination (operators/decontam.py
@@ -1882,11 +1885,7 @@ _ENTROPY_ORACLE = """
     _ENTROPY_ORACLE,
     tags=("llm", "quality", "entropy"),
     bench=True,
-    # parked in r14 (driver-green r13; slot ceded to the r9/r10-stale
-    # rotation cohort): per-row quality projections stay driver-checked
-    # via llm_text_stats + llm_profile; in-row == scalable-form
-    # equality stays pinned in test_textanalysis.py.
-    driver_visible=False,
+    # back IN r17 (driver-green r13, parked r14-r16).
 )
 def llm_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-distribution Shannon entropy per document
@@ -1986,10 +1985,7 @@ _GOPHER_ORACLE = f"""
     "llm_gopher_flags",
     _GOPHER_ORACLE,
     tags=("llm", "quality", "gopher"),
-    # parked in r14 (driver-green r13; slot ceded to the r9/r10-stale
-    # rotation cohort): the zero-shuffle per-row rule-battery family
-    # stays driver-checked via llm_text_stats + llm_profile.
-    driver_visible=False,
+    # back IN r17 (driver-green r13, parked r14-r16).
 )
 def llm_gopher_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The rest of the Gopher quality battery
@@ -2063,6 +2059,10 @@ _QCLF_ORACLE = """
     # never-checked entries — tools/ledger.py): llm_simhash_fp ceded
     # the slot, so the classifier gets its first driver hash-check in
     # CORRECTNESS_r15.
+    # parked r17 (driver-green r16): broadcast model-table scoring via
+    # llm_lm_perplexity (IN); the classifier is pinned in
+    # test_qualityclf.py.
+    driver_visible=False,
 )
 def llm_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style model-based quality scoring

@@ -26,12 +26,46 @@ Scale notes (the same code must hold on a 1000-executor cluster at ~100 TB):
   (reference: hedera-etl-bigquery/src/main/resources/transactions-schema.json:7-10)
   and the microsecond TIMESTAMP derivation
   (reference: TransactionJsonToTableRow.java:57-58).
+
+Local ``file:`` I/O without child processes.  Without native ``libhadoop``
+(``NativeIO.isAvailable()`` false, as in a pip-installed pyspark), Hadoop's
+``RawLocalFileSystem`` forks ``chmod`` for every file and directory it
+creates and ``readlink`` twice per ``FileContext`` rename: about 2,200
+child processes in one traced ``perfbench`` ``hedera_two_tier`` run, and
+about 50 ms of each streaming trigger's offset-log and commit-log writes
+(docs/PERF_NOTES.md).
+``jvm/NioLocalFileSystem.java`` replaces those two calls with their
+java.nio equivalents (``Files.setPosixFilePermissions`` with the same nine
+mode bits; ``Files.isSymbolicLink`` before the link lookup) and falls back
+to Hadoop's own code for anything else: special mode bits, a non-POSIX
+store, a real or dangling symlink.  Everything else is Hadoop's:
+``ChecksumFileSystem`` / ``ChecksumFs`` keep the ``.crc`` sidecars and
+read-side verification, and file modes and layout are unchanged.
+
+- ``get_spark`` compiles the source once per source hash and Spark version
+  into ``fsutil.secure_cache_root("jvm")`` and puts the jar on
+  ``spark.driver.extraClassPath``; ``spark.hadoop.fs.file.impl`` and
+  ``spark.hadoop.fs.AbstractFileSystem.file.impl`` then name its
+  ``FileSystem`` and its ``FileContext`` twin (the one Spark's streaming
+  checkpoint writes through).
+- It names the classes only in a JVM that can load them: one it launches
+  with the jar, or a running one that already has the class.  Without
+  ``javac`` on ``PATH`` it warns once and keeps Hadoop's filesystem.
+- Local ``file:`` paths only: object stores, ``configure_session`` (the
+  driver's own session) and the pyarrow paths are untouched.
+- Stock pyspark resolves ``file:`` through ``ServiceLoader`` to hive-exec's
+  ``org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem``, a
+  ``FilterFileSystem`` over ``LocalFileSystem`` that Hive uses to serve
+  ``pfile:`` test URIs; the replacement is a plain ``LocalFileSystem``
+  subclass.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 #: Runtime-settable confs the engine relies on.  Applied both when we build
@@ -60,7 +94,7 @@ RUNTIME_CONFS = {
 }
 
 
-_CONFIGURED: "weakref.WeakSet[SparkSession]" = None  # type: ignore[assignment]
+_CONFIGURED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
@@ -70,11 +104,6 @@ def configure_session(spark: SparkSession) -> SparkSession:
     re-setting 7 confs is ~10 ms of py4j per call — measurable when a
     query touches several tables (driver-cost note in transform.py).
     """
-    global _CONFIGURED
-    if _CONFIGURED is None:
-        import weakref
-
-        _CONFIGURED = weakref.WeakSet()
     if spark in _CONFIGURED:
         return spark
     skipped = []
@@ -95,6 +124,96 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: Hadoop's local filesystem with java.nio in place of its shell-outs
+#: (module docstring); the source compiles into a per-user cached jar.
+_LOCALFS_SRC = os.path.join(os.path.dirname(__file__), "jvm", "NioLocalFileSystem.java")
+LOCALFS_CONFS = {
+    "spark.hadoop.fs.file.impl": "hedera_etl_spark.jvm.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "hedera_etl_spark.jvm.NioLocalFs",
+}
+#: "jar" -> the built jar, or None once a build could not run
+_LOCALFS_JAR: dict = {}
+#: py4j gateway -> whether its JVM loads the filesystem classes
+_JVM_HAS_LOCALFS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _build_localfs_jar() -> str | None:
+    """Compile ``_LOCALFS_SRC`` into the jar cache, or return the jar
+    already built for this source and Spark version.  Built under
+    ``fsutil.dir_lock`` and moved into place by one rename, so a reader
+    never sees a partial jar.  None (with one warning) when ``javac`` is
+    not on ``PATH`` or the build fails."""
+    import hashlib
+    import shutil
+    import subprocess
+    import tempfile
+    import warnings
+    import zipfile
+
+    import pyspark
+    from pyspark.find_spark_home import _find_spark_home
+
+    from hedera_etl_spark import fsutil
+
+    with open(_LOCALFS_SRC, "rb") as fh:
+        key = hashlib.sha256(fh.read() + pyspark.__version__.encode()).hexdigest()
+    root = fsutil.secure_cache_root("jvm")
+    jar = os.path.join(root, f"nio-localfs-{key[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    javac = shutil.which("javac")
+    if javac is None:
+        warnings.warn("get_spark: no javac on PATH; Spark keeps Hadoop's local "
+                      "filesystem, which forks chmod for every file it writes")
+        return None
+    with fsutil.dir_lock(jar):
+        if os.path.exists(jar):
+            return jar
+        with tempfile.TemporaryDirectory(dir=root) as tmp:
+            classes = os.path.join(tmp, "classes")
+            cp = os.path.join(_find_spark_home(), "jars", "*")
+            cmd = [javac, "--release", "17", "-nowarn", "-cp", cp, "-d", classes, _LOCALFS_SRC]
+            done = subprocess.run(cmd, capture_output=True, text=True)
+            if done.returncode:
+                warnings.warn(f"get_spark: javac failed; Spark keeps Hadoop's local "
+                              f"filesystem:\n{done.stderr.strip()}")
+                return None
+            staged = os.path.join(tmp, "localfs.jar")
+            with zipfile.ZipFile(staged, "w", zipfile.ZIP_DEFLATED) as zf:
+                for dirpath, _, files in os.walk(classes):
+                    for name in files:
+                        full = os.path.join(dirpath, name)
+                        zf.write(full, os.path.relpath(full, classes))
+            os.replace(staged, jar)
+    return jar
+
+
+def _localfs_confs(extra_class_path: str | None) -> dict:
+    """The confs that switch a new session's ``file:`` filesystem to the
+    java.nio one, or {} where the JVM could not load it.  A JVM that is
+    already running keeps its classpath: it gets the class names only if
+    it has the class (memoized per gateway).  Otherwise the jar joins the
+    caller's ``spark.driver.extraClassPath``."""
+    gateway = SparkContext._gateway
+    if gateway is not None:
+        if gateway not in _JVM_HAS_LOCALFS:
+            try:
+                gateway.jvm.java.lang.Class.forName(LOCALFS_CONFS["spark.hadoop.fs.file.impl"])
+                _JVM_HAS_LOCALFS[gateway] = True
+            except Exception:  # Py4JJavaError: ClassNotFoundException
+                _JVM_HAS_LOCALFS[gateway] = False
+        return dict(LOCALFS_CONFS) if _JVM_HAS_LOCALFS[gateway] else {}
+    if "PYSPARK_GATEWAY_PORT" in os.environ:  # spark-submit's JVM, not ours
+        return {}
+    jar = _LOCALFS_JAR.get("jar")
+    if "jar" not in _LOCALFS_JAR or (jar is not None and not os.path.exists(jar)):
+        jar = _LOCALFS_JAR["jar"] = _build_localfs_jar()
+    if jar is None:
+        return {}
+    cp = f"{extra_class_path}{os.pathsep}{jar}" if extra_class_path else jar
+    return {"spark.driver.extraClassPath": cp, **LOCALFS_CONFS}
+
+
 def get_spark(
     app_name: str = "hedera-etl-spark",
     cpus: int | None = None,
@@ -104,7 +223,9 @@ def get_spark(
     """Build a local SparkSession with scale-aware defaults.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. Shuffle partitions
-    default to the core count (AQE coalesces further at runtime).
+    default to the core count (AQE coalesces further at runtime). Local
+    ``file:`` I/O goes through the java.nio filesystem wherever the JVM
+    can load it (module docstring).
     """
     if cpus is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -133,9 +254,15 @@ def get_spark(
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
-    for key, value in (extra_confs or {}).items():
+    confs = dict(extra_confs or {})
+    launching = SparkContext._gateway is None
+    localfs = _localfs_confs(confs.get("spark.driver.extraClassPath"))
+    confs.update(localfs)
+    for key, value in confs.items():
         builder = builder.config(key, value)
 
     spark = builder.getOrCreate()
+    if launching and SparkContext._gateway is not None:
+        _JVM_HAS_LOCALFS[SparkContext._gateway] = bool(localfs)
     spark.sparkContext.setLogLevel("WARN")
     return configure_session(spark)
