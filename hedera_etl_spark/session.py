@@ -141,8 +141,9 @@ def _build_localfs_jar() -> str | None:
     """Compile ``_LOCALFS_SRC`` into the jar cache, or return the jar
     already built for this source and Spark version.  Built under
     ``fsutil.dir_lock`` and moved into place by one rename, so a reader
-    never sees a partial jar.  None (with one warning) when ``javac`` is
-    not on ``PATH`` or the build fails."""
+    never sees a partial jar.  None, with one warning, when the jar cannot
+    be had: no ``javac`` on ``PATH``, a failed compile, or no usable cache
+    directory."""
     import hashlib
     import shutil
     import subprocess
@@ -157,35 +158,36 @@ def _build_localfs_jar() -> str | None:
 
     with open(_LOCALFS_SRC, "rb") as fh:
         key = hashlib.sha256(fh.read() + pyspark.__version__.encode()).hexdigest()
-    root = fsutil.secure_cache_root("jvm")
-    jar = os.path.join(root, f"nio-localfs-{key[:16]}.jar")
-    if os.path.exists(jar):
-        return jar
-    javac = shutil.which("javac")
-    if javac is None:
-        warnings.warn("get_spark: no javac on PATH; Spark keeps Hadoop's local "
-                      "filesystem, which forks chmod for every file it writes")
-        return None
-    with fsutil.dir_lock(jar):
+    try:
+        root = fsutil.secure_cache_root("jvm")
+        jar = os.path.join(root, f"nio-localfs-{key[:16]}.jar")
         if os.path.exists(jar):
             return jar
-        with tempfile.TemporaryDirectory(dir=root) as tmp:
-            classes = os.path.join(tmp, "classes")
-            cp = os.path.join(_find_spark_home(), "jars", "*")
-            cmd = [javac, "--release", "17", "-nowarn", "-cp", cp, "-d", classes, _LOCALFS_SRC]
-            done = subprocess.run(cmd, capture_output=True, text=True)
-            if done.returncode:
-                warnings.warn(f"get_spark: javac failed; Spark keeps Hadoop's local "
-                              f"filesystem:\n{done.stderr.strip()}")
-                return None
-            staged = os.path.join(tmp, "localfs.jar")
-            with zipfile.ZipFile(staged, "w", zipfile.ZIP_DEFLATED) as zf:
-                for dirpath, _, files in os.walk(classes):
-                    for name in files:
-                        full = os.path.join(dirpath, name)
-                        zf.write(full, os.path.relpath(full, classes))
-            os.replace(staged, jar)
-    return jar
+        javac = shutil.which("javac")
+        if javac is None:
+            raise OSError("no javac on PATH")
+        with fsutil.dir_lock(jar):
+            if os.path.exists(jar):
+                return jar
+            with tempfile.TemporaryDirectory(dir=root) as tmp:
+                classes = os.path.join(tmp, "classes")
+                cp = os.path.join(_find_spark_home(), "jars", "*")
+                cmd = [javac, "--release", "17", "-nowarn", "-cp", cp, "-d", classes, _LOCALFS_SRC]
+                done = subprocess.run(cmd, capture_output=True, text=True)
+                if done.returncode:
+                    raise OSError(f"javac failed:\n{done.stderr.strip()}")
+                staged = os.path.join(tmp, "localfs.jar")
+                with zipfile.ZipFile(staged, "w", zipfile.ZIP_DEFLATED) as zf:
+                    for dirpath, _, files in os.walk(classes):
+                        for name in files:
+                            full = os.path.join(dirpath, name)
+                            zf.write(full, os.path.relpath(full, classes))
+                os.replace(staged, jar)
+        return jar
+    except (OSError, RuntimeError) as exc:  # RuntimeError: cache dir not trusted
+        warnings.warn(f"get_spark: {exc}; Spark keeps Hadoop's local filesystem, "
+                      "which forks chmod for every file it writes")
+        return None
 
 
 def _localfs_confs(extra_class_path: str | None) -> dict:

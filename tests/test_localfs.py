@@ -71,9 +71,12 @@ def test_session_resolves_file_scheme_to_nio_classes(spark):
 def test_local_writes_and_checkpoint_reap_no_child(spark, tmp_path):
     """A 30-partition parquet write and one checkpointed micro-batch
     (offsets WAL, commit log, sink metadata: FileContext renames) start
-    no child process.  Hadoop's stock filesystem reaps one ``chmod`` per
-    file and directory here, so its cutime moves (by 2.6 s of child CPU
-    in one run on a loaded 4-core box)."""
+    no child process per file.  Hadoop's stock filesystem reaps one
+    ``chmod`` per file and directory here, so its cutime moves by about
+    250 ticks (2.6 s of child CPU in one run on a loaded 4-core box).
+    The allowance covers the few children the JVM still starts on its
+    own schedule (one-off ``setsid`` / ``getconf`` probes, Spark's
+    ``rm -rf`` of temp dirs), a few ms of CPU each."""
     jvm, _ = _hadoop(spark)
     pid = int(jvm.java.lang.ProcessHandle.current().pid())
     # warm-up: one-off JVM work (class loading, Hadoop Shell probes)
@@ -83,7 +86,7 @@ def test_local_writes_and_checkpoint_reap_no_child(spark, tmp_path):
     before = _child_cpu_ticks(pid)
     _partitioned_write(spark, str(tmp_path / "t"))
     _one_streamed_batch(spark, tmp_path / "stream")
-    assert _child_cpu_ticks(pid) == before
+    assert _child_cpu_ticks(pid) - before <= 5
     assert len(list((tmp_path / "t").glob("p=*"))) == 30
     assert spark.read.parquet(str(tmp_path / "stream" / "out")).count() == 4
 
@@ -186,6 +189,15 @@ def test_launch_merges_the_jar_into_the_callers_classpath(monkeypatch):
     # a JVM that spark-submit started is not ours to configure
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
     assert S._localfs_confs(None) == {}
+
+
+def test_untrusted_jar_cache_falls_back_with_a_warning(tmp_path, monkeypatch):
+    shared = tmp_path / "shared"
+    (shared / "hedera_etl_spark").mkdir(parents=True)
+    (shared / "hedera_etl_spark").chmod(0o777)  # group/other-writable
+    monkeypatch.setenv("XDG_CACHE_HOME", str(shared))
+    with pytest.warns(UserWarning, match="local filesystem"):
+        assert S._build_localfs_jar() is None
 
 
 def test_get_spark_without_javac_keeps_stock_fs(tmp_path):
