@@ -400,7 +400,7 @@ def q07(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("join", "theta"),
     bench=True,
-    # back IN r17 (driver-green r13, parked r14-r16).
+    # back IN r17 (green r13, parked r14-r16).
 )
 def q08a(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi key + range residual: the equi part drives the shuffle/join
@@ -496,7 +496,7 @@ def q08c(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("window", "rank"),
     bench=True,
-    # back IN r17 (driver-green r13, parked r14-r16).
+    # back IN r17 (green r13, parked r14-r16).
 )
 def q09(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-N per group via ranking window — one shuffle on the partition key,
@@ -797,7 +797,7 @@ def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("explode", "aggregate"),
     bench=True,
-    # back IN r17 (driver-green r13, parked r14-r16).
+    # back IN r17 (green r13, parked r14-r16).
 )
 def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """explode() over an array column — the load-bearing repeated-record
@@ -845,7 +845,7 @@ def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("window-agg", "streaming"),
     bench=True,
-    # back IN r17 (driver-green r13, parked r14-r16).
+    # back IN r17 (green r13, parked r14-r16).
 )
 def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling + hopping event-time windows via F.window, tagged union —

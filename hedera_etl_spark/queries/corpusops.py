@@ -513,7 +513,7 @@ def _bpe_encode_oracle(k: int) -> str:
     tags=("llm", "vocab", "tokenizer", "bpe", "iterative"),
     # iterative: per-round localCheckpoints during construction
     cache_plan=False,
-    # parked r17 (driver-green r16): BPE via llm_bpe_encode (IN); the
+    # parked r17 (green r16): BPE via llm_bpe_encode (IN); the
     # merge loop is pinned in test_bpe.py.
     driver_visible=False,
 )

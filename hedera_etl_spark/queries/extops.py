@@ -123,7 +123,7 @@ def q17_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, session_start
     """,
     tags=("window-agg", "session", "streaming"),
-    # parked r17 (driver-green r16): event-time window aggregation via
+    # parked r17 (green r16): event-time window aggregation via
     # q16_window_tumbling (IN) and the windowed stats of
     # hed_stream_ingest (IN).
     driver_visible=False,
@@ -207,7 +207,7 @@ def q19_cube_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY k_mod ORDER BY k_mod
     """,
     tags=("json", "map", "scalar"),
-    # parked r17 (driver-green r16): JSON parsing via hed_tx_transform
+    # parked r17 (green r16): JSON parsing via hed_tx_transform
     # (IN); scalar surface via q13_scalar_functions (IN).
     driver_visible=False,
 )
@@ -304,7 +304,7 @@ def q23_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY src, key
     """,
     tags=("subquery", "correlated"),
-    # parked r17 (driver-green r16): decorrelated semi/anti join +
+    # parked r17 (green r16): decorrelated semi/anti join +
     # aggregate shapes via q06_semi_anti_join + q05_dim_join_agg (IN).
     driver_visible=False,
 )

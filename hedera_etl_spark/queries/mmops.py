@@ -82,7 +82,7 @@ def mm_payload_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id, frame_idx
     """,
     tags=("mm", "video", "explode"),
-    # parked r17 (driver-green r16): explode fan-out via
+    # parked r17 (green r16): explode fan-out via
     # q14_explode_tokens (IN) + hed_tx_explode_transfers (IN).
     driver_visible=False,
 )
@@ -237,7 +237,7 @@ _PHASH_ORACLE = f"""
     "mm_phash_neardup",
     _PHASH_ORACLE,
     tags=("mm", "dedup", "phash", "image"),
-    # back IN r17 (driver-green r13, parked r14-r16).
+    # back IN r17 (green r13, parked r14-r16).
     # the fingerprint pass feeds bucket collection twice under AQE
     # re-use; keep plans fresh like the other pair detectors
     cache_plan=False,

@@ -635,7 +635,7 @@ _PQ_ORACLE = f"""
     _PQ_ORACLE,
     tags=("sim", "ann", "pq", "adc"),
     bench=True,
-    # back IN r17 (driver-green r13, parked r14-r16).
+    # back IN r17 (green r13, parked r14-r16).
 )
 def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-k (operators/pquant.py): encode the

@@ -460,7 +460,7 @@ _CONTAIN_ORACLE = f"""
     # exchange.  Hash-checks the CONTAINMENT relation — the
     # asymmetric-size duplication class Jaccard cannot express.
     cache_plan=False,
-    # parked r17 (driver-green r16): pair detection via
+    # parked r17 (green r16): pair detection via
     # llm_similarity_histogram (IN, exact-Jaccard pairs) +
     # llm_dup_clusters (IN).
     driver_visible=False,
@@ -525,7 +525,7 @@ _SIM_HIST_ORACLE = f"""
     "llm_similarity_histogram",
     _SIM_HIST_ORACLE,
     tags=("llm", "dedup", "jaccard", "report"),
-    # back IN r17 (driver-green r13, parked r14-r16).
+    # back IN r17 (green r13, parked r14-r16).
     cache_plan=False,
 )
 def llm_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -682,7 +682,7 @@ def llm_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("llm", "textstats", "quality", "fingerprint"),
     bench=True,
-    # parked r17 (driver-green r16): per-row text features via
+    # parked r17 (green r16): per-row text features via
     # llm_token_entropy + llm_gopher_flags (IN).
     driver_visible=False,
 )
@@ -742,7 +742,7 @@ _FP_SCALABLE_ORACLE = """
     "llm_char_fingerprint_scalable",
     _FP_SCALABLE_ORACLE,
     tags=("llm", "fingerprint", "scale-path"),
-    # parked r17 (driver-green r16): shingle-hash fingerprints via
+    # parked r17 (green r16): shingle-hash fingerprints via
     # llm_winnow_fp (IN); explode + two-level aggregate via
     # q14_explode_tokens (IN).
     driver_visible=False,
@@ -794,7 +794,7 @@ _LANG_ORACLE = f"""
     "llm_language_id",
     _LANG_ORACLE,
     tags=("llm", "langid"),
-    # parked r17 (driver-green r16): per-row rule scoring over token
+    # parked r17 (green r16): per-row rule scoring over token
     # ratios via llm_gopher_flags + llm_token_entropy (IN).
     driver_visible=False,
 )
@@ -1012,7 +1012,7 @@ _BLOOM_DECON_ORACLE = f"""
     "llm_bloom_decontam",
     _BLOOM_DECON_ORACLE,
     tags=("llm", "decontamination", "bloom", "scale-path"),
-    # back IN r17 (driver-green r13, parked r14-r16).
+    # back IN r17 (green r13, parked r14-r16).
     # the reference shingle dimension carries a localCheckpoint (two
     # consumers: bloom build + exact verify) — cache opt-out as usual
     cache_plan=False,
@@ -1885,7 +1885,7 @@ _ENTROPY_ORACLE = """
     _ENTROPY_ORACLE,
     tags=("llm", "quality", "entropy"),
     bench=True,
-    # back IN r17 (driver-green r13, parked r14-r16).
+    # back IN r17 (green r13, parked r14-r16).
 )
 def llm_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-distribution Shannon entropy per document
@@ -1985,7 +1985,7 @@ _GOPHER_ORACLE = f"""
     "llm_gopher_flags",
     _GOPHER_ORACLE,
     tags=("llm", "quality", "gopher"),
-    # back IN r17 (driver-green r13, parked r14-r16).
+    # back IN r17 (green r13, parked r14-r16).
 )
 def llm_gopher_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The rest of the Gopher quality battery
@@ -2059,7 +2059,7 @@ _QCLF_ORACLE = """
     # never-checked entries — tools/ledger.py): llm_simhash_fp ceded
     # the slot, so the classifier gets its first driver hash-check in
     # CORRECTNESS_r15.
-    # parked r17 (driver-green r16): broadcast model-table scoring via
+    # parked r17 (green r16): broadcast model-table scoring via
     # llm_lm_perplexity (IN); the classifier is pinned in
     # test_qualityclf.py.
     driver_visible=False,

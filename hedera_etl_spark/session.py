@@ -51,8 +51,8 @@ read-side verification, and file modes and layout are unchanged.
 - It names the classes only in a JVM that can load them: one it launches
   with the jar, or a running one that already has the class.  Without
   ``javac`` on ``PATH`` it warns once and keeps Hadoop's filesystem.
-- Local ``file:`` paths only: object stores, ``configure_session`` (the
-  driver's own session) and the pyarrow paths are untouched.
+- Local ``file:`` paths only: object stores, ``configure_session`` (a
+  session built elsewhere) and the pyarrow paths are untouched.
 - Stock pyspark resolves ``file:`` through ``ServiceLoader`` to hive-exec's
   ``org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem``, a
   ``FilterFileSystem`` over ``LocalFileSystem`` that Hive uses to serve
